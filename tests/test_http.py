@@ -119,6 +119,25 @@ def test_unknown_route_is_json_404(served):
     assert status == 404
 
 
+def test_monthly_route_sends_taxonomy_status_on_missing_warehouse(spark, tmp_path):
+    """An error envelope goes out with its taxonomy status as the HTTP
+    status: a missing warehouse is a 503, not a 200 with an error body."""
+    from weather_database_system_spark.pipeline.httpserver import make_server
+
+    httpd = make_server(spark, str(tmp_path / "dw"), str(tmp_path / "cache"))
+    thread = threading.Thread(target=httpd.serve_forever, daemon=True)
+    thread.start()
+    host, port = httpd.server_address
+    try:
+        status, doc = _get(f"http://{host}:{port}/api/monthly?city=Stockton")
+        assert status == 503
+        assert doc["status"] == "503" and "run the ETL" in doc["remediation"]
+        assert doc["data"] == [] and doc["count"] == 0
+    finally:
+        httpd.shutdown()
+        thread.join(timeout=5)
+
+
 def test_handler_error_becomes_json_500(spark, tmp_path):
     """A route body that raises must surface as the JSON 500 envelope
     (server.js:54-58), not a hung socket. The envelope functions are all

@@ -550,3 +550,216 @@ def test_compact_partitioned_collapses_small_files_and_preserves_rows(
         max_records_per_file=100,
     )
     assert audit2["files_after"] == 2 * -(-288 // 100)  # ceil(288/100)=3 each
+
+
+# ---------------------------------------------------------------------------
+# Product write/read path: Spark jobs per call, atomic snapshots, and the
+# shared session left as it was found.
+# ---------------------------------------------------------------------------
+
+
+def _count_jobs(spark, fn):
+    """Run ``fn`` under a fresh Spark job group; return ``(result, number
+    of Spark jobs it started)``."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"test-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    # job events reach the status store asynchronously: drain the bus first
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_product_path_job_counts(spark, zones, tmp_path):
+    """One job per zone write for a single payload (no row counts, no
+    Python worker), one job per snapshot refresh and per serving fallback
+    (declared gold schema, no distributed sort), none for a cache hit."""
+    from weather_database_system_spark.pipeline.cache import refresh_cache
+    from weather_database_system_spark.pipeline.ingest import ingest_payload
+    from weather_database_system_spark.pipeline.serving import serve_monthly
+
+    p = make_payload(1, n_days=2)
+    bronze, silver, croot = (str(tmp_path / z) for z in ("bronze", "silver", "cache"))
+
+    def ingest():
+        return ingest_payload(spark, p, city=p["_city"], state=p["_state"],
+                              bronze_path=bronze, silver_path=silver, fetched_at=NOW)
+
+    _, jobs = _count_jobs(spark, ingest)  # first write creates the zones
+    assert jobs == 2
+    _, jobs = _count_jobs(spark, ingest)  # appends to existing zones
+    assert jobs == 2
+    assert spark.read.parquet(silver).count() == 2 * 2 * 24
+
+    env, jobs = _count_jobs(
+        spark, lambda: refresh_cache(spark, zones["warehouse"], croot, "Stockton", now=NOW)
+    )
+    assert jobs == 1
+    assert [r["month"] for r in env["data"]] == ["2024-01-01", "2024-02-01", "2024-03-01"]
+
+    resp, jobs = _count_jobs(
+        spark,
+        lambda: serve_monthly(spark, zones["warehouse"], croot, "Fresno", now=NOW),
+    )
+    assert jobs == 1
+    assert resp["cache_status"] == "miss"
+    assert [r["month"] for r in resp["data"]] == ["2024-01-01", "2024-02-01", "2024-03-01"]
+
+    resp, jobs = _count_jobs(
+        spark,
+        lambda: serve_monthly(spark, zones["warehouse"], croot, "Stockton", now=NOW),
+    )
+    assert jobs == 0 and resp["cache_status"] == "hit"
+
+
+def test_arrow_bronze_frame_matches_row_built_frame(spark):
+    """The Arrow-built one-row bronze frame carries the same row as the
+    frame ``createDataFrame([Row], BRONZE_SCHEMA)`` builds — ``fetched_at``
+    included — and pivots to the same silver rows, column order and null
+    measures included."""
+    from pyspark.sql import Row
+
+    from weather_database_system_spark.pipeline.ingest import (
+        bronze_from_payload,
+        bronze_to_observations,
+        enrich,
+    )
+    from weather_database_system_spark.pipeline.schemas import BRONZE_SCHEMA, HOURLY_VARS
+
+    p = make_payload(2, n_days=3)
+    h = p["hourly"]
+    for v in HOURLY_VARS:  # every measure null in some hour
+        h[v][5 + HOURLY_VARS.index(v)] = None
+    h["temperature_2m"][0] = None
+    fetched_at = dt.datetime(2024, 4, 1, 12, 34, 56, 789000)
+
+    row_built = spark.createDataFrame(
+        [
+            Row(
+                fetched_at=fetched_at,
+                latitude=float(p["latitude"]),
+                longitude=float(p["longitude"]),
+                timezone=p["timezone"],
+                hourly=Row(time=list(h["time"]), **{v: list(h[v]) for v in HOURLY_VARS}),
+            )
+        ],
+        schema=BRONZE_SCHEMA,
+    )
+    arrow_built = bronze_from_payload(spark, p, fetched_at)
+    assert arrow_built.rdd.getNumPartitions() == 1
+    assert arrow_built.columns == row_built.columns
+    assert arrow_built.collect() == row_built.collect()
+    assert arrow_built.first()["fetched_at"] == fetched_at
+
+    def silver(bronze):
+        return enrich(
+            bronze_to_observations(bronze), "Reno", "NV",
+            source_timestamp="2024-04-01T12:34:56.789Z", etl_batch_id="etl-parity",
+        )
+
+    new, old = silver(arrow_built), silver(row_built)
+    assert new.columns == old.columns
+    new_rows, old_rows = new.collect(), old.collect()
+    assert new_rows == old_rows
+    assert len(new_rows) == 3 * 24
+    assert any(r["temperatureC"] is None and r["temperatureF"] is None for r in new_rows)
+    assert any(r["humidityPercent"] is None for r in new_rows)
+    assert all(r["rainfallMm"] is not None and r["windGustMps"] is not None for r in new_rows)
+
+
+def test_empty_monthly_agg_serves_a_miss_not_an_error(spark, tmp_path):
+    """An existing but empty monthly_agg directory reads as an empty table
+    under the declared schema: the fallback serves an empty miss envelope,
+    not the error taxonomy (a MISSING path stays a 503 —
+    test_serving_error_taxonomy), and diagnostics stop at the row-count
+    warning instead of raising."""
+    from weather_database_system_spark.pipeline.diagnostics import run_diagnostics
+    from weather_database_system_spark.pipeline.serving import serve_monthly
+    from weather_database_system_spark.pipeline.warehouse import monthly_path
+
+    wh = str(tmp_path / "gold")
+    os.makedirs(monthly_path(wh))
+    resp = serve_monthly(spark, wh, str(tmp_path / "cache"), "Stockton", now=NOW)
+    assert "error" not in resp and "status" not in resp
+    assert (resp["source"], resp["cache_status"], resp["count"], resp["data"]) == (
+        "warehouse", "miss", 0, [],
+    )
+    last = run_diagnostics(spark, wh)[-1]
+    assert (last["step"], last["status"]) == ("row_count", "warning")
+
+
+def test_snapshot_refresh_never_tears_concurrent_reads(spark, zones, tmp_path):
+    """A snapshot replaced while 32 threads read it: every read parses and
+    holds the full rows (the write goes to a temp file that os.replace
+    swaps in), and no temp file is left behind."""
+    import threading
+
+    from weather_database_system_spark.pipeline.cache import read_snapshot, refresh_cache
+
+    croot = str(tmp_path / "cache")
+    months = ["2024-01-01", "2024-02-01", "2024-03-01"]
+    refresh_cache(spark, zones["warehouse"], croot, "Stockton", now=NOW)
+
+    done = threading.Event()
+    reads, bad = [0] * 32, []
+
+    def reader(i):
+        while not done.is_set():
+            env = read_snapshot(croot, "Stockton")
+            reads[i] += 1
+            if env is None or [r["month"] for r in env["data"]] != months:
+                bad.append(env)
+
+    threads = [threading.Thread(target=reader, args=(i,)) for i in range(32)]
+    for t in threads:
+        t.start()
+    try:
+        for k in range(8):
+            refresh_cache(spark, zones["warehouse"], croot, "Stockton",
+                          now=NOW + dt.timedelta(seconds=k))
+    finally:
+        done.set()
+        for t in threads:
+            t.join(timeout=30)
+    assert all(n > 0 for n in reads)
+    assert bad == []
+    assert os.listdir(croot) == ["monthly_stockton.json"]
+
+
+def test_incremental_refresh_leaves_session_conf_alone(spark, tmp_path, monkeypatch):
+    """Dynamic partition overwrite is a per-write option: the shared
+    session's partitionOverwriteMode is never set, so a concurrent write
+    on the same session cannot pick up 'dynamic'."""
+    from weather_database_system_spark.pipeline.ingest import ingest_payload
+    from weather_database_system_spark.pipeline.warehouse import (
+        read_monthly,
+        refresh_monthly_incremental,
+        run_etl,
+    )
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    silver, wh = str(tmp_path / "silver"), str(tmp_path / "gold")
+    p = make_payload(0, n_days=40)
+    ingest_payload(spark, p, city=p["_city"], state=p["_state"],
+                   silver_path=silver, fetched_at=NOW)
+    run_etl(spark, spark.read.parquet(silver), wh, load_time=NOW)
+
+    before = spark.conf.get(key)
+    conf_sets = []
+    real_set = spark.conf.set
+    monkeypatch.setattr(
+        spark.conf, "set", lambda k, v: (conf_sets.append(k), real_set(k, v))
+    )
+    later = NOW + dt.timedelta(days=1)
+    out = refresh_monthly_incremental(spark, wh, ["2024-02-01"], load_time=later)
+    assert key not in conf_sets
+    assert spark.conf.get(key) == before
+    # the option still overwrote only February's partition
+    loads = {r["month"]: r["warehouse_load_time"] for r in out.collect()}
+    assert loads == {"2024-01-01": NOW, "2024-02-01": later}
+    assert {r["month"] for r in read_monthly(spark, wh).collect()} == set(loads)

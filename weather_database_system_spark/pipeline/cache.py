@@ -26,9 +26,10 @@ from __future__ import annotations
 import datetime as dt
 import json
 import os
+import threading
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 
 DEFAULT_TTL_SEC = 3600   # .env:10 REDIS_TTL_SEC
 TEAM = "spark"
@@ -105,8 +106,24 @@ def write_snapshot(
     ``df`` is the already-aggregated serving result (monthly grain — bounded
     rows), so the driver-side collect here is the same size as the
     reference's single Redis value, not a fact-table collect."""
+    return _write_rows(df.collect(), cache_root, city, ttl_sec=ttl_sec, team=team, now=now)
+
+
+def _write_rows(
+    collected: list[Row],
+    cache_root: str,
+    city: str,
+    *,
+    ttl_sec: int,
+    team: str = TEAM,
+    now: dt.datetime | None = None,
+) -> dict[str, Any]:
+    """The envelope of ``collected``, written atomically: the JSON goes to
+    a temp file in the cache directory and ``os.replace`` swaps it in, so a
+    concurrent reader sees the old snapshot or the new one, never a torn
+    file."""
     now = now or _utcnow()
-    rows = [r.asDict() for r in df.collect()]
+    rows = [r.asDict() for r in collected]
     for r in rows:
         for k, v in r.items():
             if isinstance(v, dt.datetime):
@@ -125,8 +142,16 @@ def write_snapshot(
         },
     }
     os.makedirs(cache_root, exist_ok=True)
-    with open(snapshot_path(cache_root, city), "w", encoding="utf-8") as f:
-        json.dump(envelope, f)
+    path = snapshot_path(cache_root, city)
+    # unique per writer thread: concurrent refreshes never share a temp file
+    tmp = f"{path}.{os.getpid()}.{threading.get_ident()}.tmp"
+    try:
+        with open(tmp, "w", encoding="utf-8") as f:
+            json.dump(envelope, f)
+        os.replace(tmp, path)
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
     return envelope
 
 
@@ -182,14 +207,16 @@ def refresh_cache(
 ) -> dict[str, Any]:
     """op #23: in-process refresh (the reference shells out to a child npm
     process — backend/routes/cache.js:71; ours is a library call): read gold,
-    filter to the city, sort, snapshot."""
+    filter to the city, snapshot. One Spark job: the city's rows (one per
+    month) are sorted after the collect, not by a distributed sort."""
     from pyspark.sql import functions as F
 
     from weather_database_system_spark.pipeline.warehouse import read_monthly
 
-    monthly = (
+    rows = (
         read_monthly(spark, warehouse_root)
         .filter(F.col("city") == city)  # op #15, engine-side not client-side
-        .orderBy("month")
+        .collect()
     )
-    return write_snapshot(monthly, cache_root, city, ttl_sec=ttl_sec, now=now)
+    rows.sort(key=lambda r: r["month"])
+    return _write_rows(rows, cache_root, city, ttl_sec=ttl_sec, now=now)

@@ -94,15 +94,14 @@ class _Handler(BaseHTTPRequestHandler):
                     },
                 )
             elif route == "/api/monthly":
-                self._send(
-                    200,
-                    serve_monthly(
-                        self.server.spark,
-                        self.server.warehouse_root,
-                        self.server.cache_root,
-                        self._city(),
-                    ),
+                env = serve_monthly(
+                    self.server.spark,
+                    self.server.warehouse_root,
+                    self.server.cache_root,
+                    self._city(),
                 )
+                # an error envelope carries its taxonomy status (503/500)
+                self._send(int(env.get("status", 200)), env)
             elif route == "/api/cache-status":
                 self._send(200, cache_status(self.server.cache_root, self._city()))
             elif route == "/api/diagnostics":

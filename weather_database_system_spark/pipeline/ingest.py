@@ -14,8 +14,12 @@ Spark-first shape: the pivot is ``arrays_zip + explode`` (not the reference's
 index-aligned JS loop), fill policy is ``coalesce``/null-propagating
 arithmetic, and the enrichment is two ``struct`` columns — all inside
 whole-stage codegen. The HTTP fetch itself is driver-side (one small payload
-per fetch); at scale, many fetch windows fan out via a DataFrame of request
-params + ``mapInPandas`` so executors fetch concurrently.
+per fetch); at scale, many fetch windows fan out through the partitioned
+``observation_feed`` DataSource so executors fetch concurrently.
+
+A single payload's one-row bronze frame is built from a pyarrow Table, so
+it lands as one JVM-side partition: its zone writes run no Python worker.
+Zone writes are plain appends — no row count, which no caller reads.
 """
 
 from __future__ import annotations
@@ -24,8 +28,9 @@ import datetime as dt
 import os
 from typing import Any
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, StructField, StructType, TimestampType
 
 from weather_database_system_spark.pipeline.schemas import (
     BRONZE_SCHEMA,
@@ -82,23 +87,48 @@ def fetch_hourly_history(
         return json.loads(resp.read().decode("utf-8"))
 
 
+def _nullable(t: DataType) -> DataType:
+    """``t`` with every field and element nullable (recursively)."""
+    if isinstance(t, StructType):
+        return StructType([StructField(f.name, _nullable(f.dataType), True) for f in t.fields])
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    return t
+
+
+# pyspark's Arrow conversion refuses to cast into non-null nested fields;
+# the zones are parquet, whose columns Spark writes nullable anyway.
+_BRONZE_ARROW_SCHEMA = _nullable(BRONZE_SCHEMA)
+
+
 def bronze_from_payload(
     spark: SparkSession, payload: dict[str, Any], fetched_at: dt.datetime
 ) -> DataFrame:
     """Payload dict → one bronze row embedding the entire API response
-    (fetchStocktonWeather.js:177-187 stores `payload: data` verbatim)."""
+    (fetchStocktonWeather.js:177-187 stores `payload: data` verbatim).
+
+    The row is shipped as a pyarrow Table: one JVM-side partition whose
+    actions need no Python worker (a list of Rows would be parallelized
+    into ``local[N]`` partitions, each pickled back through Python).
+    ``fetched_at`` goes in as epoch microseconds, converted exactly as
+    Spark converts a naive ``datetime`` in a Row."""
+    import pyarrow as pa
+
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     hourly = payload["hourly"]
-    row = Row(
-        fetched_at=fetched_at,
-        latitude=float(payload["latitude"]),
-        longitude=float(payload["longitude"]),
-        timezone=payload.get("timezone", "UTC"),
-        hourly=Row(
-            time=list(hourly["time"]),
+    row = {
+        "fetched_at": TimestampType().toInternal(fetched_at),
+        "latitude": float(payload["latitude"]),
+        "longitude": float(payload["longitude"]),
+        "timezone": payload.get("timezone", "UTC"),
+        "hourly": {
+            "time": list(hourly["time"]),
             **{v: [None if x is None else float(x) for x in hourly[v]] for v in HOURLY_VARS},
-        ),
-    )
-    return spark.createDataFrame([row], schema=BRONZE_SCHEMA)
+        },
+    }
+    table = pa.Table.from_pylist([row], schema=to_arrow_schema(_BRONZE_ARROW_SCHEMA))
+    return spark.createDataFrame(table, schema=_BRONZE_ARROW_SCHEMA)
 
 
 def bronze_to_observations(bronze: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
@@ -249,14 +279,11 @@ def enrich_stations(
     )
 
 
-def write_zone(df: DataFrame, path: str, mode: str = "append") -> int:
-    """op #7: append to a zone and report the row count written (the
-    reference reports insertedCount — fetchStocktonWeather.js:130-138).
-    The count costs one extra job; callers that don't need it pass through
-    ``df.write`` directly."""
-    n = df.count()
+def write_zone(df: DataFrame, path: str, mode: str = "append") -> None:
+    """op #7: append to a zone (fetchStocktonWeather.js:107-141). The
+    reference also reports insertedCount; no caller here reads it, and a
+    count would cost a job of its own, so none is taken."""
     df.write.mode(mode).parquet(path)
-    return n
 
 
 def register_observation_feed(spark: SparkSession) -> None:

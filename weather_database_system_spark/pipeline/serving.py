@@ -101,13 +101,13 @@ def serve_monthly(
                 "count": len(env["data"]),
             }
 
-    # Fallback: op #18 parameterized query against gold.
+    # Fallback: op #18 parameterized query against gold — one Spark job;
+    # the city's rows (one per month) are sorted after the collect.
     try:
         rows = (
             read_monthly(spark, warehouse_root)
             .filter(F.col("city") == city)
             .select(*SERVING_COLUMNS)
-            .orderBy("month")
             .collect()
         )
     except Exception as exc:  # noqa: BLE001 — taxonomy boundary
@@ -128,7 +128,7 @@ def serve_monthly(
                     sep=" ", timespec="seconds"
                 ),
             }
-            for r in rows
+            for r in sorted(rows, key=lambda r: r["month"])
         ]
     )
     return {

@@ -30,7 +30,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from weather_database_system_spark.pipeline.schemas import DAILY_COLUMNS
+from weather_database_system_spark.pipeline.schemas import (
+    DAILY_COLUMNS,
+    MONTHLY_COLUMNS,
+    MONTHLY_SCHEMA,
+)
 
 DEFAULT_AUTHOR = "weather_database_system_spark"
 SYNC_INTERVAL_DAILY_MIN = 60   # etlToClickHouse.js:120
@@ -130,12 +134,11 @@ def read_daily(spark: SparkSession, root: str) -> DataFrame:
 
 
 def read_monthly(spark: SparkSession, root: str) -> DataFrame:
-    """monthly_agg with its column contract. The physical layout carries a
-    ``month_part`` partition-directory copy of ``month``; projecting the
-    contract columns drops it (and sidesteps partition-type inference)."""
-    from weather_database_system_spark.pipeline.schemas import MONTHLY_COLUMNS
-
-    return spark.read.parquet(monthly_path(root)).select(*MONTHLY_COLUMNS)
+    """monthly_agg with its column contract. Read with the declared
+    ``MONTHLY_SCHEMA``, so no schema-inference job runs over the footers.
+    The physical layout carries a ``month_part`` partition-directory copy
+    of ``month``; projecting the contract columns drops it."""
+    return spark.read.schema(MONTHLY_SCHEMA).parquet(monthly_path(root)).select(*MONTHLY_COLUMNS)
 
 
 def _monthly_for(
@@ -221,14 +224,11 @@ def refresh_monthly_incremental(
         .select(*DAILY_COLUMNS)
     )
     monthly = _monthly_for(daily, load_time)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    try:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        monthly.write.mode("overwrite").partitionBy("month_part").parquet(
-            monthly_path(root)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    # A per-write option, not the session conf: the session is shared with
+    # concurrent readers and refreshes (the HTTP server's handler threads).
+    monthly.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+        "month_part"
+    ).parquet(monthly_path(root))
     return read_monthly(spark, root)
 
 
