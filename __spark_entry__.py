@@ -87,6 +87,10 @@ SMOKE_SF_DIR = "/root/testdata/sf0.001"
 # REMOVED from older blocks for the same reason: dedup_clusters,
 # dedup_minhash_lsh (r14), dedup_minhash_lsh_fast, jpeg_decode_features
 # (r16), quarterly_top_supplier was already absent (r18-touched).
+#
+# Post-r19 maintenance: REMOVED corpus_dedup_apply and split_by_cluster
+# (r14): dedup_clusters, which both build on, now runs star contraction
+# instead of the deleted min-label fixpoint.
 _LAST_VERIFIED = {
     # --- last green in r13 ---
     **dict.fromkeys([
@@ -113,7 +117,7 @@ _LAST_VERIFIED = {
     **dict.fromkeys([
         "agg_collect_sorted", "anomaly_mad_zscore_approx",
         "approx_distinct_users_scale", "asof_attribution_tolerance",
-        "bigram_surprisal_quality", "corpus_dedup_apply", "dedup_against_index",
+        "bigram_surprisal_quality", "dedup_against_index",
         "dedup_containment", "dedup_exact",
         "dedup_simhash", "diff_snapshots", "doc_chunk_windows",
         "domain_mixture_weights", "embedding_near_dup",
@@ -124,7 +128,7 @@ _LAST_VERIFIED = {
         "pmi_collocations", "quality_weighted_sample",
         "rollup_merge_incremental", "scd2_user_history",
         "seasonal_hourly_profile", "sequence_pack_bins",
-        "sequence_pack_bins_sharded", "shipping_priority", "split_by_cluster",
+        "sequence_pack_bins_sharded", "shipping_priority",
         "station_density_grid", "string_functions", "time_proximity_join",
         "trigram_index_search", "udf_weighted_mean_price",
         "unigram_logprob_quality", "winnow_fingerprints", "zorder_layout"

@@ -14,6 +14,7 @@ import os
 import sys
 import threading
 import urllib.request
+from urllib.parse import quote
 
 import pytest
 
@@ -117,6 +118,23 @@ def test_unknown_route_is_json_404(served):
     assert status == 404 and doc["error"] == "not found"
     status, doc = _post(served + "/api/nope")
     assert status == 404
+
+
+def test_unsafe_city_is_http_400(served):
+    """The city value becomes a snapshot file name, so a path separator or
+    an over-long name is refused at the HTTP edge on GET and POST alike;
+    names of letters, digits and the allowed punctuation still pass."""
+    for bad in ("../x", "a" * 65):
+        for status, doc in (
+            _get(f"{served}/api/monthly?city={quote(bad)}"),
+            _get(f"{served}/api/cache-status?city={quote(bad)}"),
+            _post(f"{served}/api/sync-now?city={quote(bad)}"),
+        ):
+            assert status == 400, (bad, status, doc)
+            assert doc["status"] == "400" and doc["error"] == "invalid city"
+    for good in ("a" * 64, "City07", "St. John's", "Winston-Salem"):
+        status, doc = _get(f"{served}/api/monthly?city={quote(good)}")
+        assert status == 200, (good, status, doc)
 
 
 def test_monthly_route_sends_taxonomy_status_on_missing_warehouse(spark, tmp_path):

@@ -1091,7 +1091,7 @@ def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     density diagnostic that separates tight duplicate CLIQUES (C → 1,
     safe to collapse to one exemplar) from hub-and-spoke chains (C → 0,
     where transitive merging over-collapses; cf. the chain-radius concern
-    dedup_clusters' fixpoint handles).
+    dedup_clusters' star contraction handles in O(log diameter) rounds).
 
     Distributed shape: edges come from the shared banded-LSH candidate
     stage (equi-join, never all-pairs); triangles close via the standard
@@ -1299,127 +1299,11 @@ def embedding_near_dup(
     )
 
 
-MAX_CLUSTER_ROUNDS = 20  # fixpoint safety cap; raises instead of under-merging
-
-
-def _propagate_min_labels(
-    docs: DataFrame, edges: DataFrame, *, canonical: bool = False
-) -> DataFrame:
-    """Min-label propagation to FIXPOINT over a symmetrized edge list: each
-    round joins labels across the edges, takes the per-node min, and stops
-    the first round in which NO label moved — exact connected components for
-    any chain radius (a fixed unroll under-merges chains longer than its
-    depth, silently breaking the survivorship invariant that every
-    cluster_id is a member min; VERDICT r2 'What's wrong' #2).
-
-    The loop runs on the INDUCED SUBGRAPH only: a node with no candidate
-    edge can never change label, so the per-round joins touch just the
-    edge-touched nodes — at corpus scale that is |candidates| rows per
-    round, not |corpus| (the dominant cost of iterating the full label
-    table). Untouched docs rejoin once at the end as their own singleton
-    clusters via a single anti-join — one corpus-sized pass total instead
-    of one per round.
-
-    Each round references the previous labels exactly ONCE: self-loops are
-    added to the edge set so `min over in-neighbors' labels` alone is the
-    step function (no separate least/coalesce pass re-reading the old
-    labels). That single-reference shape is load-bearing — a round that
-    reads `labels` twice doubles the LOGICAL plan tree per iteration
-    (persist caches physical results, not the analyzed plan), and Catalyst
-    re-analysis of the exponentially growing tree dominated the whole
-    operator by round 3 in profiling; referenced once, plan depth grows
-    linearly and per-round cost stays flat. The join reads the SRC label
-    and groups by DST (identical by edge symmetry), so the join lines up
-    on the persisted tables' existing hash partitioning.
-
-    Convergence probe: labels are elementwise non-increasing, so the
-    DECIMAL(38,0) label sum (exact, overflow-free at any corpus size) is
-    strictly decreasing until the fixpoint — one scalar action per round,
-    the same job that materializes the round's cache. The previous round's
-    block is released eagerly; the cap bounds runaway graphs (a 100 TB
-    corpus whose near-dup graph has diameter > 20 is a data bug, and
-    raising beats emitting clusters with no canonical row).
-
-    ``canonical=True`` declares ``edges`` an already-canonical (src < dst,
-    distinct) pair set — usually a persisted cache — and symmetrizes it
-    here as two projections off that cache instead of requiring the caller
-    to materialize the doubled union (r19, see _clusters_from_candidates)."""
-    dec_sum = F.sum(F.col("cluster_id").cast("decimal(38,0)"))
-    sym = (
-        edges.union(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        if canonical
-        else edges
-    )
-    touched = sym.select(F.col("src").alias("doc_id")).distinct()
-    eprime = track_persisted(
-        sym.union(
-            touched.select(F.col("doc_id").alias("src"), F.col("doc_id").alias("dst"))
-        ).persist()
-    )
-    labels = track_persisted(
-        touched.select("doc_id", F.col("doc_id").alias("cluster_id")).persist()
-    )
-    # The persisted block BACKING `labels` — unpersist() must be called on
-    # this exact object; calling it on a derived select() is a no-op, which
-    # would keep every round's label table cached until session teardown.
-    prev_block = labels
-    prev_sum = labels.agg(dec_sum.alias("s")).collect()[0]["s"]
-
-    def _step(lbl: DataFrame) -> DataFrame:
-        return (
-            eprime.alias("e")
-            .join(lbl.alias("l"), F.col("e.src") == F.col("l.doc_id"))
-            .groupBy(F.col("e.dst").alias("doc_id"))
-            .agg(F.min("l.cluster_id").alias("cluster_id"))
-        )
-
-    for _ in range(MAX_CLUSTER_ROUNDS):
-        # TWO propagation steps per materialization: labels are monotone
-        # non-increasing, so an unchanged sum after a double step implies
-        # neither step moved — the fixpoint test is unaffected, while the
-        # number of cache+action sync points halves (the dominant per-round
-        # cost locally is job-submission latency on tiny cached tables, and
-        # at scale each materialization is a stage barrier). Plan depth per
-        # round is 2 single-reference steps — still linear growth.
-        stepped = track_persisted(_step(_step(labels)).persist())
-        cur_sum = stepped.agg(dec_sum.alias("s")).collect()[0]["s"]
-        converged = cur_sum == prev_sum
-        prev_sum = cur_sum
-        prev_block.unpersist()
-        prev_block = stepped
-        labels = stepped
-        if converged:
-            # Anti-join against the final labels (≡ touched, but persisted
-            # with a shallower lineage) to re-attach singleton docs.
-            singles = docs.join(labels, "doc_id", "left_anti").select(
-                "doc_id", F.col("doc_id").alias("cluster_id")
-            )
-            return labels.union(singles)
-    raise RuntimeError(
-        f"dedup_clusters: min-label propagation still moving after "
-        f"{MAX_CLUSTER_ROUNDS} rounds — near-dup graph diameter exceeds the "
-        f"cap; inspect the pair graph instead of emitting under-merged "
-        f"clusters"
-    )
-
-
 LOGSTAR_MAX_ROUNDS = 30  # ≥ ~2·log2(n) for any plausible component
 
 
-def _canon_edges(df: DataFrame) -> DataFrame:
-    """Undirected edge set in canonical (a < b) form, distinct."""
-    return (
-        df.select(
-            F.least(F.col("x"), F.col("y")).alias("a"),
-            F.greatest(F.col("x"), F.col("y")).alias("b"),
-        ).distinct()
-    )
-
-
 def _logstar_components(
-    docs: DataFrame, edges: DataFrame, _rounds_out=None, *, canonical: bool = False
+    docs: DataFrame, edges: DataFrame, _rounds_out=None
 ) -> DataFrame:
     """Connected components in O(log n) rounds via alternating
     large-star / small-star (Kiveris, Lattanzi, Mirrokni, Rastogi,
@@ -1428,10 +1312,16 @@ def _logstar_components(
     node to the minimum of its neighborhood; small-star connects every
     smaller neighbor (keyed by the larger endpoint) to that side's
     minimum. Alternation converges to a forest of stars centered at each
-    component's minimum id — the same labels as min-label propagation.
+    component's minimum id, so every doc is labeled with the smallest
+    doc_id of its component.
 
-    Why this exists NEXT TO _propagate_min_labels: the fixpoint walks one
-    hop per step, so its round count is the graph DIAMETER — and the r6
+    ``edges`` is the canonical pair set: columns (src, dst) with
+    src < dst, distinct — what the banded candidate join emits. The
+    rounds run on the edge-touched nodes only; docs with no edge rejoin
+    once at the end as their own singleton clusters (one anti-join).
+
+    Why star contraction and not one-hop min-label propagation: a
+    one-hop fixpoint's round count is the graph DIAMETER, and the r6
     scale rehearsal measured candidate-graph BFS depth growing 2 → 4 → 6
     across 1×/2×/4× corpora (chance band collisions chain clusters;
     boilerplate hubs do the same on real corpora). Star contraction
@@ -1447,8 +1337,8 @@ def _logstar_components(
     times (both sym directions, the large→small chain, the stability
     probe), so persist alone is not enough — persist caches physical
     results but Catalyst re-analyzes the full LOGICAL tree, which would
-    quadruple per round (the exponential-plan failure NOTES r5 documents
-    for the fixpoint; here it OOMed the driver in 5 rounds at smoke SF).
+    quadruple per round (the exponential-plan failure NOTES r5
+    documents; here it OOMed the driver in 5 rounds at smoke SF).
     localCheckpoint truncates the plan at each round's materialization,
     so analysis cost is flat per round. (localCheckpoint stores blocks on
     executors — lost partitions cannot recompute; a long-running
@@ -1462,7 +1352,9 @@ def _logstar_components(
     large graphs. DataFrame.unpersist() can't reach localCheckpoint
     blocks (they back the internal RDD, not a cacheManager entry), so the
     ids of the freshly persisted RDDs are snapshotted around each
-    checkpoint and released by id."""
+    checkpoint and released by id. The final edge set's RDDs go to
+    session.track_persisted, like every operator intermediate the caller
+    releases after its terminal action."""
     sc = docs.sparkSession.sparkContext
 
     def _persist_ids() -> set[int]:
@@ -1480,25 +1372,20 @@ def _logstar_components(
     # materialize inside the NEXT action — the count here, the fused
     # stability probe per round — so each round costs ONE job instead of
     # three (checkpoint + count + anti-join probe; measured 61 jobs for
-    # dedup_clusters_logstar at sf0.1, job latency the dominant cost).
+    # the md5-banded clusters query at sf0.1, job latency the dominant
+    # cost).
     #
-    # canonical=True: the caller passes an already-canonical (src < dst,
-    # distinct) pair set, so round 0 skips the _canon_edges
-    # least/greatest + distinct exchange outright (r19; one full edge-set
-    # shuffle fewer per query). The localCheckpoint stays EITHER WAY: a
-    # raw cache reference would drag the whole candidate-pipeline LOGICAL
-    # tree into every round-1 reference (4 of them) and through AQE
-    # replanning — measured ~1 s/run SLOWER than checkpointing when this
-    # was tried without it (same-session A/B, r19).
+    # The canonical input needs no least/greatest + distinct exchange
+    # before round 0 (r19; one full edge-set shuffle fewer per query), but
+    # the round-0 localCheckpoint stays: a raw cache reference would drag
+    # the whole candidate-pipeline LOGICAL tree into every round-1
+    # reference (4 of them) and through AQE replanning — measured ~1 s/run
+    # SLOWER than checkpointing when this was tried without it
+    # (same-session A/B, r19).
     snap = _persist_ids()
-    if canonical:
-        E = edges.select(
-            F.col("src").alias("a"), F.col("dst").alias("b")
-        ).localCheckpoint(eager=False)
-    else:
-        E = _canon_edges(
-            edges.select(F.col("src").alias("x"), F.col("dst").alias("y"))
-        ).localCheckpoint(eager=False)
+    E = edges.select(
+        F.col("src").alias("a"), F.col("dst").alias("b")
+    ).localCheckpoint(eager=False)
     e_ids = _persist_ids() - snap
     n_prev = E.count()
     for rnd in range(LOGSTAR_MAX_ROUNDS):
@@ -1509,8 +1396,8 @@ def _logstar_components(
         lmins = lmins.select("u", F.least(F.col("mn"), F.col("u")).alias("m"))
         # large-star emits (m(u), v) for every directed (u, v) with v > u.
         # m(u) = min(neighborhood(u) ∪ {u}) ≤ u < v, so the edge is
-        # already canonically oriented and never degenerate — the old
-        # _canon_edges least/greatest + x≠y filter were provably no-ops
+        # already canonically oriented and never degenerate — a
+        # least/greatest + x≠y filter here would be a provable no-op
         # (r19; dead expressions removed). The DISTINCT stays: it is the
         # materialization point both small-star consumers (smins agg +
         # the attach join) read — dropping it was A/B'd and REJECTED
@@ -1555,6 +1442,13 @@ def _logstar_components(
         if stable:
             if _rounds_out is not None:
                 _rounds_out.append(rnd + 1)
+            # The final edge set backs the returned labels until the caller
+            # consumes them, so its blocks are released with the other
+            # operator intermediates: release_persisted() calls the
+            # JavaRDD's own unpersist().
+            jmap = sc._jsc.getPersistentRDDs()
+            for i in e_ids:
+                track_persisted(jmap.get(i))
             sym = E.select(F.col("a").alias("u"), F.col("b").alias("v")).union(
                 E.select(F.col("b").alias("u"), F.col("a").alias("v"))
             )
@@ -1571,7 +1465,7 @@ def _logstar_components(
             )
             return labels.union(singles)
     raise RuntimeError(
-        f"dedup_clusters_logstar: star contraction still moving after "
+        f"dedup_clusters: star contraction still moving after "
         f"{LOGSTAR_MAX_ROUNDS} rounds — that is > 2^{LOGSTAR_MAX_ROUNDS // 2} "
         f"effective diameter; inspect the pair graph"
     )
@@ -1579,16 +1473,17 @@ def _logstar_components(
 
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup cluster assignment (survivorship): connected components over
-    the MinHash-LSH candidate-pair graph via min-label propagation iterated
-    to a fixpoint — every doc ends up labeled with the smallest doc_id in
-    its component; the canonical survivor of a cluster is the doc whose id
-    IS the label, and singletons keep themselves as cluster_id.
+    the MinHash-LSH candidate-pair graph via star contraction
+    (_logstar_components, O(log diameter) rounds) — every doc ends up
+    labeled with the smallest doc_id in its component; the canonical
+    survivor of a cluster is the doc whose id IS the label, and singletons
+    keep themselves as cluster_id.
 
     All rounds are key-partitioned shuffles with no driver-side state beyond
-    the O(1) convergence probe — the standard Pregel-free components shape.
-    The DuckDB oracle computes the same fixpoint as a recursive-CTE
-    transitive closure, so the equality check holds for ANY chain radius,
-    not just radii the old 3-round unroll happened to cover.
+    the O(1) convergence probe. The DuckDB oracle computes the same labels
+    as a recursive-CTE transitive closure, so the equality check holds for
+    ANY chain radius. The registry also serves this function under the
+    name ``dedup_clusters_logstar``.
 
     Pairs come straight from the banded candidate join (distinct) — the
     matched-hash scoring and presentation sort dedup_minhash_lsh layers on
@@ -1597,27 +1492,17 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def dedup_clusters_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Production twin of ``dedup_clusters``: the same fixpoint components
-    over the xxhash64 banded candidate graph (_banded_fast_candidates) —
-    removing the md5 signature floor (~2.5 s of the exact twin's cost at
-    sf0.1) from the path a 100 TB pass actually runs. The md5 twin stays
-    registry-canonical for the DuckDB oracle (xxhash64 is Spark-specific →
-    rows-only driver check); cluster-assignment agreement between the twins
-    is pinned in test_extensions — identical banding geometry over the same
-    shingle sets, only the hash family and components algorithm differ
-    (components are components).
-
-    Components run via star contraction (_logstar_components): an
-    interleaved same-session A/B on identical candidates at sf0.1
-    measured logstar 2.5-3.3 s vs fixpoint 5.1-5.6 s, and the r6 scale
-    rehearsal measured exponent 0.65 vs 1.3 on corpora whose diameter
-    grows (chance/boilerplate chaining) — logstar wins on both local
-    latency AND the O(log diameter) round bound. The md5 fixpoint twin
-    (dedup_clusters) stays oracle-canonical for the one-hop formulation;
-    dedup_clusters_logstar oracle-checks the contraction itself."""
-    return _clusters_from_candidates(
-        spark, sf_dir, _banded_fast_candidates, propagate=_logstar_components
-    )
+    """Production twin of ``dedup_clusters``: the same star-contraction
+    components over the xxhash64 banded candidate graph
+    (_banded_fast_candidates) — removing the md5 signature floor (~2.5 s
+    of the exact twin's cost at sf0.1) from the path a 100 TB pass
+    actually runs. The md5 twin stays registry-canonical for the DuckDB
+    oracle (xxhash64 is Spark-specific → rows-only driver check);
+    cluster-assignment agreement between the twins is pinned in
+    test_extensions — identical banding geometry over the same shingle
+    sets and the same components algorithm, only the hash family
+    differs."""
+    return _clusters_from_candidates(spark, sf_dir, _banded_fast_candidates)
 
 
 def dedup_clusters_fast_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1625,12 +1510,12 @@ def dedup_clusters_fast_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     clusters analogue of ``dedup_minhash_lsh_fast_checked``: xxhash64
     labels can never be replayed by DuckDB, so the registry surface is the
     EXACT twin's cluster assignment (``dedup_clusters`` — md5 banding +
-    min-label fixpoint, replayed by the recursive-closure oracle) with one
+    star contraction, replayed by the recursive-closure oracle) with one
     engine-decided claim column about the fast plan broadcast onto every
     row:
 
     - ``fast_label_agree_ok`` — the per-doc cluster-label agreement
-      between the xxhash64/log-star plan and the exact twin is ≥
+      between the xxhash64 plan and the exact twin is ≥
       FAST_LABEL_AGREE_MIN (measured 0.986 / 0.984 / 0.8996 at
       sf0.001/0.01/0.1 vs the 0.85 pin; identical banding geometry over
       the same shingle sets means only chance band collisions under the
@@ -1645,7 +1530,7 @@ def dedup_clusters_fast_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     bolt-on, never billed to the production twin's headline.
     """
     # `exact` feeds BOTH the agreement agg and the output spine — persist,
-    # or the md5 banded pair join + fixpoint rounds run twice.
+    # or the md5 banded pair join + contraction rounds run twice.
     exact = track_persisted(dedup_clusters(spark, sf_dir).persist())
     fast = dedup_clusters_fast(spark, sf_dir).select(
         "doc_id", F.col("cluster_id").alias("fast_cluster_id")
@@ -1674,21 +1559,6 @@ def dedup_clusters_fast_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
             "fast_label_agree_ok",
         )
         .orderBy("doc_id")
-    )
-
-
-def dedup_clusters_logstar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Log-round twin of ``dedup_clusters``: the same md5-banded candidate
-    graph, components via alternating large-star/small-star contraction
-    (see _logstar_components) instead of one-hop min-label propagation —
-    O(log diameter) materializations instead of O(diameter), which is the
-    variant a 100 TB corpus with boilerplate-chained components runs.
-    Output is IDENTICAL (component = component), so it shares
-    dedup_clusters' DuckDB transitive-closure oracle; a pytest pins
-    twin-equality plus log-round convergence on a 240-node path graph the
-    fixpoint would need 120 rounds to label."""
-    return _clusters_from_candidates(
-        spark, sf_dir, _banded_md5_candidates, propagate=_logstar_components
     )
 
 
@@ -1853,32 +1723,23 @@ def _round10(x: float) -> float:
 
 
 def _clusters_from_candidates(
-    spark: SparkSession, sf_dir: str, cand_fn, propagate=None
+    spark: SparkSession, sf_dir: str, cand_fn
 ) -> DataFrame:
-    # Hand each components algorithm the CANONICAL pair set (doc_a <
-    # doc_b by the candidate join condition, distinct) and let it derive
-    # whatever orientation it needs. r18 persisted a SYMMETRIZED union
-    # instead — 2× the cached rows, the distinct subtree evaluated once
-    # per union branch at cache build, and the log-star path then
-    # collapsed the symmetric set straight back to canonical distinct
-    # form with one more full exchange plus a doubled initial
-    # localCheckpoint (guide §2.4; r19: all three removed).
+    # Hand star contraction the CANONICAL pair set (doc_a < doc_b by the
+    # candidate join condition, distinct): a symmetrized union would
+    # cache 2× the rows only for the contraction to collapse them back
+    # with one more full exchange (guide §2.4, r19). No persist: the
+    # contraction reads the pair set exactly ONCE, into its round-0
+    # localCheckpoint, so a persist would write every pair block twice
+    # for a single read (measured 4.21 → 3.84 s median on
+    # dedup_clusters_fast, 7-round interleaved A/B at sf0.1, r19).
     pairs = (
         cand_fn(spark, sf_dir)
         .select(F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst"))
         .distinct()
     )
-    prop = propagate or _propagate_min_labels
-    # Persist only for the fixpoint, which reads the pair set ~6× while
-    # materializing eprime/labels. Log-star reads it exactly ONCE — into
-    # its round-0 localCheckpoint — so a persist there writes every pair
-    # block twice for a single read (measured 4.21 → 3.84 s median on
-    # dedup_clusters_fast, 7-round interleaved A/B at sf0.1, r19; and one
-    # whole cached copy fewer at any scale).
-    if prop is _propagate_min_labels:
-        pairs = track_persisted(pairs.persist())
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    labels = prop(docs, pairs, canonical=True)
+    labels = _logstar_components(docs, pairs)
     w = W.partitionBy("cluster_id")
     return (
         labels.withColumn("cluster_size", F.count("*").over(w).cast("int"))
@@ -1902,8 +1763,8 @@ def _sql_dedup_clusters(extra: str = "") -> str:
     # `reach(doc_id, rid)` = "rid is reachable from doc_id over the pair
     # graph" — a recursive-CTE transitive closure (UNION dedups, so it
     # terminates). min(rid) per doc_id is then the exact component min
-    # label: the same fixpoint the Spark side iterates to, valid for any
-    # chain radius. Closure is O(Σ|component|²) rows — fine at oracle sf.
+    # label: the same labels the Spark side's star contraction converges
+    # to, valid for any chain radius. Closure is O(Σ|component|²) rows — fine at oracle sf.
     # `extra` appends pinned-claim columns (the checked fast twin asserts
     # its engine-decided claim held, so the oracle replays it as 1).
     return f"""
@@ -2042,8 +1903,7 @@ def _sql_corpus_dedup_apply() -> str:
 
 ORACLE: dict[str, str] = {
     "dedup_clusters": _sql_dedup_clusters(),
-    # identical output by construction (components are components): the
-    # closure oracle is algorithm-agnostic
+    # the same function under its log-round registry name
     "dedup_clusters_logstar": _sql_dedup_clusters(),
     # checked fast twin: exact-twin rows + the pinned label-agreement
     # claim replayed as held (see dedup_clusters_fast_checked)
@@ -2345,7 +2205,9 @@ QUERIES = {
     # same contract for the clusters twin: exact-twin rows + pinned
     # label-agreement claim; bench times the raw dedup_clusters_fast
     "dedup_clusters_fast": dedup_clusters_fast_checked,
-    "dedup_clusters_logstar": dedup_clusters_logstar,
+    # kept under its own name for the registry count and bench.py's
+    # frozen list; the same star-contraction implementation
+    "dedup_clusters_logstar": dedup_clusters,
     "corpus_dedup_apply": corpus_dedup_apply,
     "pagerank_near_dup": pagerank_near_dup,
     "split_by_cluster": split_by_cluster,

@@ -640,6 +640,8 @@ def _huff_encode_table(bits, vals):
 
 
 _HUFF_LUTS: dict = {}
+# FIFO bound, as similarity._KEYED_COLS_MAX: custom-table scans churn specs
+_HUFF_LUTS_MAX = 64
 
 
 def _huff_decode_table(bits, vals):
@@ -667,6 +669,8 @@ def _huff_decode_table(bits, vals):
                 code += 1
                 k += 1
             code <<= 1
+        if len(_HUFF_LUTS) >= _HUFF_LUTS_MAX:
+            del _HUFF_LUTS[next(iter(_HUFF_LUTS))]
         _HUFF_LUTS[key] = lut
     return lut
 
@@ -737,8 +741,8 @@ class _JpegBitReader:
             nbits += 8
         self.acc, self.nbits, self.pos = acc, nbits, pos
 
-    def _starved(self, n: int):
-        """The error a consume of n bits past the stop point owes."""
+    def _starved(self):
+        """The error a consume past the stop point owes."""
         if self.stop is not None and self.stop >= 0:
             raise ValueError(f"unexpected marker 0xFF{self.stop:02X} in scan")
         raise ValueError("JPEG scan truncated")
@@ -755,7 +759,7 @@ class _JpegBitReader:
 
     def consume(self, n: int) -> None:
         if n > self.nbits:
-            self._starved(n)
+            self._starved()
         self.nbits -= n
         self.acc &= (1 << self.nbits) - 1
 
@@ -765,7 +769,7 @@ class _JpegBitReader:
         if self.nbits < n:
             self._refill(n)
             if self.nbits < n:
-                self._starved(n)
+                self._starved()
         nb = self.nbits - n
         v = (self.acc >> nb) & ((1 << n) - 1)
         self.nbits = nb
@@ -978,7 +982,7 @@ def _decode_jpeg(payload: bytes):
         ent = lut[br.peek16()]
         if ent is None:
             if br.nbits < 16:
-                br._starved(16)  # old reader hit the marker/end mid-code
+                br._starved()  # old reader hit the marker/end mid-code
             raise ValueError("invalid Huffman code in JPEG scan")
         sym, length = ent
         br.consume(length)

@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+import re
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Any
 from urllib.parse import parse_qs, urlsplit
@@ -55,6 +56,24 @@ INDEX_DOC = {
 }
 
 
+# The city value becomes a snapshot file name (cache.snapshot_path), so only
+# letters and digits (any script), space, ".", "'" and "-" pass — no path
+# separator can reach the file system.
+_CITY_OK = re.compile(r"(?:[^\W_]|[ .'-]){1,64}")
+
+
+_BAD_CITY = {
+    "error": "invalid city",
+    "remediation": "use at most 64 letters, digits, spaces, periods, "
+    "apostrophes or hyphens",
+    "status": "400",
+}
+
+
+class _BadCity(ValueError):
+    """A ``city`` query value outside _CITY_OK — answered with _BAD_CITY."""
+
+
 class _Handler(BaseHTTPRequestHandler):
     """Routes → envelope functions. The (spark, warehouse, cache) context
     lives on the server object (set by make_server), not per-handler."""
@@ -72,7 +91,10 @@ class _Handler(BaseHTTPRequestHandler):
 
     def _city(self) -> str:
         qs = parse_qs(urlsplit(self.path).query)
-        return qs.get("city", ["Stockton"])[0]
+        city = qs.get("city", ["Stockton"])[0]
+        if not _CITY_OK.fullmatch(city):
+            raise _BadCity(city)
+        return city
 
     def log_message(self, fmt: str, *args: Any) -> None:  # noqa: A003
         if getattr(self.server, "verbose", False):
@@ -119,6 +141,8 @@ class _Handler(BaseHTTPRequestHandler):
                 )
             else:
                 self._send(404, {"error": "not found", "path": route})
+        except _BadCity:
+            self._send(400, _BAD_CITY)
         except Exception as exc:  # noqa: BLE001 — the JSON 500 handler
             self._send(500, {"error": "Internal server error", "message": str(exc)})
 
@@ -145,6 +169,8 @@ class _Handler(BaseHTTPRequestHandler):
                 )
             else:
                 self._send(404, {"error": "not found", "path": route})
+        except _BadCity:
+            self._send(400, _BAD_CITY)
         except Exception as exc:  # noqa: BLE001
             self._send(500, {"error": "Internal server error", "message": str(exc)})
 
