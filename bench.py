@@ -13,8 +13,10 @@ number a cluster job would see, not a toPandas tax.
 
 The headline set spans every operator family: full-scan aggregation, 5-way
 star join, window analytics, JSON extraction, and each extension (dedup /
-LSH / similarity / text). One warm-up run of the flagship query absorbs JVM
-/ codegen warm-up so per-query numbers are comparable across rounds.
+LSH / similarity / text). ``warm_up`` absorbs the JVM / codegen, Python
+worker and DataSource start-up so per-query numbers are comparable across
+rounds. ``production_queries`` and ``warm_up`` are the one copy of the
+timed registry and the warm-up; the tools under tools/ import them.
 """
 
 from __future__ import annotations
@@ -211,10 +213,51 @@ def _sf_from_dir(sf_dir: str) -> float:
         return -1.0
 
 
-def main() -> None:
-    from weather_database_system_spark.session import get_spark
+def noop(df) -> None:
+    """Run ``df`` to completion through the no-op sink (see the module
+    docstring): the timed action of every query here and in the tools."""
+    df.write.format("noop").mode("overwrite").save()
 
+
+def production_queries() -> dict:
+    """The registry with its three ``*_checked`` surfaces replaced by their
+    raw production twins. Those wrappers bolt an exact-twin yardstick onto
+    the xxhash64 / float-ADC plans so the driver can oracle-check them
+    (r8 verdict #3); the yardstick is a test-SF-only audit that a 100 TB
+    pass never runs, so every timing harness times the raw plans instead."""
     import __spark_entry__ as em
+    from weather_database_system_spark.operators.dedup import (
+        dedup_clusters_fast,
+        dedup_minhash_lsh_fast,
+    )
+    from weather_database_system_spark.operators.similarity import (
+        ann_product_quantization,
+    )
+
+    return {
+        **em.queries(),
+        "dedup_minhash_lsh_fast": dedup_minhash_lsh_fast,
+        "dedup_clusters_fast": dedup_clusters_fast,
+        "ann_product_quantization": ann_product_quantization,
+    }
+
+
+def warm_up(spark, queries: dict) -> None:
+    """The session warm-up every timed reading follows. All three steps
+    matter (r18 review #5): a reading taken after fewer of them is not
+    comparable to the BENCH series."""
+    # JVM / codegen / parquet footer caches, on the flagship query.
+    noop(queries["pricing_summary"](spark, SF_DIR))
+    # The Python worker pool (Arrow/pandas path): first use costs ~5 s of
+    # interpreter/worker spin-up that belongs to the session, not to
+    # whichever Python-path query happens to run first.
+    noop(spark.range(2).mapInPandas(lambda it: it, "id long"))
+    # The partitioned Python DataSource machinery the feed_* headliners use.
+    noop(queries["feed_daily_rollup"](spark, SF_DIR))
+
+
+def main() -> None:
+    from weather_database_system_spark.session import get_spark, release_persisted
 
     # r11 VERDICT #1: Spark's console progress bars ([Stage N:...] spam)
     # drowned the one-line JSON result and the driver's tail capture
@@ -228,40 +271,8 @@ def main() -> None:
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")
-    queries = dict(em.queries())
-    # The registry surfaces for the xxhash64 fast twins are *_checked
-    # wrappers that bolt an exact-twin yardstick onto the plan so the
-    # driver can oracle-check them (r8 verdict #3). The yardstick is a
-    # test-SF-only audit that a 100 TB pass never runs — bench times the
-    # raw production plans, not the audit.
-    from weather_database_system_spark.operators.dedup import (
-        dedup_clusters_fast,
-        dedup_minhash_lsh_fast,
-    )
-    from weather_database_system_spark.operators.similarity import (
-        ann_product_quantization,
-    )
-
-    queries["dedup_minhash_lsh_fast"] = dedup_minhash_lsh_fast
-    queries["dedup_clusters_fast"] = dedup_clusters_fast
-    queries["ann_product_quantization"] = ann_product_quantization
-
-    # Warm up JVM/codegen/parquet footer caches on the flagship query.
-    queries["pricing_summary"](spark, SF_DIR).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    # Warm the Python worker pool too (Arrow/pandas path and the Python
-    # DataSource machinery) — first use costs ~5 s of interpreter/worker
-    # spin-up that belongs to the session, not to whichever Python-path
-    # query happens to run first (same class as the JVM warm-up above).
-    spark.range(2).mapInPandas(lambda it: it, "id long").write.format(
-        "noop"
-    ).mode("overwrite").save()
-    queries["feed_daily_rollup"](spark, SF_DIR).write.format("noop").mode(
-        "overwrite"
-    ).save()
-
-    from weather_database_system_spark.session import release_persisted
+    queries = production_queries()
+    warm_up(spark, queries)
 
     timings: dict[str, float] = {}
     cold: dict[str, float] = {}
@@ -270,7 +281,7 @@ def main() -> None:
         runs = []
         for _ in range(RUNS):
             t0 = time.perf_counter()
-            fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+            noop(fn(spark, SF_DIR))
             runs.append(time.perf_counter() - t0)
             # Release per-operator persisted intermediates (minhash
             # signatures, LSH tables) so later queries — and later runs of
@@ -287,49 +298,47 @@ def main() -> None:
         timings[name] = round(sorted(warm)[len(warm) // 2], 3)
 
     total = round(sum(timings.values()), 3)
-    payload = json.dumps(
-        {
-            "metric": "headline_queries_total",
-            "value": total,
-            "unit": "sec",
-            "queries": timings,
-            "n_queries": len(timings),
-            "runs": RUNS,
-            # self-description so a QUICK-mode file can never be read as
-            # a full-set result in cross-round comparison
-            "headline_set": "quick" if HEADLINE is QUICK else "full",
-            "sf": _sf_from_dir(SF_DIR),
-            # Host-drift guard (r4 NOTES): the flagship time doubles as a
-            # normalization denominator so cross-round comparisons can
-            # self-correct for uniform host slowdowns (divide any query's
-            # time by this before comparing across BENCH_r files).
-            "normalizer_sec": timings["pricing_summary"],
-            # Second, independent sentinel (r7 verdict #4 / ADVICE):
-            # pricing_summary is itself a benched headline, so a change
-            # to IT would masquerade as host drift. topk_global is an
-            # untouched-since-r1 scan+TakeOrdered with no persisted
-            # state; two sentinels moving together = host drift, one
-            # moving alone = a real change in that query.
-            "normalizer2_sec": timings["topk_global"],
-            # Per-query first-run times (one-off costs), reported
-            # separately so they can never masquerade as a warm
-            # regression — adjudicate a mover by comparing its WARM
-            # median across rounds and checking cold_sec for the
-            # one-off class.
-            "cold_sec": cold,
-            # Run-mode provenance (ADVICE r7): headline medians are
-            # WARM within-process repeats of runs 2..N (run 1 split
-            # out as cold_sec) — comparable across rounds with
-            # runs>=3.
-            "run_mode": "cold_first_warm_median" if RUNS > 1 else "single",
-        }
-    )
+    payload = {
+        "metric": "headline_queries_total",
+        "value": total,
+        "unit": "sec",
+        "queries": timings,
+        "n_queries": len(timings),
+        "runs": RUNS,
+        # self-description so a QUICK-mode file can never be read as
+        # a full-set result in cross-round comparison
+        "headline_set": "quick" if HEADLINE is QUICK else "full",
+        "sf": _sf_from_dir(SF_DIR),
+        # Host-drift guard (r4 NOTES): the flagship time doubles as a
+        # normalization denominator so cross-round comparisons can
+        # self-correct for uniform host slowdowns (divide any query's
+        # time by this before comparing across BENCH_r files).
+        "normalizer_sec": timings["pricing_summary"],
+        # Second, independent sentinel (r7 verdict #4 / ADVICE):
+        # pricing_summary is itself a benched headline, so a change
+        # to IT would masquerade as host drift. topk_global is an
+        # untouched-since-r1 scan+TakeOrdered with no persisted
+        # state; two sentinels moving together = host drift, one
+        # moving alone = a real change in that query.
+        "normalizer2_sec": timings["topk_global"],
+        # Per-query first-run times (one-off costs), reported
+        # separately so they can never masquerade as a warm
+        # regression — adjudicate a mover by comparing its WARM
+        # median across rounds and checking cold_sec for the
+        # one-off class.
+        "cold_sec": cold,
+        # Run-mode provenance (ADVICE r7): headline medians are
+        # WARM within-process repeats of runs 2..N (run 1 split
+        # out as cold_sec) — comparable across rounds with
+        # runs>=3.
+        "run_mode": "cold_first_warm_median" if RUNS > 1 else "single",
+    }
     # Durable copy first (survives any console interleaving): the FULL
     # payload — every per-query warm median and cold split — always lands
     # in BENCH_LOCAL.json.
     here = os.path.dirname(os.path.abspath(__file__))
     with open(os.path.join(here, "BENCH_LOCAL.json"), "w") as fh:
-        fh.write(payload + "\n")
+        fh.write(json.dumps(payload) + "\n")
 
     # The contract's ONE JSON line, last on stdout, must survive the
     # driver's 2000-char tail capture (measured: BENCH_r11/r12 both store
@@ -341,18 +350,9 @@ def main() -> None:
     # survive — with an explicit elision count and a pointer to the
     # durable full payload. cold_sec lives only in BENCH_LOCAL.json.
     compact = {
-        "metric": "headline_queries_total",
-        "value": total,
-        "unit": "sec",
         "queries": {},
         "queries_elided": 0,
-        "n_queries": len(timings),
-        "runs": RUNS,
-        "headline_set": "quick" if HEADLINE is QUICK else "full",
-        "sf": _sf_from_dir(SF_DIR),
-        "normalizer_sec": timings["pricing_summary"],
-        "normalizer2_sec": timings["topk_global"],
-        "run_mode": "cold_first_warm_median" if RUNS > 1 else "single",
+        **{k: v for k, v in payload.items() if not isinstance(v, dict)},
         "full_payload": "BENCH_LOCAL.json",
     }
     budget = 1800

@@ -267,6 +267,72 @@ def test_cache_hit_stale_miss_and_status(spark, zones, tmp_path):
     }
 
 
+def test_city_case_shares_one_snapshot_and_its_rows(spark, zones, tmp_path):
+    """The snapshot key lowercases the city, so "Stockton" and "stockton"
+    share monthly_stockton.json; the warehouse reads behind it match the
+    city case-insensitively too. A refresh for "stockton" must snapshot
+    Stockton's months, not an empty envelope that "Stockton" would then
+    serve as a fresh hit with 0 rows, and the expired fallback must serve
+    the same rows for either spelling."""
+    from weather_database_system_spark.pipeline.cache import read_snapshot, refresh_cache
+    from weather_database_system_spark.pipeline.serving import serve_monthly
+
+    croot = str(tmp_path / "cache")
+    months = ["2024-01-01", "2024-02-01", "2024-03-01"]
+    refresh_cache(spark, zones["warehouse"], croot, "Stockton", now=NOW)
+    refresh_cache(spark, zones["warehouse"], croot, "stockton", now=NOW)
+    assert os.listdir(croot) == ["monthly_stockton.json"]
+    assert [r["month"] for r in read_snapshot(croot, "Stockton")["data"]] == months
+
+    hit = serve_monthly(
+        spark, zones["warehouse"], croot, "Stockton", now=NOW + dt.timedelta(minutes=10)
+    )
+    assert (hit["cache_status"], hit["count"]) == ("hit", 3)
+
+    t_stale = NOW + dt.timedelta(hours=2)
+    upper = serve_monthly(spark, zones["warehouse"], croot, "Stockton", now=t_stale)
+    lower = serve_monthly(spark, zones["warehouse"], croot, "stockton", now=t_stale)
+    assert (lower["source"], lower["cache_status"]) == ("warehouse", "expired")
+    assert [r["month"] for r in lower["data"]] == months
+    assert lower["data"] == upper["data"]
+
+
+def test_city_predicate_is_literal_and_case_insensitive(spark):
+    """city_is matches the whole name, ignoring case, with regex
+    metacharacters in the name taken literally."""
+    from weather_database_system_spark.pipeline.warehouse import city_is
+
+    df = spark.createDataFrame(
+        [(c,) for c in ("St. Louis", "StX Louis", "St. Louis East", "ÉVRY", "Coeur d'Alene")],
+        "city string",
+    )
+
+    def match(city):
+        return sorted(r["city"] for r in df.filter(city_is(city)).collect())
+
+    assert match("st. louis") == ["St. Louis"]
+    assert match("évry") == ["ÉVRY"]
+    assert match("COEUR D'ALENE") == ["Coeur d'Alene"]
+    assert match("louis") == []
+
+
+def test_ingest_payload_stamps_lineage_to_the_millisecond(spark):
+    """The payload path's lineage stamp: source_timestamp is fetched_at
+    truncated to milliseconds with a Z suffix, and etl_batch_id is
+    etl-<epoch ms> of the same instant (load_daily's dedup keys on it)."""
+    from weather_database_system_spark.pipeline.ingest import ingest_payload
+
+    p = make_payload(0, n_days=1)
+    silver = ingest_payload(
+        spark, p, city=p["_city"], state=p["_state"],
+        fetched_at=dt.datetime(2024, 2, 3, 12, 34, 56, 789123),
+    )
+    stamps = silver.select("metadata.source_timestamp", "metadata.etl_batch_id").distinct()
+    assert [tuple(r) for r in stamps.collect()] == [
+        ("2024-02-03T12:34:56.789Z", "etl-1706963696789")
+    ]
+
+
 def test_serving_error_taxonomy(spark, tmp_path):
     """op #21: missing warehouse → 503 + actionable remediation, never a
     raw stack trace."""

@@ -1,8 +1,9 @@
 #!/usr/bin/env python
-"""Isolated re-timing of individual headline queries under the EXACT bench
-harness session (session.get_spark: AQE, shuffle partitions, the same
-warm-up sequence) — the adjudication step the host-drift protocol
-prescribes when a full-bench reading spikes.
+"""Isolated re-timing of individual registry queries under the EXACT bench
+harness: bench.py's session settings, its production twins
+(``bench.production_queries``) and its warm-up (``bench.warm_up``) — the
+adjudication step the host-drift protocol prescribes when a full-bench
+reading spikes.
 
 Why this exists (r18 close): a quick triage that rebuilt a bare
 ``SparkSession.builder`` session read ``dedup_clusters_fast`` at 38-46 s
@@ -14,6 +15,9 @@ BENCH series when they reuse the bench session; this tool pins that.
 Usage:
     python tools/bench_one.py semdedup_prune dedup_clusters_fast
     python tools/bench_one.py --runs 5 ann_lsh_fixedpoint
+
+The SF directory and core count are bench.py's (SPARK_GRAFT_SF_DIR,
+default sf0.1; SPARK_GRAFT_CPUS, default 32).
 
 Prints, per query: cold first run, all warm runs, and the warm median
 (the number comparable to bench.py's per-query figure), bracketed by
@@ -30,9 +34,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
 
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__)
@@ -40,30 +41,16 @@ def main() -> int:
     ap.add_argument("--runs", type=int, default=3, help="runs per query (first is cold)")
     args = ap.parse_args()
 
+    import bench
     from weather_database_system_spark.session import get_spark, release_persisted
-
-    import __spark_entry__ as em
 
     spark = get_spark(
         app_name="wdss-bench-one",
-        cpus=CPUS,
+        cpus=bench.CPUS,
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")
-    queries = dict(em.queries())
-    # bench.py times the raw production twins, not the *_checked oracle
-    # wrappers — mirror that substitution so numbers line up.
-    from weather_database_system_spark.operators.dedup import (
-        dedup_clusters_fast,
-        dedup_minhash_lsh_fast,
-    )
-    from weather_database_system_spark.operators.similarity import (
-        ann_product_quantization,
-    )
-
-    queries["dedup_minhash_lsh_fast"] = dedup_minhash_lsh_fast
-    queries["dedup_clusters_fast"] = dedup_clusters_fast
-    queries["ann_product_quantization"] = ann_product_quantization
+    queries = bench.production_queries()
 
     unknown = [n for n in args.names if n not in queries]
     if unknown:
@@ -72,21 +59,12 @@ def main() -> int:
 
     def run(name: str) -> float:
         t0 = time.perf_counter()
-        queries[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
+        bench.noop(queries[name](spark, bench.SF_DIR))
         release_persisted()
         return round(time.perf_counter() - t0, 3)
 
-    # The bench warm-up sequence, ALL THREE steps (r18 review #5 —
-    # omitting any one makes readings non-comparable to the BENCH
-    # series, the exact mis-adjudication this tool exists to prevent):
-    # flagship query (JVM/codegen/footers), one Arrow round-trip
-    # (Python worker pool), and one feed query (the partitioned Python
-    # DataSource machinery the feed_* headliners depend on).
-    run("pricing_summary")
-    spark.range(2).mapInPandas(lambda it: it, "id long").write.format("noop").mode(
-        "overwrite"
-    ).save()
-    run("feed_daily_rollup")
+    bench.warm_up(spark, queries)
+    release_persisted()
 
     print(f"sentinel pricing_summary: {[run('pricing_summary') for _ in range(2)]}")
     for name in args.names:

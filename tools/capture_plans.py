@@ -18,40 +18,26 @@ import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 SUFFIX = os.environ.get("WDSS_PLAN_SUFFIX", "before")
 
 
 def main() -> None:
+    import bench
     from weather_database_system_spark.session import (
         get_spark,
         release_persisted,
     )
-    import __spark_entry__ as em
-    import bench
 
     tag = sys.argv[1] if len(sys.argv) > 1 else "r18"
     names = sys.argv[2:] or list(bench.HEADLINE)
 
     spark = get_spark(
         app_name="wdss-plans",
-        cpus=CPUS,
+        cpus=bench.CPUS,
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")
-    queries = dict(em.queries())
-    from weather_database_system_spark.operators.dedup import (
-        dedup_clusters_fast,
-        dedup_minhash_lsh_fast,
-    )
-    from weather_database_system_spark.operators.similarity import (
-        ann_product_quantization,
-    )
-
-    queries["dedup_minhash_lsh_fast"] = dedup_minhash_lsh_fast
-    queries["dedup_clusters_fast"] = dedup_clusters_fast
-    queries["ann_product_quantization"] = ann_product_quantization
+    queries = bench.production_queries()
 
     here = os.path.dirname(os.path.abspath(__file__))
     outdir = os.path.join(here, "..", "plans", tag)
@@ -60,7 +46,7 @@ def main() -> None:
     for name in names:
         fn = queries[name]
         try:
-            df = fn(spark, SF_DIR)
+            df = fn(spark, bench.SF_DIR)
             plan = df._jdf.queryExecution().explainString(
                 spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                     "formatted"

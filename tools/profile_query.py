@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Per-job / per-stage profile of registry queries (guide §1: measure first).
 
-Runs each named query once warm (after the bench's standard warm-up) with the
+Runs each named query once warm (after ``bench.warm_up``) with the
 Spark UI enabled, then reads the UI REST API (/api/v1) to attribute
 wall-clock to the individual jobs a query submits — driver collects, persist
 materializations, the final noop action — and per-stage executor time /
@@ -9,7 +9,12 @@ shuffle bytes. This is the measurement layer bench.py cannot give: bench
 times the whole query; this tool says WHICH job inside it is slow.
 
 Usage: python tools/profile_query.py semdedup_prune ann_product_quantization
-       (no args = the 12-query QUICK sentinel set)
+       python tools/profile_query.py        # bench.QUICK, the 12 sentinels
+
+Queries come from ``bench.production_queries`` (the raw production twins
+bench.py times); the SF directory and core count are bench.py's
+(SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS). The UI port is
+WDSS_PROFILE_UI_PORT (default 4049).
 
 Output: JSON lines per query: total wall, per-job rows (desc, duration,
 stages), per-stage (runtime, shuffle read/write, tasks).
@@ -25,8 +30,6 @@ import urllib.request
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 UI_PORT = int(os.environ.get("WDSS_PROFILE_UI_PORT", "4049"))
 
 
@@ -37,15 +40,15 @@ def _api(path: str):
 
 
 def main() -> None:
+    import bench
     from weather_database_system_spark.session import (
         get_spark,
         release_persisted,
     )
-    import __spark_entry__ as em
 
     spark = get_spark(
         app_name="wdss-profile",
-        cpus=CPUS,
+        cpus=bench.CPUS,
         extra_conf={
             "spark.ui.enabled": "true",
             "spark.ui.port": str(UI_PORT),
@@ -53,39 +56,10 @@ def main() -> None:
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
-    queries = dict(em.queries())
-    from weather_database_system_spark.operators.dedup import (
-        dedup_clusters_fast,
-        dedup_minhash_lsh_fast,
-    )
-    from weather_database_system_spark.operators.similarity import (
-        ann_product_quantization,
-    )
+    queries = bench.production_queries()
+    names = sys.argv[1:] or list(bench.QUICK)
 
-    queries["dedup_minhash_lsh_fast"] = dedup_minhash_lsh_fast
-    queries["dedup_clusters_fast"] = dedup_clusters_fast
-    queries["ann_product_quantization"] = ann_product_quantization
-
-    names = sys.argv[1:]
-    if not names:
-        names = [
-            "pricing_summary", "topk_global", "join_star_revenue",
-            "window_running_sum", "dedup_clusters_fast", "semdedup_prune",
-            "ann_product_quantization", "tfidf_cosine_pairs",
-            "feed_daily_rollup", "stream_session_window",
-            "sole_return_supplier", "heavy_hitters_cms",
-        ]
-
-    # bench-identical warm-up
-    queries["pricing_summary"](spark, SF_DIR).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    spark.range(2).mapInPandas(lambda it: it, "id long").write.format(
-        "noop"
-    ).mode("overwrite").save()
-    queries["feed_daily_rollup"](spark, SF_DIR).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    bench.warm_up(spark, queries)
     release_persisted()
 
     app_id = spark.sparkContext.applicationId
@@ -94,12 +68,12 @@ def main() -> None:
         fn = queries[name]
         # one cold pass so the profiled pass is the warm (headline) number
         t0 = time.perf_counter()
-        fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+        bench.noop(fn(spark, bench.SF_DIR))
         cold = time.perf_counter() - t0
         release_persisted()
         jobs_before = {j["jobId"] for j in _api(f"applications/{app_id}/jobs")}
         t0 = time.perf_counter()
-        fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+        bench.noop(fn(spark, bench.SF_DIR))
         warm = time.perf_counter() - t0
         release_persisted()
         jobs = [

@@ -289,7 +289,7 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
-    import __spark_entry__ as em
+    import bench
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = (
@@ -303,24 +303,11 @@ def main() -> None:
     if args.spatial_area:
         run_spatial_area(spark, multiples, max(2, args.runs), args.scratch)
         return
-    queries = dict(em.queries())
-    # The registry surfaces for the xxhash64 / float-ADC production twins
-    # are *_checked wrappers that bolt an exact-twin yardstick onto the
-    # plan for the driver's oracle gate (r11). The rehearsal measures the
-    # RAW production plans — same override as bench.py; without it the
-    # "fast" rows time raw + exact + audit (~3× the deployable work:
-    # dedup_clusters_fast measured 45 s vs 15 s at the 8× Zipf point).
-    from weather_database_system_spark.operators.dedup import (
-        dedup_clusters_fast,
-        dedup_minhash_lsh_fast,
-    )
-    from weather_database_system_spark.operators.similarity import (
-        ann_product_quantization,
-    )
-
-    queries["dedup_minhash_lsh_fast"] = dedup_minhash_lsh_fast
-    queries["dedup_clusters_fast"] = dedup_clusters_fast
-    queries["ann_product_quantization"] = ann_product_quantization
+    # The RAW production plans, as bench.py times them: through the
+    # *_checked registry wrappers the "fast" rows would time raw + exact +
+    # audit (~3× the deployable work: dedup_clusters_fast measured 45 s vs
+    # 15 s at the 8× Zipf point).
+    queries = bench.production_queries()
 
     # regime-keyed cache dirs: fixed-vocab and --vocab-scale corpora must
     # never share a cache slot — a stale cross-regime m4 once produced a

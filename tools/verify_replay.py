@@ -1,62 +1,85 @@
-"""Replay the driver's correctness gate locally: every registry query vs
-its DuckDB oracle at sf0.01 on a vanilla session (the same side-by-side
-compare the per-round driver runs). Prints per-query status and a
-final FAILURES line; exit code 1 on any mismatch.
+"""Replay the driver's correctness gate locally: registry queries vs their
+DuckDB oracles, compared by ``tests.oracle.compare`` (the function
+tests/test_oracle_parity.py uses) on the driver's own vanilla session
+(``local[*]``, 32 shuffle partitions, UI off). Prints one line per query
+with its status and seconds, then a FAILURES line; exits 1 on any
+mismatch, error or unknown name.
 
-Usage: python tools/verify_replay.py [sf_dir]
+Usage:
+    python tools/verify_replay.py                    # all 228 at sf0.01
+    python tools/verify_replay.py dedup_clusters corpus_dedup_apply
+    SPARK_GRAFT_DRIVER_MEM=8g python tools/verify_replay.py \\
+        --sf /root/testdata/sf0.1 --start 0 --count 55
+
+Names default to the whole registry. ``--start``/``--count`` slice the
+sorted name list so long sweeps run in resumable chunks. The driver heap
+is Spark's default unless SPARK_GRAFT_DRIVER_MEM is set, as sf0.1 sweeps
+need.
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
+import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:
+    ap = argparse.ArgumentParser(description=__doc__)
+    ap.add_argument("names", nargs="*", help="registry query names (default: all)")
+    ap.add_argument("--sf", default="/root/testdata/sf0.01")
+    ap.add_argument("--start", type=int, default=0)
+    ap.add_argument("--count", type=int, default=None)
+    args = ap.parse_args()
+
     import duckdb
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as em
-    from tests.oracle import canonicalize, register_duck_views
+    from tests.oracle import compare, register_duck_views
+    from weather_database_system_spark.session import release_persisted
 
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    spark = (
+    builder = (
         SparkSession.builder.master("local[*]")
         .config("spark.sql.shuffle.partitions", "32")
         .config("spark.ui.enabled", "false")
-        .getOrCreate()
     )
-    spark.sparkContext.setLogLevel("ERROR")
-    print("entry rows:", len(em.entry(spark).collect()))
-    con = duckdb.connect()
-    register_duck_views(con, sf_dir)
-    queries, oracles = em.queries(), em.oracle_sql()
-    from weather_database_system_spark.session import release_persisted
-
-    fails = []
-    for name in sorted(queries):
-        spdf = queries[name](spark, sf_dir).toPandas()
-        # the engine's persisted-intermediate contract: the sweep owner
-        # releases between queries, else 200+ queries' cached blocks
-        # accumulate in the vanilla session's default driver heap (a
-        # full-registry replay OOM'd at ~quarter depth without this; the
-        # driver's own 50-query gate never reaches that depth)
-        release_persisted()
-        if name not in oracles:
-            print(f"{name}: rows-only ({len(spdf)})")
-            continue
-        dpdf = con.execute(oracles[name]).df()
-        ok = (
-            sorted(spdf.columns) == sorted(dpdf.columns)
-            and len(spdf) == len(dpdf)
-            and canonicalize(spdf) == canonicalize(dpdf)
+    if "SPARK_GRAFT_DRIVER_MEM" in os.environ:
+        builder = builder.config(
+            "spark.driver.memory", os.environ["SPARK_GRAFT_DRIVER_MEM"]
         )
-        if not ok:
+    spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    print("entry rows:", len(em.entry(spark).collect()), flush=True)
+    con = duckdb.connect()
+    register_duck_views(con, args.sf)
+    queries, oracles = em.queries(), em.oracle_sql()
+
+    names = args.names or sorted(queries)
+    end = None if args.count is None else args.start + args.count
+    fails = []
+    for name in names[args.start : end]:
+        t0 = time.perf_counter()
+        try:
+            compare(queries[name](spark, args.sf), con, oracles[name], name=name)
+            status = "OK"
+        except AssertionError as exc:
+            status = f"MISMATCH {exc}"
+        except Exception as exc:  # noqa: BLE001 — a sweep reports, not dies
+            status = f"ERROR {type(exc).__name__}: {exc}"
+        finally:
+            # the engine's persisted-intermediate contract: the sweep owner
+            # releases between queries, else 200+ queries' cached blocks
+            # accumulate in the default driver heap (a full-registry replay
+            # OOM'd at ~quarter depth without this)
+            release_persisted()
+        if status != "OK":
             fails.append(name)
-        print(f"{name}: {'OK' if ok else 'MISMATCH'} ({len(spdf)} rows)")
-    print("FAILURES:", fails or "none")
+        print(f"{name}: {status} ({time.perf_counter() - t0:.1f}s)", flush=True)
+    print("FAILURES:", fails or "none", flush=True)
     return 1 if fails else 0
 
 

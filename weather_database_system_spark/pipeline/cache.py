@@ -209,13 +209,11 @@ def refresh_cache(
     process — backend/routes/cache.js:71; ours is a library call): read gold,
     filter to the city, snapshot. One Spark job: the city's rows (one per
     month) are sorted after the collect, not by a distributed sort."""
-    from pyspark.sql import functions as F
-
-    from weather_database_system_spark.pipeline.warehouse import read_monthly
+    from weather_database_system_spark.pipeline.warehouse import city_is, read_monthly
 
     rows = (
         read_monthly(spark, warehouse_root)
-        .filter(F.col("city") == city)  # op #15, engine-side not client-side
+        .filter(city_is(city))  # op #15, engine-side not client-side
         .collect()
     )
     rows.sort(key=lambda r: r["month"])

@@ -156,6 +156,20 @@ def bronze_to_observations(bronze: DataFrame, keep: tuple[str, ...] = ()) -> Dat
     )
 
 
+def _lineage(fetched_at: dt.datetime) -> dict[str, str]:
+    """The batch's lineage stamp, derived once for every ingest path:
+    ``source_timestamp`` (ISO-8601 to the millisecond, ``Z``) and
+    ``etl_batch_id`` (``etl-<epoch ms>``). load_daily's idempotent dedup
+    keys on the batch id, so no path may derive it differently.
+    ``fetched_at`` is naive-UTC by convention; tzinfo is pinned before
+    ``.timestamp()`` so the id doesn't shift on non-UTC hosts."""
+    epoch_ms = int(fetched_at.replace(tzinfo=dt.timezone.utc).timestamp() * 1000)
+    return {
+        "source_timestamp": fetched_at.isoformat(timespec="milliseconds") + "Z",
+        "etl_batch_id": f"etl-{epoch_ms}",
+    }
+
+
 def _metadata_struct(
     *,
     source_timestamp: str,
@@ -390,8 +404,7 @@ def ingest_feed(
         bronze_to_observations(bronze),
         city,
         state,
-        source_timestamp=fetched_at.isoformat(timespec="milliseconds") + "Z",
-        etl_batch_id=f"etl-{int(fetched_at.replace(tzinfo=dt.timezone.utc).timestamp() * 1000)}",
+        **_lineage(fetched_at),
         author=author,
     )
     if silver_path:
@@ -435,8 +448,7 @@ def ingest_feed_stations(
         write_zone(bronze, bronze_path)
     silver = enrich_stations(
         bronze_to_observations(bronze, keep=("latitude", "longitude")),
-        source_timestamp=fetched_at.isoformat(timespec="milliseconds") + "Z",
-        etl_batch_id=f"etl-{int(fetched_at.replace(tzinfo=dt.timezone.utc).timestamp() * 1000)}",
+        **_lineage(fetched_at),
         author=author,
     )
     if silver_path:
@@ -467,10 +479,7 @@ def ingest_payload(
         bronze_to_observations(bronze),
         city,
         state,
-        source_timestamp=fetched_at.isoformat(timespec="milliseconds") + "Z",
-        # fetched_at is naive-UTC by convention; pin tzinfo before
-        # .timestamp() so the batch id doesn't shift on non-UTC hosts.
-        etl_batch_id=f"etl-{int(fetched_at.replace(tzinfo=dt.timezone.utc).timestamp() * 1000)}",
+        **_lineage(fetched_at),
         api_request_id=api_request_id,
         author=author,
     )
@@ -603,17 +612,9 @@ def _feed_oracle() -> str:
     """
 
 
-# etl batch id the registry's pinned FEED_FETCHED_AT produces — the same
-# derivation ingest_feed_stations applies, evaluated once so the oracle
-# can embed it as a literal.
-_FEED_BATCH_ID = "etl-{}".format(
-    int(
-        dt.datetime.fromisoformat(FEED_FETCHED_AT)
-        .replace(tzinfo=dt.timezone.utc)
-        .timestamp()
-        * 1000
-    )
-)
+# the lineage stamp the registry's pinned FEED_FETCHED_AT produces, derived
+# once so the oracles can embed the batch id as a literal
+_FEED_LINEAGE = _lineage(dt.datetime.fromisoformat(FEED_FETCHED_AT))
 
 
 def feed_station_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -646,8 +647,7 @@ def feed_station_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     silver = enrich_stations(
         bronze_to_observations(bronze, keep=("latitude", "longitude")),
-        source_timestamp=FEED_FETCHED_AT + ".000Z",
-        etl_batch_id=_FEED_BATCH_ID,
+        **_FEED_LINEAGE,
     )
     return (
         silver.groupBy(
@@ -709,7 +709,7 @@ def _feed_station_oracle() -> str:
                {_sql_avg4("humidity")} AS avg_humidity,
                {_sql_sum2("rain_mm")} AS total_rain_mm,
                {_sql_fr("max(gust)", 4)} AS max_gust_mps,
-               '{_FEED_BATCH_ID}' AS etl_batch_id
+               '{_FEED_LINEAGE["etl_batch_id"]}' AS etl_batch_id
         FROM obs
         GROUP BY 1, 2
         ORDER BY 1, 2
@@ -743,8 +743,7 @@ def feed_station_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     silver = enrich_stations(
         bronze_to_observations(bronze, keep=("latitude", "longitude")),
-        source_timestamp=FEED_FETCHED_AT + ".000Z",
-        etl_batch_id=_FEED_BATCH_ID,
+        **_FEED_LINEAGE,
     )
     return (
         silver.groupBy(

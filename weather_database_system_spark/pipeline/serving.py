@@ -20,14 +20,13 @@ import datetime as dt
 from typing import Any
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from weather_database_system_spark.pipeline.cache import (
     classify_freshness,
     read_snapshot,
     ttl_remaining,
 )
-from weather_database_system_spark.pipeline.warehouse import read_monthly
+from weather_database_system_spark.pipeline.warehouse import city_is, read_monthly
 
 SERVING_COLUMNS = ("city", "month", "avg_temp_c", "total_rain_mm", "warehouse_load_time")
 
@@ -106,7 +105,7 @@ def serve_monthly(
     try:
         rows = (
             read_monthly(spark, warehouse_root)
-            .filter(F.col("city") == city)
+            .filter(city_is(city))
             .select(*SERVING_COLUMNS)
             .collect()
         )

@@ -26,8 +26,9 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import re
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from weather_database_system_spark.pipeline.schemas import (
@@ -139,6 +140,17 @@ def read_monthly(spark: SparkSession, root: str) -> DataFrame:
     The physical layout carries a ``month_part`` partition-directory copy
     of ``month``; projecting the contract columns drops it."""
     return spark.read.schema(MONTHLY_SCHEMA).parquet(monthly_path(root)).select(*MONTHLY_COLUMNS)
+
+
+def city_is(city: str) -> Column:
+    """The rows of ``city``, matched case-insensitively as the snapshot key
+    folds it (``cache._key``). The predicate depends only on
+    ``city.lower()``, so every spelling that shares a snapshot file reads
+    the same rows. A case-insensitive regex rather than ``lower()``:
+    Spark's ``lower`` loads the ICU case mappings on first use, about
+    0.8 s once per JVM (Spark 4.1, 4-cpu host), which the first refresh
+    or fallback of a process would pay."""
+    return F.col("city").rlike("(?iu)^" + re.escape(city.lower()) + "$")
 
 
 def _monthly_for(
