@@ -188,7 +188,7 @@ def test_cli_index_ops_inventory_and_sweep(tmp_path, capsys):
     import json as _json
     import os
 
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         INDEX_MANIFEST,
         write_index_marker,
     )

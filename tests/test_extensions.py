@@ -3668,7 +3668,10 @@ def test_lease_race_across_processes(spark, tmp_path):
     from weather_database_system_spark.operators.textan import (
         build_bm25_index,
     )
-    from weather_database_system_spark.session import ensure_index, slot_live
+    from weather_database_system_spark.indexstore import (
+        ensure_index,
+        slot_live,
+    )
     from weather_database_system_spark.sources.star import load_table
 
     docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
@@ -4254,11 +4257,11 @@ def test_ivf_snapshot_immutable_under_diverging_append(spark, tmp_path, monkeypa
         ann_ivf_query_prebuilt,
         append_ivf_vectors,
     )
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         list_generations,
-        scratch_path,
         snapshot_generation,
     )
+    from weather_database_system_spark.session import scratch_path
 
     monkeypatch.setenv("WDSS_SCRATCH_DIR", str(tmp_path / "scratch"))
     first = [tuple(r) for r in ann_ivf_prebuilt_snapshot(spark, SF_SMOKE).collect()]
@@ -4278,7 +4281,7 @@ def test_ivf_snapshot_immutable_under_diverging_append(spark, tmp_path, monkeypa
     # diverge LIVE: append new vector ids into the live generation's
     # cell directories (the snapshot's directories must not move)
     from weather_database_system_spark.operators.dedup import _emb_double
-    from weather_database_system_spark.session import slot_live
+    from weather_database_system_spark.indexstore import slot_live
     from pyspark.sql import functions as F
 
     batch = (
@@ -4313,7 +4316,7 @@ def test_migrate_flat_slot_contracts(spark, tmp_path):
         ann_ivf_query_prebuilt,
         build_ivf_index,
     )
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         INDEX_MANIFEST,
         list_generations,
         migrate_flat_slot,
@@ -4355,7 +4358,7 @@ def test_index_marker_and_swap_dir_contracts(tmp_path):
     prior crash) is cleared rather than tripping the swap."""
     import json
 
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         INDEX_MARKER,
         index_is_current,
         swap_dir,
@@ -4408,7 +4411,7 @@ def test_manifest_generation_contracts(tmp_path):
     resolves to the slot itself; an empty slot to None."""
     import os
 
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         INDEX_MANIFEST,
         INDEX_MARKER,
         new_generation_path,
@@ -4446,7 +4449,9 @@ def test_manifest_generation_contracts(tmp_path):
     # ... it is reclaimed by the age-gated sweep instead — but only once
     # old enough to be a certainly-abandoned half-build, and the sweep
     # never touches the live or any stamped generation
-    from weather_database_system_spark.session import sweep_stale_generations
+    from weather_database_system_spark.indexstore import (
+        sweep_stale_generations,
+    )
 
     assert sweep_stale_generations(slot) == []  # too young: in-flight?
     assert os.path.isdir(g_crash)
@@ -4473,7 +4478,7 @@ def test_manifest_generation_contracts(tmp_path):
     # chained append marker keeps the generation eligible for manifest-
     # loss recovery — previously an append DELETED the marker, so this
     # exact recovery silently reverted to the pre-append ancestor g3
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         append_index_marker,
         index_is_current,
         read_index_marker,
@@ -4519,7 +4524,7 @@ def test_manifest_generation_contracts(tmp_path):
     # mkdir is the claim: a racing builder that already created the next
     # number forces the claimer onto the one after — two processes can
     # never build into the same generation directory
-    from weather_database_system_spark.session import claim_new_generation
+    from weather_database_system_spark.indexstore import claim_new_generation
 
     os.makedirs(os.path.join(slot, "gen-0005"))  # the "other process"
     claimed = claim_new_generation(slot)
@@ -4538,7 +4543,7 @@ def _lease_worker(args):
     import sys
 
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    from weather_database_system_spark.session import slot_writer_lease
+    from weather_database_system_spark.indexstore import slot_writer_lease
 
     for i in range(n):
         with slot_writer_lease(slot, f"w{wid}", wait_s=30):
@@ -4560,7 +4565,7 @@ def _fence_promote_worker(args):
 
     slot, = args
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         INDEX_LEASE,
         claim_new_generation,
         promote_generation,
@@ -4630,7 +4635,7 @@ def test_slot_writer_lease_contracts(tmp_path):
 
     import pytest as _pytest
 
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         INDEX_LEASE,
         INDEX_MANIFEST,
         SlotBusyError,
@@ -4739,7 +4744,7 @@ def test_lease_takeover_atomic_and_heartbeat(tmp_path):
 
     import pytest as _pytest
 
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         INDEX_LEASE,
         INDEX_MANIFEST,
         SlotBusyError,
@@ -4858,7 +4863,7 @@ def test_lease_path_recomputed_across_migration(tmp_path):
 
     import pytest as _pytest
 
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         INDEX_LEASE,
         INDEX_MANIFEST,
         SlotBusyError,
@@ -4933,7 +4938,7 @@ def test_promote_fencing_rejects_taken_over_writer(tmp_path):
 
     import pytest as _pytest
 
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         INDEX_LEASE,
         INDEX_MANIFEST,
         FencedWriterError,
@@ -5026,7 +5031,7 @@ def test_promote_fencing_rejects_taken_over_writer(tmp_path):
 
     # fence counter recovery: lose the counter file — the next lease
     # re-derives monotonicity from the manifest's published fence
-    from weather_database_system_spark.session import INDEX_FENCE
+    from weather_database_system_spark.indexstore import INDEX_FENCE
 
     os.remove(os.path.join(slot, INDEX_FENCE))
     with slot_writer_lease(slot, "post-loss"):
@@ -5052,7 +5057,7 @@ def test_promote_fence_gate_is_atomic_under_lock(tmp_path):
 
     import pytest as _pytest
 
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         INDEX_MANIFEST,
         PROMOTE_LOCK,
         FencedWriterError,
@@ -5124,7 +5129,7 @@ def test_fenced_writes_reject_zombie_before_successor_publishes(tmp_path):
     import threading
     import time
 
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         INDEX_LEASE,
         INDEX_MANIFEST,
         FencedWriterError,
@@ -5197,7 +5202,7 @@ def test_fenced_writes_reject_zombie_before_successor_publishes(tmp_path):
     assert resolve_generation(slot) == g1
     meta, n_appends = read_index_marker(g1)
     assert meta == {"kind": "t", "algo": 1} and n_appends == 1
-    from weather_database_system_spark.session import INDEX_MARKER
+    from weather_database_system_spark.indexstore import INDEX_MARKER
 
     with open(os.path.join(g1, INDEX_MARKER), encoding="utf-8") as fh:
         recs = [e.get("rec") for e in json.load(fh)["appends"]]
@@ -5222,7 +5227,7 @@ def test_lease_identity_is_fence_not_inode(tmp_path):
 
     import pytest as _pytest
 
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         INDEX_LEASE,
         INDEX_MANIFEST,
         FencedWriterError,
@@ -5299,8 +5304,8 @@ def test_usurped_claim_never_overwrites_successor_owner(tmp_path, monkeypatch):
     import shutil
     import threading
 
-    from weather_database_system_spark import session as S
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark import indexstore as S
+    from weather_database_system_spark.indexstore import (
         INDEX_LEASE,
         INDEX_MANIFEST,
         FencedWriterError,
@@ -5375,8 +5380,8 @@ def test_prune_never_deletes_currently_published_generation(
     import os
     import threading
 
-    from weather_database_system_spark import session as S
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark import indexstore as S
+    from weather_database_system_spark.indexstore import (
         INDEX_MANIFEST,
         claim_new_generation,
         promote_generation,
@@ -5454,7 +5459,7 @@ def test_fence_bookkeeping_never_reads_as_index_content(tmp_path, monkeypatch):
 
     import pytest as _pytest
 
-    from weather_database_system_spark import session as S
+    from weather_database_system_spark import indexstore as S
 
     # (1) bookkeeping-only slot resolves to None
     slot = str(tmp_path / "emptied")
@@ -5511,7 +5516,7 @@ def test_fence_monotonic_across_processes(tmp_path):
     import multiprocessing as mp
     import os
 
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         INDEX_LEASE,
         INDEX_MANIFEST,
         slot_writer_lease,
@@ -5548,7 +5553,7 @@ def test_ensure_snapshot_state_meta_gate_and_require(tmp_path):
 
     import pytest as _pytest
 
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         INDEX_MANIFEST,
         SnapshotMissingError,
         claim_new_generation,
@@ -5573,7 +5578,7 @@ def test_ensure_snapshot_state_meta_gate_and_require(tmp_path):
         # row-preserving stand-in: new generation, marker carried from
         # the live one (what every family's compact_* does)
         calls["n"] += 1
-        from weather_database_system_spark.session import resolve_generation
+        from weather_database_system_spark.indexstore import resolve_generation
 
         live = resolve_generation(s)
         gen = claim_new_generation(s)
@@ -5627,7 +5632,7 @@ def test_flat_dir_lease_survives_compaction(tmp_path):
 
     import pytest as _pytest
 
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         INDEX_LEASE,
         SlotBusyError,
         _lease_dir,
@@ -5685,7 +5690,9 @@ def test_sweep_ages_by_tree_mtime(tmp_path):
     import os
     import time
 
-    from weather_database_system_spark.session import sweep_stale_generations
+    from weather_database_system_spark.indexstore import (
+        sweep_stale_generations,
+    )
 
     slot = str(tmp_path / "slot")
     gen = os.path.join(slot, "gen-0001")
@@ -5733,7 +5740,7 @@ def test_append_vs_compaction_lease_serializes(spark, tmp_path, monkeypatch):
         build_bm25_index,
         compact_bm25_index,
     )
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         SlotBusyError,
         ensure_index,
         slot_writer_lease,
@@ -5811,7 +5818,7 @@ def test_index_rebuild_never_disturbs_readers(spark, tmp_path, monkeypatch):
         ensure_trigram_postings,
         trigram_query_prebuilt,
     )
-    from weather_database_system_spark.session import resolve_generation
+    from weather_database_system_spark.indexstore import resolve_generation
     from weather_database_system_spark.sources.star import load_table
 
     # mutable sf_dir: the smoke documents table copied somewhere writable
@@ -5871,7 +5878,7 @@ def test_index_catalog_and_snapshot_reads(spark, tmp_path, monkeypatch):
         ensure_bm25_index,
         ensure_trigram_postings,
     )
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         index_catalog,
         list_generations,
     )
@@ -5949,12 +5956,12 @@ def test_bm25_prebuilt_snapshot_time_travel(spark, tmp_path, monkeypatch):
         bm25_query_prebuilt,
         bm25_search,
     )
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         _generation_dirs,
-        scratch_path,
         slot_live,
         snapshot_generation,
     )
+    from weather_database_system_spark.session import scratch_path
 
     monkeypatch.setenv("WDSS_SCRATCH_DIR", str(tmp_path / "scratch"))
     got = bm25_prebuilt_snapshot(spark, SF_SMOKE).collect()
@@ -6012,12 +6019,12 @@ def test_bm25_diverged_snapshot_state_and_answers(spark, tmp_path, monkeypatch):
         bm25_search,
         build_bm25_index,
     )
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         _generation_dirs,
         read_index_marker,
-        scratch_path,
         slot_live,
     )
+    from weather_database_system_spark.session import scratch_path
     from weather_database_system_spark.sources.star import load_table
 
     monkeypatch.setenv("WDSS_SCRATCH_DIR", str(tmp_path / "scratch"))
@@ -6240,7 +6247,8 @@ def test_slot_handles_survive_promotes(spark, tmp_path, monkeypatch):
         ensure_trigram_postings,
         trigram_query_prebuilt,
     )
-    from weather_database_system_spark.session import scratch_path, slot_live
+    from weather_database_system_spark.indexstore import slot_live
+    from weather_database_system_spark.session import scratch_path
     from weather_database_system_spark.sources.star import load_table
 
     monkeypatch.setenv("WDSS_SCRATCH_DIR", str(tmp_path / "scratch"))

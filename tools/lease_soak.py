@@ -92,10 +92,10 @@ def _worker(args) -> None:
         # zombie scenario unreachable locally; blinding the liveness
         # oracle is exactly what being on another host does, and is the
         # ONLY thing this patch changes.
-        from weather_database_system_spark import session as _S
+        from weather_database_system_spark import indexstore as _S
 
         _S._lease_owner_alive = lambda lease: False
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         INDEX_LEASE,
         FencedWriterError,
         SlotBusyError,
@@ -117,7 +117,9 @@ def _worker(args) -> None:
                 # from owner.json, which a worker frozen right after the
                 # claim would read only after resuming, when it already
                 # belongs to the successor
-                from weather_database_system_spark.session import _held_fence
+                from weather_database_system_spark.indexstore import (
+                    _held_fence,
+                )
 
                 fence = _held_fence(slot) or 0
                 # the fence is logged with ENTER because log ORDER lies
@@ -207,7 +209,7 @@ def main() -> int:
 
     import multiprocessing as mp
 
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         INDEX_MANIFEST,
         read_index_marker,
         resolve_generation,
@@ -305,7 +307,7 @@ def main() -> int:
     rt = threading.Thread(target=_reader, daemon=True)
     rt.start()
 
-    from weather_database_system_spark.session import INDEX_LEASE
+    from weather_database_system_spark.indexstore import INDEX_LEASE
 
     def holder_wid() -> int | None:
         """wid of the CURRENT lease holder (None when the lease is free):

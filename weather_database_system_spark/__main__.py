@@ -191,11 +191,11 @@ def _cmd_index_ops(args: argparse.Namespace) -> int:
     a box with no executors."""
     import os
 
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         index_catalog,
-        scratch_root,
         sweep_stale_generations,
     )
+    from weather_database_system_spark.session import scratch_root
 
     root = scratch_root(args.scratch)
     catalog = index_catalog(root)
@@ -226,7 +226,7 @@ def _cmd_index_ops(args: argparse.Namespace) -> int:
         catalog = index_catalog(root)
     bad = 0
     if args.check:
-        from weather_database_system_spark.session import (
+        from weather_database_system_spark.indexstore import (
             resolve_generation,
             verify_index_files,
         )

@@ -828,7 +828,7 @@ def append_dedup_index(docs: DataFrame, path: str) -> None:
     never silently drops rows). Ingest loops pass the SLOT path: every
     call re-resolves the live generation (session.slot_live), so appends
     keep landing in the current generation across compaction promotes."""
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         append_index_marker,
         slot_live,
         slot_writer_lease,
@@ -866,7 +866,7 @@ def compact_dedup_index(spark: SparkSession, path: str) -> str:
     explicit flat directories swap in place
     (session.compact_into_generation). Accepts a slot path (re-resolved
     to the live generation). Returns the live index path."""
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         compact_into_generation,
         slot_live,
         slot_writer_lease,
@@ -901,11 +901,11 @@ def ensure_dedup_index(spark: SparkSession, sf_dir: str) -> str:
     stamped AFTER the append so the marker asserts the full recorded
     two-generation state. Repeated calls (sweeps, the nprobe-style
     twins, cold sessions) reuse it untouched."""
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         ensure_index,
-        scratch_path,
         source_signature,
     )
+    from weather_database_system_spark.session import scratch_path
 
     meta = {
         "kind": "dedup_index",
@@ -969,7 +969,7 @@ def dedup_against_index_prebuilt(
     even collide with index doc_ids without cross-contaminating the
     probe sides. Default: the registry's pinned odd-doc_id half,
     keeping the DuckDB oracle hermetic."""
-    from weather_database_system_spark.session import slot_live
+    from weather_database_system_spark.indexstore import slot_live
 
     if path is None:
         path = ensure_dedup_index(spark, sf_dir)
@@ -1053,12 +1053,12 @@ def dedup_prebuilt_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-joins (plain column equality treats NULL ≠ NULL, which would
     flag every 'unique' row as divergent). Same in-query oracle +
     claim."""
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         ensure_snapshot_state,
-        scratch_path,
         slot_live,
         snapshot_equals_live_claim,
     )
+    from weather_database_system_spark.session import scratch_path
 
     ensure_dedup_index(spark, sf_dir)
     slot = scratch_path("dedup_index", sf_dir)

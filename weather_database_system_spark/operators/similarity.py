@@ -871,11 +871,11 @@ def ensure_ivf_index(
     tools/index_economics.py) and lives in its OWN slot: sharing the
     registry slot would make the two configurations endlessly rebuild
     over each other's marker."""
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         ensure_index,
-        scratch_path,
         source_signature,
     )
+    from weather_database_system_spark.session import scratch_path
 
     meta = {
         "kind": "ivf_index",
@@ -922,7 +922,7 @@ def append_ivf_vectors(spark: SparkSession, vecs: DataFrame, path: str) -> None:
     retrain. Ingest loops pass the SLOT path: every call re-resolves the
     live generation (session.slot_live), so appends keep landing in the
     current generation across compaction promotes."""
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         append_index_marker,
         slot_live,
         slot_writer_lease,
@@ -952,7 +952,7 @@ def compact_ivf_assignments(spark: SparkSession, path: str) -> str:
     to the live generation). Returns the live index path."""
     import shutil
 
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         compact_into_generation,
         slot_live,
         slot_writer_lease,
@@ -1077,7 +1077,8 @@ def ann_ivf_query_prebuilt(
     norms come from the provided vectors, so an arbitrary embedding
     finds its nearest indexed neighbors. Default: the registry's pinned
     first-N_QUERIES corpus rows, keeping the DuckDB oracle hermetic."""
-    from weather_database_system_spark.session import scratch_path, slot_live
+    from weather_database_system_spark.indexstore import slot_live
+    from weather_database_system_spark.session import scratch_path
 
     path = slot_live(
         path if path is not None else scratch_path("ivf_index", sf_dir)
@@ -1186,11 +1187,11 @@ def ann_ivf_prebuilt_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
     is not a pure build of its source — so the stamp here asserts the
     FULL recorded lifecycle, not just the bulk build), and repeated
     calls reuse it instead of retraining Lloyd per sweep."""
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         ensure_index,
-        scratch_path,
         source_signature,
     )
+    from weather_database_system_spark.session import scratch_path
 
     meta = {
         "kind": "ivf_index_appended",
@@ -1292,12 +1293,12 @@ def ann_ivf_prebuilt_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     retained generation is a faithful, readable snapshot. Snapshot
     immutability under a post-snapshot append that diverges live is
     pytest-pinned for the family lifecycle."""
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         ensure_snapshot_state,
-        scratch_path,
         slot_live,
         snapshot_equals_live_claim,
     )
+    from weather_database_system_spark.session import scratch_path
 
     ensure_ivf_index(spark, sf_dir)
     slot = scratch_path("ivf_index", sf_dir)
@@ -1682,7 +1683,7 @@ def append_pq_codes(spark: SparkSession, vecs: DataFrame, path: str) -> None:
     writer lease (append vs compaction serializes or fails loudly).
     Ingest loops pass the SLOT path: every call re-resolves the live
     generation (session.slot_live)."""
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         append_index_marker,
         slot_live,
         slot_writer_lease,
@@ -1708,7 +1709,7 @@ def compact_pq_codes(spark: SparkSession, path: str) -> str:
     the live index path."""
     import shutil
 
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         compact_into_generation,
         slot_live,
         slot_writer_lease,
@@ -1737,11 +1738,11 @@ def ensure_pq_index(spark: SparkSession, sf_dir: str) -> str:
     bulk encode of the base half (candidate vec_id % 2 == 0), then one
     ``append_pq_codes`` ingest batch of the rest — stamped AFTER the
     append so the marker asserts the recorded two-generation state."""
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         ensure_index,
-        scratch_path,
         source_signature,
     )
+    from weather_database_system_spark.session import scratch_path
 
     meta = {
         "kind": "pq_index",
@@ -1795,7 +1796,8 @@ def ann_pq_query_prebuilt(
     out-of-corpus queries PQ's normal case (Jégou et al. 2011 §III).
     Default: the registry's pinned first-N_QUERIES corpus rows, keeping
     the DuckDB oracle hermetic."""
-    from weather_database_system_spark.session import scratch_path, slot_live
+    from weather_database_system_spark.indexstore import slot_live
+    from weather_database_system_spark.session import scratch_path
 
     path = slot_live(
         path if path is not None else scratch_path("pq_index", sf_dir)
@@ -1962,11 +1964,11 @@ def ensure_ivfpq_index(spark: SparkSession, sf_dir: str) -> str:
     """Marker-gated build of the IVF+PQ slot at the DEPLOYMENT geometry
     (√N cells — the configuration the sizing rule recommends is exactly
     what this index stores and the registry entry oracle-checks)."""
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         ensure_index,
-        scratch_path,
         source_signature,
     )
+    from weather_database_system_spark.session import scratch_path
 
     meta = {
         "kind": "ivfpq_index",
@@ -1998,7 +2000,7 @@ def append_ivfpq_vectors(spark: SparkSession, vecs: DataFrame, path: str) -> Non
     append_pq_codes hazard — a duplicate would double one subspace's
     distance). Chains the append onto the generation's stamp and runs
     under the slot writer lease, exactly as the other five families."""
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         append_index_marker,
         slot_live,
         slot_writer_lease,
@@ -2023,7 +2025,7 @@ def compact_ivfpq_codes(spark: SparkSession, path: str) -> str:
     pointer; flat directories swap in place. Returns the live path."""
     import shutil
 
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         compact_into_generation,
         slot_live,
         slot_writer_lease,
@@ -2067,7 +2069,8 @@ def ann_ivfpq_query_prebuilt(
     contribution). ``queries_df``: the caller's (query_id long, emb
     array<double>) rows, in-corpus or not — routing and the ADC table
     both derive from the raw caller vector."""
-    from weather_database_system_spark.session import scratch_path, slot_live
+    from weather_database_system_spark.indexstore import slot_live
+    from weather_database_system_spark.session import scratch_path
 
     path = slot_live(
         path if path is not None else scratch_path("ivfpq_index", sf_dir)
@@ -2312,11 +2315,11 @@ def ensure_ivfpq_residual_index(spark: SparkSession, sf_dir: str) -> str:
     """Marker-gated build of the residual-composition slot (√N cells —
     the same deployment geometry as the raw composition, its own slot
     so the two encodings never rebuild over each other's marker)."""
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         ensure_index,
-        scratch_path,
         source_signature,
     )
+    from weather_database_system_spark.session import scratch_path
 
     meta = {
         "kind": "ivfpq_res_index",
@@ -2346,7 +2349,7 @@ def append_ivfpq_residual_vectors(
     — all pure functions, so append ≡ rebuild exactly (the same
     property as every other family; pytest-pinned) — and blind-append
     under the writer lease with a chained marker."""
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         append_index_marker,
         slot_live,
         slot_writer_lease,
@@ -2381,7 +2384,8 @@ def ann_ivfpq_residual_query_prebuilt(
     cell's residual frame. Same index-priced plan shape as the raw
     composition: one cell-pruned codes scan, KB-scale broadcasts, raw
     candidate floats nowhere."""
-    from weather_database_system_spark.session import scratch_path, slot_live
+    from weather_database_system_spark.indexstore import slot_live
+    from weather_database_system_spark.session import scratch_path
 
     path = slot_live(
         path if path is not None else scratch_path("ivfpq_res_index", sf_dir)
@@ -2481,12 +2485,12 @@ def ann_pq_prebuilt_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     spine + claims as ann_pq_prebuilt (_pq_checked), plus the
     engine-decided ``snapshot_equals_live`` claim over the raw ADC
     outputs — pinned TRUE by the row-preserving compaction."""
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         ensure_snapshot_state,
-        scratch_path,
         slot_live,
         snapshot_equals_live_claim,
     )
+    from weather_database_system_spark.session import scratch_path
 
     ensure_pq_index(spark, sf_dir)
     slot = scratch_path("pq_index", sf_dir)
@@ -2524,12 +2528,12 @@ def ann_ivfpq_prebuilt_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     claims as ann_ivfpq_prebuilt (_ivfpq_checked over the snapshot path)
     plus the engine-decided ``snapshot_equals_live`` claim over the raw
     ADC outputs, pinned TRUE by the row-preserving compaction."""
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         ensure_snapshot_state,
-        scratch_path,
         slot_live,
         snapshot_equals_live_claim,
     )
+    from weather_database_system_spark.session import scratch_path
 
     ensure_ivfpq_index(spark, sf_dir)
     slot = scratch_path("ivfpq_index", sf_dir)

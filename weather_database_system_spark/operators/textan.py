@@ -393,7 +393,7 @@ def append_bm25_docs(docs: DataFrame, path: str) -> None:
     in a generation the compactor is about to supersede. Ingest loops
     pass the SLOT path: every call re-resolves the live generation
     (session.slot_live) inside the lease."""
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         append_index_marker,
         slot_live,
         slot_writer_lease,
@@ -410,7 +410,7 @@ def compact_bm25_index(spark: SparkSession, path: str) -> str:
     appended file generations. Manifest-managed slots promote an atomic
     pointer; explicit flat directories swap in place
     (session.compact_into_generation). Returns the live index path."""
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         compact_into_generation,
         slot_live,
         slot_writer_lease,
@@ -449,7 +449,10 @@ def ensure_bm25_index(spark: SparkSession, sf_dir: str) -> str:
     bytes, the two-generation index answers bit-identically to a
     one-shot build of the full corpus (the property the oracle then
     proves end-to-end)."""
-    from weather_database_system_spark.session import ensure_index, source_signature
+    from weather_database_system_spark.indexstore import (
+        ensure_index,
+        source_signature,
+    )
 
     meta = {
         "kind": "bm25_index",
@@ -492,7 +495,7 @@ def bm25_query_prebuilt(
     its DuckDB oracle stays hermetic. Any term set rides the same
     pushed ``In`` filter — query cost scales with the chosen terms'
     posting lists, never the index."""
-    from weather_database_system_spark.session import slot_live
+    from weather_database_system_spark.indexstore import slot_live
 
     terms = tuple(terms) if terms is not None else BM25_QUERY
     path = slot_live(path if path is not None else _bm25_index_path(sf_dir))
@@ -549,7 +552,7 @@ def bm25_prebuilt_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pytest-pinned)."""
     import os
 
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         slot_live,
         snapshot_generation,
     )
@@ -609,16 +612,16 @@ def _ensure_bm25_diverged_state(
     scratch once rather than serving an undiverged state."""
     import shutil
 
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         ensure_index,
         ensure_snapshot_state,
         read_index_marker,
         resolve_generation,
-        scratch_path,
         slot_live,
         snapshot_generation,
         source_signature,
     )
+    from weather_database_system_spark.session import scratch_path
 
     slot = scratch_path("bm25_diverged", sf_dir)
     meta = {
@@ -1393,7 +1396,7 @@ def append_trigram_postings(docs: DataFrame, path: str) -> None:
     Ingest loops pass the SLOT path: every call re-resolves the live
     generation (session.slot_live) inside the lease, so appends keep
     landing in the current generation across compaction promotes."""
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         append_index_marker,
         slot_live,
         slot_writer_lease,
@@ -1419,7 +1422,7 @@ def compact_trigram_postings(spark: SparkSession, path: str) -> str:
     flat directory gets the recoverable in-place rename-aside (ADVICE
     r14 #3). Accepts a slot path (re-resolved to the live generation).
     Returns the live path after compaction."""
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         compact_into_generation,
         slot_live,
         slot_writer_lease,
@@ -1485,7 +1488,10 @@ def ensure_trigram_postings(spark: SparkSession, sf_dir: str) -> str:
     a rebuild writes a NEW generation and atomically promotes the slot's
     manifest pointer (session.ensure_index), so readers of the previous
     generation are never disturbed."""
-    from weather_database_system_spark.session import ensure_index, source_signature
+    from weather_database_system_spark.indexstore import (
+        ensure_index,
+        source_signature,
+    )
 
     meta = {
         "kind": "trigram_postings",
@@ -1525,7 +1531,7 @@ def trigram_query_prebuilt(
     contract) rides the same pushed ``In(tri, ...)`` probe + contains
     verify."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    from weather_database_system_spark.session import slot_live
+    from weather_database_system_spark.indexstore import slot_live
 
     needle = needle if needle is not None else TRIGRAM_NEEDLE
     path = slot_live(path if path is not None else _trigram_index_path(sf_dir))
@@ -1548,7 +1554,7 @@ def trigram_prebuilt_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     answers the pinned search as of the previous promote, with the
     engine-decided ``snapshot_equals_live`` claim pinned TRUE by the
     row-preserving compaction; same unindexed-LIKE oracle + claim."""
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         ensure_snapshot_state,
         slot_live,
         snapshot_equals_live_claim,

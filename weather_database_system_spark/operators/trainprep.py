@@ -481,7 +481,7 @@ def append_contamination_grams(eval_docs: DataFrame, path: str) -> None:
     generation's stamp (session.append_index_marker) and runs under
     the slot writer lease. Ingest loops pass the SLOT path
     (session.slot_live re-resolves the live generation per call)."""
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         append_index_marker,
         slot_live,
         slot_writer_lease,
@@ -498,7 +498,7 @@ def compact_contamination_index(spark: SparkSession, path: str) -> str:
     one gram-sorted generation again, results unchanged by construction.
     Manifest-managed slots promote an atomic pointer; explicit flat
     directories swap in place (session.compact_into_generation)."""
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         compact_into_generation,
         slot_live,
         slot_writer_lease,
@@ -527,11 +527,11 @@ def ensure_contamination_index(spark: SparkSession, sf_dir: str) -> str:
     ``append_contamination_grams`` batch of the rest — stamped AFTER
     the append so the marker asserts the recorded two-generation
     state. Repeated calls (sweeps, cold sessions) reuse it untouched."""
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         ensure_index,
-        scratch_path,
         source_signature,
     )
+    from weather_database_system_spark.session import scratch_path
 
     meta = {
         "kind": "contamination_index",
@@ -568,7 +568,7 @@ def contamination_query_prebuilt(
     safety is free by construction: every aggregate is countDistinct
     or min, so at-least-once appended index rows cannot change any
     count (pytest-pinned with a retry storm)."""
-    from weather_database_system_spark.session import slot_live
+    from weather_database_system_spark.indexstore import slot_live
 
     if path is None:
         path = ensure_contamination_index(spark, sf_dir)
@@ -624,12 +624,12 @@ def contamination_prebuilt_snapshot(spark: SparkSession, sf_dir: str) -> DataFra
     after later suites were appended and compacted. Engine-decided
     ``snapshot_equals_live`` claim pinned TRUE by the row-preserving
     compaction; same full-replay oracle + claim."""
-    from weather_database_system_spark.session import (
+    from weather_database_system_spark.indexstore import (
         ensure_snapshot_state,
-        scratch_path,
         slot_live,
         snapshot_equals_live_claim,
     )
+    from weather_database_system_spark.session import scratch_path
 
     ensure_contamination_index(spark, sf_dir)
     slot = scratch_path("contamination_index", sf_dir)
