@@ -91,6 +91,15 @@ SMOKE_SF_DIR = "/root/testdata/sf0.001"
 # Post-r19 maintenance: REMOVED corpus_dedup_apply and split_by_cluster
 # (r14): dedup_clusters, which both build on, now runs star contraction
 # instead of the deleted min-label fixpoint.
+#
+# Stored-index lifecycle maintenance: REMOVED every stored-index entry
+# still in the map — bm25_prebuilt, bm25_prebuilt_snapshot,
+# bm25_prebuilt_diverged_snapshot, contamination_against_index_prebuilt,
+# contamination_prebuilt_snapshot, dedup_against_index_prebuilt,
+# dedup_prebuilt_snapshot, trigram_search_prebuilt and
+# trigram_prebuilt_snapshot: their builds, appends, compactions and
+# snapshot gates now run through indexstore's generic lifecycle over one
+# IndexSpec per family (the IVF/PQ/IVF-PQ entries were already absent).
 _LAST_VERIFIED = {
     # --- last green in r13 ---
     **dict.fromkeys([
@@ -156,11 +165,10 @@ _LAST_VERIFIED = {
     ], 15),
     # --- last green in r16 ---
     **dict.fromkeys([
-        "ann_ivf_label", "asof_attribution", "bm25_prebuilt",
-        "bm25_prebuilt_snapshot", "bm25_search", "changepoint_mean_shift",
-        "coercion_fill_policy", "contamination_against_index_prebuilt",
+        "ann_ivf_label", "asof_attribution",
+        "bm25_search", "changepoint_mean_shift",
+        "coercion_fill_policy",
         "corpus_curation", "correlation_matrix",
-        "dedup_against_index_prebuilt",
         "duplicate_span_extraction", "gap_fill_interpolate", "gap_fill_locf",
         "lang_id_stopword", "linear_regression_trend",
         "monthly_filtered", "multimodal_frame_sample", "multimodal_metadata",
@@ -168,7 +176,7 @@ _LAST_VERIFIED = {
         "session_path_analysis", "shipmode_priority_counts",
         "stream_stream_join", "text_quality", "text_token_stats",
         "tfidf_top_terms", "time_weighted_avg",
-        "trigram_search_prebuilt", "udf_tokenize_table",
+        "udf_tokenize_table",
         "weighted_reservoir_sample", "yoy_revenue_delta"
     ], 16),
     # --- last green in r17 ---
@@ -176,8 +184,8 @@ _LAST_VERIFIED = {
         "approx_distinct_users", "array_functions", "bpe_merge_pairs",
         "cache_freshness_ladder", "cache_ttl_introspection",
         "cohort_retention", "conditional_functions",
-        "contamination_prebuilt_snapshot", "datetime_functions",
-        "dedup_prebuilt_snapshot", "feature_scaling", "funnel_conversion",
+        "datetime_functions",
+        "feature_scaling", "funnel_conversion",
         "hll_partial_rollup", "map_functions", "math_functions",
         "multi_band_counts", "quantile_bucket_decile",
         "quantile_bucket_decile_approx", "rfm_segmentation",
@@ -188,13 +196,13 @@ _LAST_VERIFIED = {
         "stream_sliding_window", "stream_tumbling_window",
         "stream_windowed_dedup", "string_functions_extended",
         "tokenizer_fertility", "train_test_split",
-        "trigram_prebuilt_snapshot", "udf_normalize_text"
+        "udf_normalize_text"
     ], 17),
     # --- last green in r18 (driver sample CORRECTNESS_r18.json, minus the
     # --- entries r19 touched again — see the r19 maintenance note) ---
     **dict.fromkeys([
         "pricing_summary", "grouping_sets_revenue", "ann_brute_force",
-        "tfidf_cosine_pairs", "bm25_prebuilt_diverged_snapshot",
+        "tfidf_cosine_pairs",
         "png_decode_features", "bloom_prefilter_semi_join",
         "embedding_pca_project", "contamination_eval_overlap",
         "skyline_pareto", "derived_revenue", "date_normalization",

@@ -37,30 +37,31 @@ def main() -> int:
             .getOrCreate()
         )
 
+    from weather_database_system_spark.indexstore import ensure
     from weather_database_system_spark.operators.dedup import (
+        DEDUP,
         dedup_against_index_prebuilt,
-        ensure_dedup_index,
     )
     from weather_database_system_spark.operators.similarity import (
+        IVF,
+        IVFPQ,
+        IVFPQ_RES,
         NPROBE,
+        PQ,
         ann_ivf_query_prebuilt,
         ann_ivfpq_query_prebuilt,
         ann_ivfpq_residual_query_prebuilt,
         ann_pq_query_prebuilt,
-        ensure_ivf_index,
-        ensure_ivfpq_index,
-        ensure_ivfpq_residual_index,
-        ensure_pq_index,
     )
     from weather_database_system_spark.operators.textan import (
+        BM25,
+        TRIGRAM,
         bm25_query_prebuilt,
-        ensure_bm25_index,
-        ensure_trigram_postings,
         trigram_query_prebuilt,
     )
     from weather_database_system_spark.operators.trainprep import (
+        CONTAMINATION,
         contamination_query_prebuilt,
-        ensure_contamination_index,
     )
 
     def answers(spark, tri_path, ivf_path, ddp_path, pq_path, bm_path, ct_path,
@@ -90,14 +91,14 @@ def main() -> int:
     # --- session A: build + answer -------------------------------------
     spark = fresh_session()
     spark.sparkContext.setLogLevel("ERROR")
-    tri_path = ensure_trigram_postings(spark, sf_dir)
-    ivf_path = ensure_ivf_index(spark, sf_dir)
-    ddp_path = ensure_dedup_index(spark, sf_dir)
-    pq_path = ensure_pq_index(spark, sf_dir)
-    bm_path = ensure_bm25_index(spark, sf_dir)
-    ct_path = ensure_contamination_index(spark, sf_dir)
-    ipq_path = ensure_ivfpq_index(spark, sf_dir)
-    ipr_path = ensure_ivfpq_residual_index(spark, sf_dir)
+    tri_path = ensure(TRIGRAM, spark, sf_dir)
+    ivf_path = ensure(IVF, spark, sf_dir)
+    ddp_path = ensure(DEDUP, spark, sf_dir)
+    pq_path = ensure(PQ, spark, sf_dir)
+    bm_path = ensure(BM25, spark, sf_dir)
+    ct_path = ensure(CONTAMINATION, spark, sf_dir)
+    ipq_path = ensure(IVFPQ, spark, sf_dir)
+    ipr_path = ensure(IVFPQ_RES, spark, sf_dir)
     warm = answers(spark, tri_path, ivf_path, ddp_path, pq_path, bm_path,
                    ct_path, ipq_path, ipr_path)
     spark.stop()

@@ -43,10 +43,8 @@ def main() -> int:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    from weather_database_system_spark.operators.textan import (
-        append_bm25_docs,
-        compact_bm25_index,
-    )
+    from weather_database_system_spark.indexstore import append, compact
+    from weather_database_system_spark.operators.textan import BM25
 
     if role == "appender":
         for i in range(n_ops):
@@ -57,10 +55,10 @@ def main() -> int:
                 ],
                 "doc_id long, text string",
             )
-            append_bm25_docs(batch, slot)  # slot path: re-resolves live
+            append(BM25, batch, slot)  # slot path: re-resolves live
     elif role == "compactor":
         for _ in range(n_ops):
-            compact_bm25_index(spark, slot)
+            compact(BM25, spark, slot)
             time.sleep(0.2)
     else:
         raise SystemExit(f"unknown role {role!r}")

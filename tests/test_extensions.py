@@ -3334,11 +3334,11 @@ def test_trigram_posting_append_equals_rebuild(spark, tmp_path):
     landed as extra files (the graceful-pruning-degradation claim)."""
     import glob
 
+    from weather_database_system_spark.indexstore import append, build
     from weather_database_system_spark.operators.textan import (
+        TRIGRAM,
         _needle_tris,
         _verify_contains,
-        append_trigram_postings,
-        build_trigram_postings,
     )
     from pyspark.sql import functions as F
 
@@ -3369,11 +3369,11 @@ def test_trigram_posting_append_equals_rebuild(spark, tmp_path):
 
     whole = str(tmp_path / "idx_whole")
     incr = str(tmp_path / "idx_incr")
-    build_trigram_postings(docs, whole)
+    build(TRIGRAM, docs, whole)
     batch1, batch2 = docs.filter("doc_id <= 2"), docs.filter("doc_id > 2")
-    build_trigram_postings(batch1, incr)
+    build(TRIGRAM, batch1, incr)
     n_files_before = len(glob.glob(f"{incr}/*.parquet"))
-    append_trigram_postings(batch2, incr)
+    append(TRIGRAM, batch2, incr)
     assert len(glob.glob(f"{incr}/*.parquet")) > n_files_before
 
     got_whole = search(spark.read.parquet(whole))
@@ -3451,7 +3451,7 @@ def test_density_grid_nonneg_guard_actually_fires(spark):
 
 
 def test_trigram_posting_compaction_preserves_search(spark, tmp_path):
-    """compact_trigram_postings must be a row-preserving layout rewrite:
+    """compact(TRIGRAM, …) must be a row-preserving layout rewrite:
     after several appended generations, compaction reduces the file
     count back to one generation while every search result and the
     total posting multiset stay identical."""
@@ -3459,12 +3459,11 @@ def test_trigram_posting_compaction_preserves_search(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
+    from weather_database_system_spark.indexstore import append, build, compact
     from weather_database_system_spark.operators.textan import (
+        TRIGRAM,
         _needle_tris,
         _verify_contains,
-        append_trigram_postings,
-        build_trigram_postings,
-        compact_trigram_postings,
     )
 
     docs = spark.createDataFrame(
@@ -3479,15 +3478,15 @@ def test_trigram_posting_compaction_preserves_search(spark, tmp_path):
         "doc_id long, lang string, text string",
     )
     idx = str(tmp_path / "idx")
-    build_trigram_postings(docs.filter("doc_id <= 2"), idx)
-    append_trigram_postings(docs.filter("doc_id in (3, 4)"), idx)
-    append_trigram_postings(docs.filter("doc_id >= 5"), idx)
+    build(TRIGRAM, docs.filter("doc_id <= 2"), idx)
+    append(TRIGRAM, docs.filter("doc_id in (3, 4)"), idx)
+    append(TRIGRAM, docs.filter("doc_id >= 5"), idx)
     n_files_appended = len(glob.glob(f"{idx}/*.parquet"))
     before = sorted(
         tuple(r) for r in spark.read.parquet(idx).collect()
     )
 
-    compact_trigram_postings(spark, idx)
+    compact(TRIGRAM, spark, idx)
     assert len(glob.glob(f"{idx}/*.parquet")) < n_files_appended
     after = sorted(tuple(r) for r in spark.read.parquet(idx).collect())
     assert after == before  # row-preserving rewrite
@@ -3513,10 +3512,10 @@ def test_trigram_duplicate_appended_postings_never_drop_matches(spark, tmp_path)
     equality pushed a true match's count to 2×len(tris) and silently
     DROPPED it. Pin: doubling a batch's postings leaves the search
     result identical to the clean index."""
+    from weather_database_system_spark.indexstore import append, build
     from weather_database_system_spark.operators.textan import (
+        TRIGRAM,
         TRIGRAM_NEEDLE,
-        append_trigram_postings,
-        build_trigram_postings,
         trigram_query_prebuilt,
     )
     from weather_database_system_spark.sources.star import load_table
@@ -3524,14 +3523,14 @@ def test_trigram_duplicate_appended_postings_never_drop_matches(spark, tmp_path)
     sf = SF_SMOKE
     docs = load_table(spark, sf, "documents").select("doc_id", "text")
     idx = str(tmp_path / "postings_dup")
-    build_trigram_postings(docs, idx)
+    build(TRIGRAM, docs, idx)
     baseline = sorted(
         tuple(r) for r in trigram_query_prebuilt(spark, sf, idx).collect()
     )
     assert len(baseline) > 0
     # retry storm: the first half of the corpus appends AGAIN — every
     # match in it would fail the old equality gate
-    append_trigram_postings(docs.filter("doc_id % 2 = 0"), idx)
+    append(TRIGRAM, docs.filter("doc_id % 2 = 0"), idx)
     got = sorted(
         tuple(r) for r in trigram_query_prebuilt(spark, sf, idx).collect()
     )
@@ -3551,16 +3550,14 @@ def _ivf_fixture_vecs(spark, n=40, dims=8):
 def test_ivf_append_equals_bulk_add_base_trained(spark, tmp_path):
     """The FAISS train-then-add contract (r14 VERDICT task #1), in its
     REAL deployment shape: the quantizer is trained on the BASE corpus
-    only, new vectors arrive later. append_ivf_vectors must answer
+    only, new vectors arrive later. append(IVF, …) must answer
     every probe identically to a bulk add of the union against the SAME
     stored centroids — assignment is a pure function of (emb, stored
     centroids), so append ≡ bulk-add exactly (per-cell candidate sets
     AND the stored assignment rows)."""
+    from weather_database_system_spark.indexstore import append, build
     from weather_database_system_spark.operators.similarity import (
-        _assign_cells,
-        _write_ivf_assignments,
-        _write_ivf_centroids,
-        append_ivf_vectors,
+        IVF,
         read_ivf_centroids,
         train_ivf_centroids,
     )
@@ -3570,13 +3567,11 @@ def test_ivf_append_equals_bulk_add_base_trained(spark, tmp_path):
     cents = train_ivf_centroids(base)
 
     appended = str(tmp_path / "ivf_appended")
-    _write_ivf_centroids(spark, cents, appended)
-    _write_ivf_assignments(_assign_cells(base, cents), appended)
-    append_ivf_vectors(spark, batch, appended)
+    build(IVF, base, appended, state={"centroids": cents})
+    append(IVF, batch, appended)
 
     bulk = str(tmp_path / "ivf_bulk")
-    _write_ivf_centroids(spark, cents, bulk)
-    _write_ivf_assignments(_assign_cells(vecs, cents), bulk)
+    build(IVF, vecs, bulk, state={"centroids": cents})
 
     assert read_ivf_centroids(spark, appended) == read_ivf_centroids(spark, bulk)
     a = sorted(
@@ -3595,23 +3590,24 @@ def test_ivf_duplicate_append_and_compaction(spark, tmp_path):
     vectors blind-appended again) must leave ann_ivf_query_prebuilt's
     results unchanged — the query dedups probed candidates on
     (query_id, neighbor_id) before ranking, else a duplicate would
-    occupy two of the top-3 ranks; (2) compact_ivf_assignments is
+    occupy two of the top-3 ranks; (2) compact(IVF, …) is
     row-preserving (multiset identical, duplicates included) and does
     not grow the file count; (3) search results are unchanged by
     compaction."""
     import glob
 
+    from weather_database_system_spark.indexstore import append, build, compact
     from weather_database_system_spark.operators.dedup import _emb_double
     from weather_database_system_spark.operators.similarity import (
+        IVF,
         N_QUERIES,
         ann_ivf_query_prebuilt,
-        append_ivf_vectors,
-        build_ivf_index,
-        compact_ivf_assignments,
+        index_candidates,
     )
 
     path = str(tmp_path / "ivf_dup")
-    build_ivf_index(spark, SF_SMOKE, path)
+    cand = index_candidates(spark, SF_SMOKE)
+    build(IVF, cand, path, state=IVF.train(cand, k_cells=None))  # √N sizing
     clean = [
         tuple(r) for r in ann_ivf_query_prebuilt(spark, SF_SMOKE, path).collect()
     ]
@@ -3624,7 +3620,7 @@ def test_ivf_duplicate_append_and_compaction(spark, tmp_path):
         .filter(f"vec_id >= {N_QUERIES} and vec_id % 2 = 0")
         .select("vec_id", "emb")
     )
-    append_ivf_vectors(spark, retry, path)
+    append(IVF, retry, path)
     dup_rows = spark.read.parquet(f"{path}/assignments").count()
     assert dup_rows == n_rows + retry.count()  # blind append, no merge
     got = [
@@ -3636,7 +3632,7 @@ def test_ivf_duplicate_append_and_compaction(spark, tmp_path):
     before = sorted(
         tuple(r) for r in spark.read.parquet(f"{path}/assignments").collect()
     )
-    compact_ivf_assignments(spark, path)
+    compact(IVF, spark, path)
     after = sorted(
         tuple(r) for r in spark.read.parquet(f"{path}/assignments").collect()
     )
@@ -3665,13 +3661,12 @@ def test_lease_race_across_processes(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from weather_database_system_spark.operators.textan import (
-        build_bm25_index,
-    )
     from weather_database_system_spark.indexstore import (
+        build,
         ensure_index,
         slot_live,
     )
+    from weather_database_system_spark.operators.textan import BM25
     from weather_database_system_spark.sources.star import load_table
 
     docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
@@ -3679,7 +3674,7 @@ def test_lease_race_across_processes(spark, tmp_path):
     ensure_index(
         slot,
         {"kind": "bm25_index", "test": "cross-process-race"},
-        lambda gen: build_bm25_index(docs, gen),
+        lambda gen: build(BM25, docs, gen),
     )
     base_ids = {r.doc_id for r in docs.select("doc_id").collect()}
 
@@ -3745,9 +3740,9 @@ def test_dedup_index_append_equals_rebuild(spark, tmp_path):
     identically."""
     from pyspark.sql import functions as F
 
+    from weather_database_system_spark.indexstore import append, build
     from weather_database_system_spark.operators.dedup import (
-        append_dedup_index,
-        build_dedup_index,
+        DEDUP,
         dedup_against_index_prebuilt,
     )
     from weather_database_system_spark.sources.star import load_table
@@ -3757,9 +3752,9 @@ def test_dedup_index_append_equals_rebuild(spark, tmp_path):
 
     whole = str(tmp_path / "idx_whole")
     incr = str(tmp_path / "idx_incr")
-    build_dedup_index(evens, whole)
-    build_dedup_index(evens.filter(F.pmod("doc_id", F.lit(4)) == 0), incr)
-    append_dedup_index(evens.filter(F.pmod("doc_id", F.lit(4)) == 2), incr)
+    build(DEDUP, evens, whole)
+    build(DEDUP, evens.filter(F.pmod("doc_id", F.lit(4)) == 0), incr)
+    append(DEDUP, evens.filter(F.pmod("doc_id", F.lit(4)) == 2), incr)
 
     for sub in ("digests", "bands"):
         a = sorted(
@@ -3788,14 +3783,13 @@ def test_dedup_index_duplicate_append_and_compaction(spark, tmp_path):
     exactly-once semantics before the bucket cap (an inflated count(*)
     would otherwise push true buckets over BAND_BUCKET_CAP and silently
     flip near_dup verdicts to unique), and min() aggregates absorb
-    duplicate matches. compact_dedup_index is then row-preserving
+    duplicate matches. compact(DEDUP, …) is then row-preserving
     (duplicates included) and leaves the probe unchanged."""
     from pyspark.sql import functions as F
 
+    from weather_database_system_spark.indexstore import append, build, compact
     from weather_database_system_spark.operators.dedup import (
-        append_dedup_index,
-        build_dedup_index,
-        compact_dedup_index,
+        DEDUP,
         dedup_against_index_prebuilt,
     )
     from weather_database_system_spark.sources.star import load_table
@@ -3803,7 +3797,7 @@ def test_dedup_index_duplicate_append_and_compaction(spark, tmp_path):
     docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
     evens = docs.filter(F.pmod("doc_id", F.lit(2)) == 0)
     idx = str(tmp_path / "idx_dup")
-    build_dedup_index(evens, idx)
+    build(DEDUP, evens, idx)
     clean = [
         tuple(r)
         for r in dedup_against_index_prebuilt(spark, SF_SMOKE, idx).collect()
@@ -3811,7 +3805,7 @@ def test_dedup_index_duplicate_append_and_compaction(spark, tmp_path):
     assert any(r[1] != "unique" for r in clean)  # real matches at SF_SMOKE
 
     # retry storm: half the index ingests AGAIN
-    append_dedup_index(evens.filter(F.pmod("doc_id", F.lit(4)) == 0), idx)
+    append(DEDUP, evens.filter(F.pmod("doc_id", F.lit(4)) == 0), idx)
     got = [
         tuple(r)
         for r in dedup_against_index_prebuilt(spark, SF_SMOKE, idx).collect()
@@ -3824,7 +3818,7 @@ def test_dedup_index_duplicate_append_and_compaction(spark, tmp_path):
         )
         for sub in ("digests", "bands")
     }
-    compact_dedup_index(spark, idx)
+    compact(DEDUP, spark, idx)
     for sub in ("digests", "bands"):
         after = sorted(
             tuple(r) for r in spark.read.parquet(f"{idx}/{sub}").collect()
@@ -3840,18 +3834,16 @@ def test_dedup_index_duplicate_append_and_compaction(spark, tmp_path):
 def test_pq_append_equals_bulk_encode_base_trained(spark, tmp_path):
     """FAISS IndexPQ train-then-add, in the real deployment shape:
     codebooks trained on the BASE corpus only, new vectors encoded
-    later with the STORED books. append_pq_codes must hold row-for-row
+    later with the STORED books. append(PQ, …) must hold row-for-row
     the codes a bulk encode of the union produces — encoding is a pure
     deterministic function of (emb, books) — and answer ADC probes
     identically."""
+    from weather_database_system_spark.indexstore import append, build
     from weather_database_system_spark.operators.dedup import _emb_double
     from weather_database_system_spark.operators.similarity import (
         N_QUERIES,
-        _write_pq_codebooks,
-        _write_pq_codes,
+        PQ,
         ann_pq_query_prebuilt,
-        append_pq_codes,
-        encode_pq_codes,
         read_pq_books,
         train_pq_books,
     )
@@ -3865,13 +3857,11 @@ def test_pq_append_equals_bulk_encode_base_trained(spark, tmp_path):
     books = train_pq_books(base)
 
     appended = str(tmp_path / "pq_appended")
-    _write_pq_codebooks(spark, books, appended)
-    _write_pq_codes(encode_pq_codes(base, books), appended)
-    append_pq_codes(spark, batch, appended)
+    build(PQ, base, appended, state={"codebooks": books})
+    append(PQ, batch, appended)
 
     bulk = str(tmp_path / "pq_bulk")
-    _write_pq_codebooks(spark, books, bulk)
-    _write_pq_codes(encode_pq_codes(cand, books), bulk)
+    build(PQ, cand, bulk, state={"codebooks": books})
 
     assert read_pq_books(spark, appended) == read_pq_books(spark, bulk)
     a = sorted(
@@ -3896,18 +3886,18 @@ def test_pq_duplicate_append_and_compaction(spark, tmp_path):
     contribution to the ADC sum and corrupt the ranking outright (not
     just drop or double-rank a row). Pin that the query path's
     (vec_id, m) distinct makes a retried append harmless, and that
-    compact_pq_codes is row-preserving and leaves the probe unchanged."""
+    compact(PQ, …) is row-preserving and leaves the probe unchanged."""
+    from weather_database_system_spark.indexstore import append, build, compact
     from weather_database_system_spark.operators.dedup import _emb_double
     from weather_database_system_spark.operators.similarity import (
         N_QUERIES,
+        PQ,
         ann_pq_query_prebuilt,
-        append_pq_codes,
-        build_pq_index,
-        compact_pq_codes,
+        index_candidates,
     )
 
     path = str(tmp_path / "pq_dup")
-    build_pq_index(spark, SF_SMOKE, path)
+    build(PQ, index_candidates(spark, SF_SMOKE), path)
     clean = [
         tuple(r) for r in ann_pq_query_prebuilt(spark, SF_SMOKE, path).collect()
     ]
@@ -3919,7 +3909,7 @@ def test_pq_duplicate_append_and_compaction(spark, tmp_path):
         .filter(f"vec_id >= {N_QUERIES} and vec_id % 2 = 0")
         .select("vec_id", "emb")
     )
-    append_pq_codes(spark, retry, path)
+    append(PQ, retry, path)
     assert spark.read.parquet(f"{path}/codes").count() > n  # blind append
     got = [
         tuple(r) for r in ann_pq_query_prebuilt(spark, SF_SMOKE, path).collect()
@@ -3929,7 +3919,7 @@ def test_pq_duplicate_append_and_compaction(spark, tmp_path):
     before = sorted(
         tuple(r) for r in spark.read.parquet(f"{path}/codes").collect()
     )
-    compact_pq_codes(spark, path)
+    compact(PQ, spark, path)
     after = sorted(
         tuple(r) for r in spark.read.parquet(f"{path}/codes").collect()
     )
@@ -3952,18 +3942,20 @@ def test_ivfpq_matches_numpy_replay_from_stored_bytes(spark, tmp_path):
     is stored in the query's routed cell."""
     import numpy as np
 
+    from weather_database_system_spark.indexstore import build
     from weather_database_system_spark.operators.similarity import (
+        IVFPQ,
         N_QUERIES,
         PQ_M,
         PQ_SUBDIM,
         PQ_TOPK,
         ann_ivfpq_query_prebuilt,
-        build_ivfpq_index,
+        index_candidates,
     )
     from weather_database_system_spark.sources.star import load_table
 
     path = str(tmp_path / "ivfpq")
-    build_ivfpq_index(spark, SF_SMOKE, path)
+    build(IVFPQ, index_candidates(spark, SF_SMOKE), path)
     got = ann_ivfpq_query_prebuilt(spark, SF_SMOKE, path).collect()
     spark_top: dict[int, list] = {}
     for r in got:
@@ -4021,15 +4013,15 @@ def test_ivfpq_append_equals_rebuild_and_duplicate_safe(spark, tmp_path):
     multiset and answers queries identically; (2) a retried
     at-least-once append (duplicate code rows, which would DOUBLE a
     subspace's ADC contribution) leaves results unchanged — the query
-    distincts (query, vec, m) before the sum; (3) compact_ivfpq_codes
+    distincts (query, vec, m) before the sum; (3) compact(IVFPQ, …)
     is row-preserving and leaves the probe unchanged."""
+    from weather_database_system_spark.indexstore import append, build, compact
     from weather_database_system_spark.operators.dedup import _emb_double
     from weather_database_system_spark.operators.similarity import (
+        IVFPQ,
         N_QUERIES,
         ann_ivfpq_query_prebuilt,
-        append_ivfpq_vectors,
-        build_ivfpq_index,
-        compact_ivfpq_codes,
+        index_candidates,
     )
 
     vecs = _emb_double(spark, SF_SMOKE).select("vec_id", "emb")
@@ -4037,7 +4029,7 @@ def test_ivfpq_append_equals_rebuild_and_duplicate_safe(spark, tmp_path):
     is_batch = f"vec_id % 3 = 1"
 
     bulk = str(tmp_path / "ivfpq_bulk")
-    build_ivfpq_index(spark, SF_SMOKE, bulk)
+    build(IVFPQ, index_candidates(spark, SF_SMOKE), bulk)
     clean = [
         tuple(r)
         for r in ann_ivfpq_query_prebuilt(spark, SF_SMOKE, bulk).collect()
@@ -4045,27 +4037,18 @@ def test_ivfpq_append_equals_rebuild_and_duplicate_safe(spark, tmp_path):
     assert len(clean) > 0
 
     # (1) same trained state, base codes only, then append the batch
-    import shutil
-
-    appended = str(tmp_path / "ivfpq_appended")
-    import os
-
-    os.makedirs(appended)
-    shutil.copytree(f"{bulk}/centroids", f"{appended}/centroids")
-    shutil.copytree(f"{bulk}/codebooks", f"{appended}/codebooks")
     from weather_database_system_spark.operators.similarity import (
-        _encode_ivfpq,
-        _write_ivfpq_codes,
         read_ivf_centroids,
         read_pq_books,
     )
 
-    cents = read_ivf_centroids(spark, bulk)
-    books = read_pq_books(spark, bulk)
-    _write_ivfpq_codes(
-        _encode_ivfpq(cand.filter(f"not ({is_batch})"), cents, books), appended
-    )
-    append_ivfpq_vectors(spark, cand.filter(is_batch), appended)
+    appended = str(tmp_path / "ivfpq_appended")
+    state = {
+        "centroids": read_ivf_centroids(spark, bulk),
+        "codebooks": read_pq_books(spark, bulk),
+    }
+    build(IVFPQ, cand.filter(f"not ({is_batch})"), appended, state=state)
+    append(IVFPQ, cand.filter(is_batch), appended)
     a = sorted(
         tuple(r) for r in spark.read.parquet(f"{appended}/codes").collect()
     )
@@ -4079,7 +4062,7 @@ def test_ivfpq_append_equals_rebuild_and_duplicate_safe(spark, tmp_path):
 
     # (2) retry storm: a slice appends AGAIN — results unchanged
     retry = cand.filter(f"vec_id % 2 = 0")
-    append_ivfpq_vectors(spark, retry, appended)
+    append(IVFPQ, retry, appended)
     got = [
         tuple(r)
         for r in ann_ivfpq_query_prebuilt(spark, SF_SMOKE, appended).collect()
@@ -4090,7 +4073,7 @@ def test_ivfpq_append_equals_rebuild_and_duplicate_safe(spark, tmp_path):
     before = sorted(
         tuple(r) for r in spark.read.parquet(f"{appended}/codes").collect()
     )
-    compact_ivfpq_codes(spark, appended)
+    compact(IVFPQ, spark, appended)
     after = sorted(
         tuple(r) for r in spark.read.parquet(f"{appended}/codes").collect()
     )
@@ -4145,25 +4128,23 @@ def test_ivfpq_residual_matches_numpy_replay_and_append(spark, tmp_path):
     a bulk build containing the union."""
     import numpy as np
 
+    from weather_database_system_spark.indexstore import append, build
+    from weather_database_system_spark.operators.dedup import _emb_double
     from weather_database_system_spark.operators.similarity import (
+        IVFPQ_RES,
         N_QUERIES,
         PQ_M,
         PQ_SUBDIM,
         PQ_TOPK,
-        _encode_cell_codes,
-        _with_residual,
-        _write_ivfpq_codes,
         ann_ivfpq_residual_query_prebuilt,
-        append_ivfpq_residual_vectors,
-        build_ivfpq_residual_index,
+        index_candidates,
         read_ivf_centroids,
         read_pq_books,
     )
-    from weather_database_system_spark.operators.dedup import _emb_double
     from weather_database_system_spark.sources.star import load_table
 
     path = str(tmp_path / "ivfpq_res")
-    build_ivfpq_residual_index(spark, SF_SMOKE, path)
+    build(IVFPQ_RES, index_candidates(spark, SF_SMOKE), path)
     got = ann_ivfpq_residual_query_prebuilt(spark, SF_SMOKE, path).collect()
     spark_top: dict[int, list] = {}
     for r in got:
@@ -4210,25 +4191,16 @@ def test_ivfpq_residual_matches_numpy_replay_and_append(spark, tmp_path):
 
     # append ≡ rebuild: base codes + appended batch == bulk codes, and
     # query answers are unchanged
-    import os
-    import shutil
-
     cand = _emb_double(spark, SF_SMOKE).select("vec_id", "emb").filter(
         f"vec_id >= {N_QUERIES}"
     )
     appended = str(tmp_path / "ivfpq_res_appended")
-    os.makedirs(appended)
-    shutil.copytree(f"{path}/centroids", f"{appended}/centroids")
-    shutil.copytree(f"{path}/codebooks", f"{appended}/codebooks")
-    cents_l = read_ivf_centroids(spark, path)
-    books_l = read_pq_books(spark, path)
-    _write_ivfpq_codes(
-        _encode_cell_codes(
-            _with_residual(cand.filter("vec_id % 3 != 1"), cents_l), books_l
-        ),
-        appended,
-    )
-    append_ivfpq_residual_vectors(spark, cand.filter("vec_id % 3 = 1"), appended)
+    state = {
+        "centroids": read_ivf_centroids(spark, path),
+        "codebooks": read_pq_books(spark, path),
+    }
+    build(IVFPQ_RES, cand.filter("vec_id % 3 != 1"), appended, state=state)
+    append(IVFPQ_RES, cand.filter("vec_id % 3 = 1"), appended)
     a = sorted(
         tuple(r) for r in spark.read.parquet(f"{appended}/codes").collect()
     )
@@ -4252,14 +4224,15 @@ def test_ivf_snapshot_immutable_under_diverging_append(spark, tmp_path, monkeypa
     rows' effect on its candidate sets. Also pins creation-once: a
     repeat call reuses the two-generation state without another
     compaction (no generation churn)."""
-    from weather_database_system_spark.operators.similarity import (
-        ann_ivf_prebuilt_snapshot,
-        ann_ivf_query_prebuilt,
-        append_ivf_vectors,
-    )
     from weather_database_system_spark.indexstore import (
+        append,
         list_generations,
         snapshot_generation,
+    )
+    from weather_database_system_spark.operators.similarity import (
+        IVF,
+        ann_ivf_prebuilt_snapshot,
+        ann_ivf_query_prebuilt,
     )
     from weather_database_system_spark.session import scratch_path
 
@@ -4280,8 +4253,8 @@ def test_ivf_snapshot_immutable_under_diverging_append(spark, tmp_path, monkeypa
     n_snap = spark.read.parquet(f"{snap}/assignments").count()
     # diverge LIVE: append new vector ids into the live generation's
     # cell directories (the snapshot's directories must not move)
-    from weather_database_system_spark.operators.dedup import _emb_double
     from weather_database_system_spark.indexstore import slot_live
+    from weather_database_system_spark.operators.dedup import _emb_double
     from pyspark.sql import functions as F
 
     batch = (
@@ -4289,7 +4262,7 @@ def test_ivf_snapshot_immutable_under_diverging_append(spark, tmp_path, monkeypa
         .filter("vec_id < 3")
         .select((F.col("vec_id") + 1_000_000).alias("vec_id"), "emb")
     )
-    append_ivf_vectors(spark, batch, slot)
+    append(IVF, batch, slot)
     assert (
         spark.read.parquet(f"{slot_live(slot)}/assignments").count()
         == n_snap + 3
@@ -4300,52 +4273,6 @@ def test_ivf_snapshot_immutable_under_diverging_append(spark, tmp_path, monkeypa
         for r in ann_ivf_query_prebuilt(spark, SF_SMOKE, snap).collect()
     ]
     assert snap_after == snap_before  # the snapshot's answers never moved
-
-
-def test_migrate_flat_slot_contracts(spark, tmp_path):
-    """migrate_flat_slot (r17): a legacy FLAT index layout is wrapped
-    into manifest-managed form IN PLACE — bytes preserved (no rebuild),
-    the marker moves with the content so ensure_* still reads the index
-    as current, queries answer identically, and generation-level
-    features (snapshots, atomic promotes) become available. A
-    manifest-managed slot passes through untouched; the sibling flat
-    lease is never swept into the generation."""
-    import os
-
-    from weather_database_system_spark.operators.similarity import (
-        ann_ivf_query_prebuilt,
-        build_ivf_index,
-    )
-    from weather_database_system_spark.indexstore import (
-        INDEX_MANIFEST,
-        list_generations,
-        migrate_flat_slot,
-        resolve_generation,
-    )
-
-    slot = str(tmp_path / "flat_ivf")
-    build_ivf_index(spark, SF_SMOKE, slot)  # legacy flat: files at root
-    before = [
-        tuple(r) for r in ann_ivf_query_prebuilt(spark, SF_SMOKE, slot).collect()
-    ]
-    assert resolve_generation(slot) == slot  # flat layout resolves to root
-
-    live = migrate_flat_slot(slot)
-    assert os.path.basename(live).startswith("gen-")
-    assert os.path.isfile(os.path.join(slot, INDEX_MANIFEST))
-    assert resolve_generation(slot) == live
-    gens = list_generations(slot)
-    assert len(gens) == 1
-    after = [
-        tuple(r) for r in ann_ivf_query_prebuilt(spark, SF_SMOKE, slot).collect()
-    ]
-    assert after == before  # bytes preserved, answers identical
-
-    # idempotent: a second call is a no-op returning the same live path
-    assert migrate_flat_slot(slot) == live
-    assert [g["generation"] for g in list_generations(slot)] == [
-        g["generation"] for g in gens
-    ]
 
 
 def test_index_marker_and_swap_dir_contracts(tmp_path):
@@ -4407,13 +4334,11 @@ def test_manifest_generation_contracts(tmp_path):
     (a crash can only lose the O(1) pointer write, never a promoted
     generation) and to None when only unstamped — possibly half-built —
     generations exist (ADVICE r15 #2: forcing a rebuild beats silently
-    serving a maybe-incomplete index); a pre-manifest flat layout
-    resolves to the slot itself; an empty slot to None."""
+    serving a maybe-incomplete index); an empty slot to None."""
     import os
 
     from weather_database_system_spark.indexstore import (
         INDEX_MANIFEST,
-        INDEX_MARKER,
         new_generation_path,
         promote_generation,
         resolve_generation,
@@ -4513,13 +4438,6 @@ def test_manifest_generation_contracts(tmp_path):
     with open(os.path.join(slot3, INDEX_MANIFEST), "w", encoding="utf-8") as fh:
         fh.write('{"generation": "gen-0009"}')
     assert resolve_generation(slot3) is None
-
-    # legacy flat layout (pre-manifest): index files at the slot root
-    flat = str(tmp_path / "flat")
-    os.makedirs(flat)
-    write_index_marker(flat, {"v": 0})
-    assert resolve_generation(flat) == flat
-    assert os.path.isfile(os.path.join(flat, INDEX_MARKER))
 
     # mkdir is the claim: a racing builder that already created the next
     # number forces the claimer onto the one after — two processes can
@@ -4895,8 +4813,8 @@ def test_lease_path_recomputed_across_migration(tmp_path):
         t = threading.Thread(target=waiter)
         t.start()
         time.sleep(0.3)  # waiter observes the sibling lease and polls
-        # migrate IN PLACE while holding the writer lease (what
-        # migrate_flat_slot does; inlined because the lease is ours)
+        # turn the flat directory into a managed slot IN PLACE while
+        # holding the writer lease
         gen = os.path.join(slot, "gen-0001")
         os.makedirs(gen)
         for e in list(os.listdir(slot)):
@@ -5450,10 +5368,8 @@ def test_fence_bookkeeping_never_reads_as_index_content(tmp_path, monkeypatch):
     """r18 self-review #2/#3: fence counters and promote locks are slot
     BOOKKEEPING. Pins: (1) a managed slot whose generations were all
     deleted but which retains fence files / a promote-lock remnant
-    resolves to None (not to its own root as a phantom flat index); (2)
-    migrate_flat_slot leaves an in-slot stray fence file behind instead
-    of moving it into the new generation; (3) a failure while drawing
-    the fence RELEASES the freshly-claimed lease instead of leaking an
+    resolves to None (not to its own root as a phantom index); (2) a
+    failure while drawing the fence RELEASES the freshly-claimed lease instead of leaking an
     ownerless lease that waiters can only clear by TTL."""
     import os
 
@@ -5473,20 +5389,7 @@ def test_fence_bookkeeping_never_reads_as_index_content(tmp_path, monkeypatch):
     os.mkdir(os.path.join(slot, S.PROMOTE_LOCK))
     assert S.resolve_generation(slot) is None
 
-    # (2) migration leaves the stray fence file at the slot root
-    flat = str(tmp_path / "flat")
-    os.makedirs(flat)
-    with open(os.path.join(flat, "data.parquet"), "w", encoding="utf-8") as fh:
-        fh.write("x")
-    S.write_index_marker(flat, {"kind": "t", "algo": 1})
-    with open(os.path.join(flat, S.INDEX_FENCE), "w", encoding="utf-8") as fh:
-        fh.write('{"fence": 9}')
-    live = S.migrate_flat_slot(flat)
-    assert os.path.isfile(os.path.join(flat, S.INDEX_FENCE))
-    assert not os.path.isfile(os.path.join(live, S.INDEX_FENCE))
-    assert os.path.isfile(os.path.join(live, "data.parquet"))
-
-    # (3) a fence-draw failure releases the claimed lease
+    # (2) a fence-draw failure releases the claimed lease
     slot2 = str(tmp_path / "slot2")
     os.makedirs(slot2)
 
@@ -5722,7 +5625,7 @@ def test_append_vs_compaction_lease_serializes(spark, tmp_path, monkeypatch):
     compaction racing an append either SERIALIZES or RAISES — appended
     rows are never silently dropped between a compactor's scan and its
     promote. A simulated in-flight compaction (the lease held with the
-    compactor's purpose) blocks a concurrent ``append_bm25_docs``:
+    compactor's purpose) blocks a concurrent ``append(BM25, …)``:
     with a short bounded wait the append fails loudly (SlotBusyError);
     with a generous wait it parks until the compactor releases, then
     lands in the post-compaction LIVE generation — the exact rows a
@@ -5733,17 +5636,18 @@ def test_append_vs_compaction_lease_serializes(spark, tmp_path, monkeypatch):
     import pytest as _pytest
     from pyspark.sql import functions as F
 
-    from weather_database_system_spark.operators.textan import (
-        append_bm25_docs,
-        bm25_query_prebuilt,
-        bm25_search,
-        build_bm25_index,
-        compact_bm25_index,
-    )
     from weather_database_system_spark.indexstore import (
-        SlotBusyError,
+        append,
+        build,
+        compact,
         ensure_index,
         slot_writer_lease,
+        SlotBusyError,
+    )
+    from weather_database_system_spark.operators.textan import (
+        BM25,
+        bm25_query_prebuilt,
+        bm25_search,
     )
     from weather_database_system_spark.sources.star import load_table
 
@@ -5753,9 +5657,7 @@ def test_append_vs_compaction_lease_serializes(spark, tmp_path, monkeypatch):
     ensure_index(
         slot,
         {"kind": "bm25_index", "test": "lease-race"},
-        lambda gen: build_bm25_index(
-            docs.filter(F.pmod("doc_id", F.lit(2)) == 0), gen
-        ),
+        lambda gen: build(BM25, docs.filter(F.pmod("doc_id", F.lit(2)) == 0), gen),
     )
     odd = docs.filter(F.pmod("doc_id", F.lit(2)) == 1)
 
@@ -5763,11 +5665,11 @@ def test_append_vs_compaction_lease_serializes(spark, tmp_path, monkeypatch):
     with slot_writer_lease(slot, "compact_bm25"):
         monkeypatch.setenv("WDSS_LEASE_WAIT_S", "0.3")
         with _pytest.raises(SlotBusyError):
-            append_bm25_docs(odd, slot)
+            append(BM25, odd, slot)
         monkeypatch.delenv("WDSS_LEASE_WAIT_S")
 
     # serialize half: hold the lease (the compactor's read-then-promote
-    # window — compact_bm25_index takes the lease itself, so the window
+    # window — compact(BM25, …) takes the lease itself, so the window
     # is simulated rather than nested, which would self-deadlock), park
     # an append behind it, run the REAL compaction's promote effect by
     # releasing, and watch the append land in the post-release live
@@ -5777,7 +5679,7 @@ def test_append_vs_compaction_lease_serializes(spark, tmp_path, monkeypatch):
     appended = threading.Event()
 
     def parked_append():
-        append_bm25_docs(odd, slot)  # default wait: parks on the lease
+        append(BM25, odd, slot)  # default wait: parks on the lease
         appended.set()
 
     with slot_writer_lease(slot, "compact_bm25"):
@@ -5787,7 +5689,7 @@ def test_append_vs_compaction_lease_serializes(spark, tmp_path, monkeypatch):
         assert not appended.is_set()  # append is parked, not interleaved
     t.join(timeout=60)
     assert appended.is_set()  # released → append proceeded
-    compact_bm25_index(spark, slot)  # real compaction serializes after
+    compact(BM25, spark, slot)  # real compaction serializes after
 
     # the appended rows are IN the live index: prebuilt == in-query form
     # over the full corpus
@@ -5812,13 +5714,16 @@ def test_index_rebuild_never_disturbs_readers(spark, tmp_path, monkeypatch):
     import os
     import shutil
 
+    from weather_database_system_spark.indexstore import (
+        append,
+        compact,
+        ensure,
+        resolve_generation,
+    )
     from weather_database_system_spark.operators.textan import (
-        append_trigram_postings,
-        compact_trigram_postings,
-        ensure_trigram_postings,
+        TRIGRAM,
         trigram_query_prebuilt,
     )
-    from weather_database_system_spark.indexstore import resolve_generation
     from weather_database_system_spark.sources.star import load_table
 
     # mutable sf_dir: the smoke documents table copied somewhere writable
@@ -5829,7 +5734,7 @@ def test_index_rebuild_never_disturbs_readers(spark, tmp_path, monkeypatch):
     (shutil.copytree if os.path.isdir(src) else shutil.copy2)(src, dst)
     monkeypatch.setenv("WDSS_SCRATCH_DIR", str(tmp_path / "scratch"))
 
-    p1 = ensure_trigram_postings(spark, sf_mut)
+    p1 = ensure(TRIGRAM, spark, sf_mut)
     assert os.path.basename(p1) == "gen-0001"
     stale_reader = spark.read.parquet(p1)  # resolved pre-rebuild, lazy
     baseline = sorted(
@@ -5839,7 +5744,7 @@ def test_index_rebuild_never_disturbs_readers(spark, tmp_path, monkeypatch):
 
     # source "changes" (mtime bump flips the signature) → rebuild
     os.utime(dst if os.path.isfile(dst) else os.path.join(dst, os.listdir(dst)[0]))
-    p2 = ensure_trigram_postings(spark, sf_mut)
+    p2 = ensure(TRIGRAM, spark, sf_mut)
     assert os.path.basename(p2) == "gen-0002" and p2 != p1
     assert os.path.isdir(p1)  # grace window: old generation intact
     assert stale_reader.count() > 0  # in-flight reader undisturbed
@@ -5852,9 +5757,9 @@ def test_index_rebuild_never_disturbs_readers(spark, tmp_path, monkeypatch):
 
     # a compaction promote is equally reader-safe — and prunes gen-0001
     docs = load_table(spark, sf_mut, "documents").select("doc_id", "text")
-    append_trigram_postings(docs.filter("doc_id % 5 = 0"), p2)
+    append(TRIGRAM, docs.filter("doc_id % 5 = 0"), p2)
     reader_g2 = spark.read.parquet(p2)
-    p3 = compact_trigram_postings(spark, p2)
+    p3 = compact(TRIGRAM, spark, p2)
     assert os.path.basename(p3) == "gen-0003"
     assert os.path.isdir(p2) and not os.path.isdir(p1)
     assert reader_g2.count() > 0  # reader of the compacted-away gen OK
@@ -5871,23 +5776,24 @@ def test_index_catalog_and_snapshot_reads(spark, tmp_path, monkeypatch):
     previous index state even after a compaction promoted a new one."""
     import os
 
-    from weather_database_system_spark.operators.textan import (
-        append_bm25_docs,
-        bm25_query_prebuilt,
-        compact_bm25_index,
-        ensure_bm25_index,
-        ensure_trigram_postings,
-    )
     from weather_database_system_spark.indexstore import (
+        append,
+        compact,
+        ensure,
         index_catalog,
         list_generations,
+    )
+    from weather_database_system_spark.operators.textan import (
+        BM25,
+        TRIGRAM,
+        bm25_query_prebuilt,
     )
     from weather_database_system_spark.sources.star import load_table
 
     scratch = str(tmp_path / "scratch")
     monkeypatch.setenv("WDSS_SCRATCH_DIR", scratch)
-    ensure_trigram_postings(spark, SF_SMOKE)
-    bm = ensure_bm25_index(spark, SF_SMOKE)
+    ensure(TRIGRAM, spark, SF_SMOKE)
+    bm = ensure(BM25, spark, SF_SMOKE)
 
     cat = {r["kind"]: r for r in index_catalog(scratch)}
     assert set(cat) == {"trigram_postings", "bm25_index"}
@@ -5899,8 +5805,8 @@ def test_index_catalog_and_snapshot_reads(spark, tmp_path, monkeypatch):
         tuple(r) for r in bm25_query_prebuilt(spark, SF_SMOKE, bm).collect()
     )
     docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
-    append_bm25_docs(docs.filter("doc_id % 2 = 0"), bm)  # duplicates half
-    bm2 = compact_bm25_index(spark, bm)
+    append(BM25, docs.filter("doc_id % 2 = 0"), bm)  # duplicates half
+    bm2 = compact(BM25, spark, bm)
 
     slot = os.path.dirname(bm2)
     gens = list_generations(slot)
@@ -5950,16 +5856,17 @@ def test_bm25_prebuilt_snapshot_time_travel(spark, tmp_path, monkeypatch):
     immutable — read directly, because the registry wrapper's ensure
     would treat the appended index as stale and rebuild (the append
     staleness contract)."""
+    from weather_database_system_spark.indexstore import (
+        _generation_dirs,
+        append,
+        slot_live,
+        snapshot_generation,
+    )
     from weather_database_system_spark.operators.textan import (
-        append_bm25_docs,
+        BM25,
         bm25_prebuilt_snapshot,
         bm25_query_prebuilt,
         bm25_search,
-    )
-    from weather_database_system_spark.indexstore import (
-        _generation_dirs,
-        slot_live,
-        snapshot_generation,
     )
     from weather_database_system_spark.session import scratch_path
 
@@ -5982,7 +5889,7 @@ def test_bm25_prebuilt_snapshot_time_travel(spark, tmp_path, monkeypatch):
         [(1_000_001, "hash join stream hash join stream stream")],
         "doc_id long, text string",
     )
-    append_bm25_docs(new_docs, slot)
+    append(BM25, new_docs, slot)
     snap = snapshot_generation(slot)
     snap_rows = sorted(
         tuple(r) for r in bm25_query_prebuilt(spark, SF_SMOKE, snap).collect()
@@ -6010,19 +5917,20 @@ def test_bm25_diverged_snapshot_state_and_answers(spark, tmp_path, monkeypatch):
     instead of serving an unknown state."""
     import os
 
+    from weather_database_system_spark.indexstore import (
+        _generation_dirs,
+        append,
+        build,
+        read_index_marker,
+        slot_live,
+    )
     from weather_database_system_spark.operators.textan import (
+        BM25,
         BM25_APPEND_MOD,
         _ensure_bm25_diverged_state,
-        append_bm25_docs,
         bm25_prebuilt_diverged_snapshot,
         bm25_query_prebuilt,
         bm25_search,
-        build_bm25_index,
-    )
-    from weather_database_system_spark.indexstore import (
-        _generation_dirs,
-        read_index_marker,
-        slot_live,
     )
     from weather_database_system_spark.session import scratch_path
     from weather_database_system_spark.sources.star import load_table
@@ -6040,7 +5948,7 @@ def test_bm25_diverged_snapshot_state_and_answers(spark, tmp_path, monkeypatch):
     docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
     subset = docs.filter(f"doc_id % {BM25_APPEND_MOD} != {BM25_APPEND_MOD - 1}")
     ref = str(tmp_path / "ref_subset_index")
-    build_bm25_index(subset, ref)
+    build(BM25, subset, ref)
     expected_snap = sorted(
         tuple(r) for r in bm25_query_prebuilt(spark, SF_SMOKE, ref).collect()
     )
@@ -6071,7 +5979,8 @@ def test_bm25_diverged_snapshot_state_and_answers(spark, tmp_path, monkeypatch):
     # (4) sabotage: a SECOND append breaks the recorded invariant (live
     # must carry exactly one ingest batch) — the state machine rebuilds
     # from scratch and converges to the same answer
-    append_bm25_docs(
+    append(
+        BM25,
         spark.createDataFrame(
             [(2_000_001, "hash join stream")], "doc_id long, text string"
         ),
@@ -6100,11 +6009,10 @@ def test_contamination_index_lifecycle(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
+    from weather_database_system_spark.indexstore import append, build, compact
     from weather_database_system_spark.operators.trainprep import (
+        CONTAMINATION,
         EVAL_SET_MAX_DOC,
-        build_contamination_index,
-        append_contamination_grams,
-        compact_contamination_index,
         contamination_eval_overlap,
         contamination_query_prebuilt,
     )
@@ -6117,9 +6025,9 @@ def test_contamination_index_lifecycle(spark, tmp_path):
 
     whole = str(tmp_path / "contam_whole")
     incr = str(tmp_path / "contam_incr")
-    build_contamination_index(ev, whole)
-    build_contamination_index(ev.filter(F.col("doc_id") < half), incr)
-    append_contamination_grams(ev.filter(F.col("doc_id") >= half), incr)
+    build(CONTAMINATION, ev, whole)
+    build(CONTAMINATION, ev.filter(F.col("doc_id") < half), incr)
+    append(CONTAMINATION, ev.filter(F.col("doc_id") >= half), incr)
 
     expected = sorted(
         tuple(r) for r in contamination_eval_overlap(spark, sf).collect()
@@ -6137,7 +6045,7 @@ def test_contamination_index_lifecycle(spark, tmp_path):
     assert got_incr == expected   # append == rebuild
 
     # retry storm: a suite ingests AGAIN — distinct/min aggregates absorb it
-    append_contamination_grams(ev.filter(F.col("doc_id") >= half), incr)
+    append(CONTAMINATION, ev.filter(F.col("doc_id") >= half), incr)
     assert sorted(
         tuple(r)
         for r in contamination_query_prebuilt(spark, sf, incr).collect()
@@ -6145,7 +6053,7 @@ def test_contamination_index_lifecycle(spark, tmp_path):
 
     # compaction: row-preserving (duplicates included), screening unchanged
     before = sorted(tuple(r) for r in spark.read.parquet(incr).collect())
-    compact_contamination_index(spark, incr)
+    compact(CONTAMINATION, spark, incr)
     assert sorted(tuple(r) for r in spark.read.parquet(incr).collect()) == before
     assert sorted(
         tuple(r)
@@ -6177,12 +6085,11 @@ def test_bm25_index_lifecycle(spark, tmp_path):
     tables and leaves the ranking unchanged."""
     from pyspark.sql import functions as F
 
+    from weather_database_system_spark.indexstore import append, build, compact
     from weather_database_system_spark.operators.textan import (
-        append_bm25_docs,
+        BM25,
         bm25_query_prebuilt,
         bm25_search,
-        build_bm25_index,
-        compact_bm25_index,
     )
     from weather_database_system_spark.sources.star import load_table
 
@@ -6191,9 +6098,9 @@ def test_bm25_index_lifecycle(spark, tmp_path):
 
     whole = str(tmp_path / "bm25_whole")
     incr = str(tmp_path / "bm25_incr")
-    build_bm25_index(docs, whole)
-    build_bm25_index(docs.filter(F.pmod("doc_id", F.lit(2)) == 0), incr)
-    append_bm25_docs(docs.filter(F.pmod("doc_id", F.lit(2)) == 1), incr)
+    build(BM25, docs, whole)
+    build(BM25, docs.filter(F.pmod("doc_id", F.lit(2)) == 0), incr)
+    append(BM25, docs.filter(F.pmod("doc_id", F.lit(2)) == 1), incr)
 
     expected = sorted(tuple(r) for r in bm25_search(spark, sf).collect())
     assert len(expected) > 0
@@ -6208,7 +6115,7 @@ def test_bm25_index_lifecycle(spark, tmp_path):
 
     # retry storm: half the corpus ingests AGAIN (duplicated postings
     # AND doclens rows — the N/avgdl inflation hazard)
-    append_bm25_docs(docs.filter(F.pmod("doc_id", F.lit(2)) == 0), incr)
+    append(BM25, docs.filter(F.pmod("doc_id", F.lit(2)) == 0), incr)
     got_dup = sorted(
         tuple(r) for r in bm25_query_prebuilt(spark, sf, incr).collect()
     )
@@ -6220,7 +6127,7 @@ def test_bm25_index_lifecycle(spark, tmp_path):
         )
         for sub in ("postings", "doclens")
     }
-    compact_bm25_index(spark, incr)
+    compact(BM25, spark, incr)
     for sub in ("postings", "doclens"):
         after = sorted(
             tuple(r) for r in spark.read.parquet(f"{incr}/{sub}").collect()
@@ -6241,19 +6148,22 @@ def test_slot_handles_survive_promotes(spark, tmp_path, monkeypatch):
     silently prune those rows."""
     import os
 
+    from weather_database_system_spark.indexstore import (
+        append,
+        compact,
+        ensure,
+        slot_live,
+    )
     from weather_database_system_spark.operators.textan import (
-        append_trigram_postings,
-        compact_trigram_postings,
-        ensure_trigram_postings,
+        TRIGRAM,
         trigram_query_prebuilt,
     )
-    from weather_database_system_spark.indexstore import slot_live
     from weather_database_system_spark.session import scratch_path
     from weather_database_system_spark.sources.star import load_table
 
     monkeypatch.setenv("WDSS_SCRATCH_DIR", str(tmp_path / "scratch"))
     sf = SF_SMOKE
-    g1 = ensure_trigram_postings(spark, sf)
+    g1 = ensure(TRIGRAM, spark, sf)
     slot = os.path.dirname(g1)
     assert slot_live(slot) == g1  # the slot handle resolves to live
 
@@ -6263,15 +6173,15 @@ def test_slot_handles_survive_promotes(spark, tmp_path, monkeypatch):
     assert baseline  # querying BY SLOT answers from the live generation
 
     docs = load_table(spark, sf, "documents").select("doc_id", "text")
-    append_trigram_postings(docs.filter("doc_id % 3 = 0"), slot)  # by slot
+    append(TRIGRAM, docs.filter("doc_id % 3 = 0"), slot)  # by slot
     n_g1 = spark.read.parquet(g1).count()
 
-    g2 = compact_trigram_postings(spark, slot)  # maintenance by slot too
+    g2 = compact(TRIGRAM, spark, slot)  # maintenance by slot too
     assert g2 != g1 and os.path.basename(g2) == "gen-0002"
     assert spark.read.parquet(g2).count() == n_g1  # append was captured
 
     # post-promote ingest through the SAME slot handle lands in gen-0002
-    append_trigram_postings(docs.filter("doc_id % 3 = 1"), slot)
+    append(TRIGRAM, docs.filter("doc_id % 3 = 1"), slot)
     assert spark.read.parquet(g2).count() > n_g1
     assert spark.read.parquet(g1).count() == n_g1  # grace gen untouched
     assert sorted(
@@ -6284,4 +6194,4 @@ def test_slot_handles_survive_promotes(spark, tmp_path, monkeypatch):
     import pytest
 
     with pytest.raises(ValueError, match="non-live generation"):
-        compact_trigram_postings(spark, g1)
+        compact(TRIGRAM, spark, g1)

@@ -29,14 +29,15 @@ def test_bm25_prebuilt_answers_arbitrary_terms(spark):
     round-trip, query-time N/avgdl/df derivation, and scoring tail all
     parameterize over the caller's terms, not just the pinned
     BM25_QUERY."""
+    from weather_database_system_spark.indexstore import ensure
     from weather_database_system_spark.operators.textan import (
+        BM25,
         BM25_QUERY,
         bm25_query_prebuilt,
         bm25_search,
-        ensure_bm25_index,
     )
 
-    idx = ensure_bm25_index(spark, SF_SMOKE)
+    idx = ensure(BM25, spark, SF_SMOKE)
 
     for terms in (("filter", "merge", "vector"), ("scan",)):
         assert tuple(terms) != BM25_QUERY  # genuinely non-pinned
@@ -56,15 +57,16 @@ def test_trigram_prebuilt_answers_arbitrary_needle(spark):
     postings must match the in-query posting-intersection search
     (_trigram_search) over the same corpus; the needle contract
     (>=3 chars, no LIKE wildcards) still fails loudly."""
+    from weather_database_system_spark.indexstore import ensure
     from weather_database_system_spark.operators.textan import (
+        TRIGRAM,
         TRIGRAM_NEEDLE,
         _trigram_search,
-        ensure_trigram_postings,
         trigram_query_prebuilt,
     )
     from weather_database_system_spark.sources.star import load_table
 
-    idx = ensure_trigram_postings(spark, SF_SMOKE)
+    idx = ensure(TRIGRAM, spark, SF_SMOKE)
     docs = load_table(spark, SF_SMOKE, "documents").select(
         "doc_id", "lang", "text"
     )
@@ -117,14 +119,15 @@ def test_ivf_prebuilt_answers_arbitrary_query_vectors(spark):
     top-3 among the stored assignments of that cell (ties by
     neighbor_id). The queries exist nowhere in the index — routing and
     norms must come from the caller's vectors alone."""
+    from weather_database_system_spark.indexstore import ensure
     from weather_database_system_spark.operators.similarity import (
+        IVF,
         ann_ivf_query_prebuilt,
-        ensure_ivf_index,
         read_ivf_centroids,
     )
     from weather_database_system_spark.sources.star import load_table
 
-    idx = ensure_ivf_index(spark, SF_SMOKE)
+    idx = ensure(IVF, spark, SF_SMOKE)
     qdf = _perturbed_queries(spark, SF_SMOKE)
     got = ann_ivf_query_prebuilt(
         spark, SF_SMOKE, idx, queries_df=qdf
@@ -194,16 +197,17 @@ def test_pq_prebuilt_answers_arbitrary_query_vectors(spark):
     and codes — the asymmetric-distance table comes from the raw caller
     vector, which is exactly PQ's out-of-corpus contract (Jégou et al.
     2011 §III)."""
+    from weather_database_system_spark.indexstore import ensure
     from weather_database_system_spark.operators.similarity import (
+        PQ,
         PQ_M,
         PQ_SUBDIM,
         PQ_TOPK,
         ann_pq_query_prebuilt,
-        ensure_pq_index,
         read_pq_books,
     )
 
-    idx = ensure_pq_index(spark, SF_SMOKE)
+    idx = ensure(PQ, spark, SF_SMOKE)
     qdf = _perturbed_queries(spark, SF_SMOKE)
     got = ann_pq_query_prebuilt(spark, SF_SMOKE, idx, queries_df=qdf).collect()
     assert len(got) > 0
@@ -248,16 +252,17 @@ def test_ivfpq_prebuilt_answers_arbitrary_query_vectors(spark):
     from the raw caller vector, so vectors that exist nowhere in the
     index are the normal case. The default (no queries_df) stays
     bit-identical to the pinned registry form."""
+    from weather_database_system_spark.indexstore import ensure
     from weather_database_system_spark.operators.similarity import (
+        IVFPQ,
         PQ_M,
         PQ_SUBDIM,
         PQ_TOPK,
         ann_ivfpq_query_prebuilt,
-        ensure_ivfpq_index,
         read_ivf_centroids,
     )
 
-    idx = ensure_ivfpq_index(spark, SF_SMOKE)
+    idx = ensure(IVFPQ, spark, SF_SMOKE)
     qdf = _perturbed_queries(spark, SF_SMOKE)
     got = ann_ivfpq_query_prebuilt(
         spark, SF_SMOKE, idx, queries_df=qdf
@@ -318,13 +323,14 @@ def test_dedup_prebuilt_answers_arbitrary_batch(spark):
     COLLIDES with an index doc_id cannot cross-contaminate the probe
     sides (the explicit origin tag through the band union). The default
     batch stays bit-identical to the pinned registry form."""
+    from weather_database_system_spark.indexstore import ensure
     from weather_database_system_spark.operators.dedup import (
+        DEDUP,
         dedup_against_index_prebuilt,
-        ensure_dedup_index,
     )
     from weather_database_system_spark.sources.star import load_table
 
-    idx = ensure_dedup_index(spark, SF_SMOKE)
+    idx = ensure(DEDUP, spark, SF_SMOKE)
     docs = load_table(spark, SF_SMOKE, "documents")
     # the index side is the even half (build %4==0 + append %4==2)
     src = {r.doc_id: r.text for r in docs.filter("doc_id % 2 = 0").limit(3).collect()}
@@ -372,13 +378,14 @@ def test_ivf_sqrt_cell_sizing(spark, tmp_path):
     prebuilt query answers over the finer geometry; the registry path
     (ensure_ivf_index default) keeps exactly K_CELLS so its DuckDB
     Lloyd replay is untouched."""
+    from weather_database_system_spark.indexstore import build, ensure
     from weather_database_system_spark.operators.similarity import (
+        IVF,
         IVF_K_MIN,
         K_CELLS,
         N_QUERIES,
         ann_ivf_query_prebuilt,
-        build_ivf_index,
-        ensure_ivf_index,
+        index_candidates,
         ivf_cell_count,
         read_ivf_centroids,
     )
@@ -390,7 +397,8 @@ def test_ivf_sqrt_cell_sizing(spark, tmp_path):
     assert ivf_cell_count(1_000_000) == 1000
 
     path = str(tmp_path / "ivf_sqrt")
-    build_ivf_index(spark, SF_SMOKE, path)  # k_cells=None → √N sizing
+    cand = index_candidates(spark, SF_SMOKE)
+    build(IVF, cand, path, state=IVF.train(cand, k_cells=None))  # √N sizing
     n_cand = (
         load_table(spark, SF_SMOKE, "embeddings")
         .filter(F.col("vec_id") >= N_QUERIES)
@@ -404,5 +412,5 @@ def test_ivf_sqrt_cell_sizing(spark, tmp_path):
     assert len(got) > 0  # the finer geometry answers end-to-end
 
     # the registry slot still trains the PINNED K (oracle untouched)
-    reg = read_ivf_centroids(spark, ensure_ivf_index(spark, SF_SMOKE))
+    reg = read_ivf_centroids(spark, ensure(IVF, spark, SF_SMOKE))
     assert len(reg) <= K_CELLS

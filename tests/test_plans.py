@@ -1344,13 +1344,14 @@ def test_ann_pq_query_prebuilt_reads_codes_not_floats(spark):
     broadcast ADC table."""
     import re
 
+    from weather_database_system_spark.indexstore import ensure
     from weather_database_system_spark.operators.similarity import (
+        PQ,
         ann_pq_query_prebuilt,
-        ensure_pq_index,
     )
     from weather_database_system_spark.plans import formatted_plan
 
-    path = ensure_pq_index(spark, SF_SMOKE)
+    path = ensure(PQ, spark, SF_SMOKE)
     df = ann_pq_query_prebuilt(spark, SF_SMOKE, path)
     plan = formatted_plan(df)
     assert len(re.findall(r"Location:.*pq_index", plan)) == 1
@@ -1369,13 +1370,14 @@ def test_ann_ivfpq_query_prices_at_probed_cells_codes(spark):
     assignments table, no cartesian."""
     import re
 
+    from weather_database_system_spark.indexstore import ensure
     from weather_database_system_spark.operators.similarity import (
+        IVFPQ,
         ann_ivfpq_query_prebuilt,
-        ensure_ivfpq_index,
     )
     from weather_database_system_spark.plans import formatted_plan
 
-    path = ensure_ivfpq_index(spark, SF_SMOKE)
+    path = ensure(IVFPQ, spark, SF_SMOKE)
     df = ann_ivfpq_query_prebuilt(spark, SF_SMOKE, path)
     plan = formatted_plan(df)
     assert len(re.findall(r"Location:.*ivfpq_index", plan)) == 1

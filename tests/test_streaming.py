@@ -661,7 +661,7 @@ def test_streaming_fingerprint_partials_merge_to_batch_digests(spark, tmp_path):
 def test_streaming_trigram_index_maintenance(spark, tmp_path):
     """STREAMING maintenance of the prebuilt trigram posting index: docs
     arrive as micro-batches and each foreachBatch blind-appends its
-    postings via append_trigram_postings — the ingest loop a 100 TB
+    postings via append(TRIGRAM, …) — the ingest loop a 100 TB
     text-search deployment actually runs (no read-modify-write; the
     disjoint-doc_id mergeability test_extensions pins in batch form).
     Asserts the streamed index answers the registry needle's search
@@ -672,12 +672,12 @@ def test_streaming_trigram_index_maintenance(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
+    from weather_database_system_spark.indexstore import append, build
     from weather_database_system_spark.operators.textan import (
+        TRIGRAM,
         TRIGRAM_NEEDLE,
         _needle_tris,
         _verify_contains,
-        append_trigram_postings,
-        build_trigram_postings,
     )
     from weather_database_system_spark.sources.star import load_table
 
@@ -692,7 +692,7 @@ def test_streaming_trigram_index_maintenance(spark, tmp_path):
     schema = spark.read.parquet(src).schema
 
     def handle(batch_df, batch_id):
-        append_trigram_postings(batch_df, idx_stream)
+        append(TRIGRAM, batch_df, idx_stream)
 
     def run():
         q = (
@@ -708,7 +708,7 @@ def test_streaming_trigram_index_maintenance(spark, tmp_path):
         assert not q.isActive
 
     run()
-    build_trigram_postings(docs, idx_oneshot)
+    build(TRIGRAM, docs, idx_oneshot)
 
     def search(path):
         postings = spark.read.parquet(path)
@@ -738,17 +738,17 @@ def test_streaming_trigram_index_maintenance(spark, tmp_path):
 def test_streaming_bm25_index_maintenance(spark, tmp_path):
     """STREAMING maintenance of the stored BM25 index (the fifth stored
     family): docs arrive as micro-batches and each foreachBatch
-    blind-appends postings + doclens via append_bm25_docs — the Lucene
+    blind-appends postings + doclens via append(BM25, …) — the Lucene
     soft-commit ingest loop. BM25 is the family whose scores depend on
     corpus-global stats (N, avgdl, df); they are derived at query time
     from index bytes, so the streamed multi-generation index must rank
     EXACTLY like a one-shot build over the same corpus. Also pins the
     availableNow restart appending nothing twice (doclens row count
     stable — a re-append would inflate N and shift every score)."""
+    from weather_database_system_spark.indexstore import append, build
     from weather_database_system_spark.operators.textan import (
-        append_bm25_docs,
+        BM25,
         bm25_query_prebuilt,
-        build_bm25_index,
     )
     from weather_database_system_spark.sources.star import load_table
 
@@ -760,7 +760,7 @@ def test_streaming_bm25_index_maintenance(spark, tmp_path):
     schema = spark.read.parquet(src).schema
 
     def handle(batch_df, batch_id):
-        append_bm25_docs(batch_df, idx_stream)
+        append(BM25, batch_df, idx_stream)
 
     def run():
         q = (
@@ -776,7 +776,7 @@ def test_streaming_bm25_index_maintenance(spark, tmp_path):
         assert not q.isActive
 
     run()
-    build_bm25_index(docs, idx_oneshot)
+    build(BM25, docs, idx_oneshot)
 
     got_stream = sorted(
         tuple(r) for r in bm25_query_prebuilt(spark, SF_SMOKE, idx_stream).collect()
@@ -798,20 +798,18 @@ def test_streaming_ivf_index_maintenance(spark, tmp_path):
     #1, completing the lifecycle): the quantizer trains ONCE on the base
     corpus; new embedding vectors then arrive as micro-batches and each
     foreachBatch assigns them to the STORED centroids and blind-appends
-    into the cell directories via append_ivf_vectors — the FAISS add()
+    into the cell directories via append(IVF, …) — the FAISS add()
     loop a 100 TB vector store actually runs (no retraining, no
     read-modify-write). Asserts the streamed index holds exactly the
     assignment rows a bulk add of the union produces (same stored
     centroids ⇒ identical cells), and that an availableNow restart from
     the same checkpoint appends nothing twice (exactly-once: assignment
     count stable)."""
+    from weather_database_system_spark.indexstore import append, build
     from weather_database_system_spark.operators.dedup import _emb_double
     from weather_database_system_spark.operators.similarity import (
+        IVF,
         N_QUERIES,
-        _assign_cells,
-        _write_ivf_assignments,
-        _write_ivf_centroids,
-        append_ivf_vectors,
         read_ivf_centroids,
         train_ivf_centroids,
     )
@@ -822,15 +820,14 @@ def test_streaming_ivf_index_maintenance(spark, tmp_path):
     cents = train_ivf_centroids(base)
 
     streamed = str(tmp_path / "ivf_streamed")
-    _write_ivf_centroids(spark, cents, streamed)
-    _write_ivf_assignments(_assign_cells(base, cents), streamed)
+    build(IVF, base, streamed, state={"centroids": cents})
 
     src = str(tmp_path / "vec_src")
     arriving.repartition(4).write.mode("overwrite").parquet(src)
     schema = spark.read.parquet(src).schema
 
     def handle(batch_df, batch_id):
-        append_ivf_vectors(batch_df.sparkSession, batch_df, streamed)
+        append(IVF, batch_df, streamed)
 
     def run():
         q = (
@@ -848,8 +845,7 @@ def test_streaming_ivf_index_maintenance(spark, tmp_path):
     run()
 
     bulk = str(tmp_path / "ivf_bulk")
-    _write_ivf_centroids(spark, cents, bulk)
-    _write_ivf_assignments(_assign_cells(cand, cents), bulk)
+    build(IVF, cand, bulk, state={"centroids": cents})
 
     assert read_ivf_centroids(spark, streamed) == read_ivf_centroids(spark, bulk)
     got = sorted(
@@ -870,19 +866,15 @@ def test_streaming_ivfpq_index_maintenance(spark, tmp_path):
     codebooks train ONCE on the base corpus; new vectors arrive as
     micro-batches and each foreachBatch routes + encodes them against
     the STORED state and blind-appends into the cell directories via
-    append_ivfpq_vectors. Asserts the streamed code store equals a bulk
+    append(IVFPQ, …). Asserts the streamed code store equals a bulk
     encode of the union (routing and encoding are pure functions of the
     stored state), queries answer identically, and an availableNow
     restart from the same checkpoint appends nothing twice."""
+    from weather_database_system_spark.indexstore import append, build
     from weather_database_system_spark.operators.dedup import _emb_double
     from weather_database_system_spark.operators.similarity import (
+        IVFPQ,
         N_QUERIES,
-        _assign_cells,
-        _encode_cell_codes,
-        _write_ivf_centroids,
-        _write_ivfpq_codes,
-        _write_pq_codebooks,
-        append_ivfpq_vectors,
         ann_ivfpq_query_prebuilt,
         read_pq_books,
         train_ivf_centroids,
@@ -896,16 +888,14 @@ def test_streaming_ivfpq_index_maintenance(spark, tmp_path):
     books = train_pq_books(base)
 
     streamed = str(tmp_path / "ivfpq_streamed")
-    _write_ivf_centroids(spark, cents, streamed)
-    _write_pq_codebooks(spark, books, streamed)
-    _write_ivfpq_codes(_encode_cell_codes(_assign_cells(base, cents), books), streamed)
+    build(IVFPQ, base, streamed, state={"centroids": cents, "codebooks": books})
 
     src = str(tmp_path / "vec_src")
     arriving.repartition(4).write.mode("overwrite").parquet(src)
     schema = spark.read.parquet(src).schema
 
     def handle(batch_df, batch_id):
-        append_ivfpq_vectors(batch_df.sparkSession, batch_df, streamed)
+        append(IVFPQ, batch_df, streamed)
 
     def run():
         q = (
@@ -923,9 +913,7 @@ def test_streaming_ivfpq_index_maintenance(spark, tmp_path):
     run()
 
     bulk = str(tmp_path / "ivfpq_bulk")
-    _write_ivf_centroids(spark, cents, bulk)
-    _write_pq_codebooks(spark, books, bulk)
-    _write_ivfpq_codes(_encode_cell_codes(_assign_cells(cand, cents), books), bulk)
+    build(IVFPQ, cand, bulk, state={"centroids": cents, "codebooks": books})
 
     assert read_pq_books(spark, streamed) == read_pq_books(spark, bulk)
     got = sorted(
@@ -951,15 +939,15 @@ def test_streaming_ivfpq_index_maintenance(spark, tmp_path):
 def test_streaming_dedup_index_maintenance(spark, tmp_path):
     """STREAMING maintenance of the stored dedup index: ingested docs
     arrive as micro-batches and each foreachBatch blind-appends its
-    digests + band signatures via append_dedup_index — the ingest loop
+    digests + band signatures via append(DEDUP, …) — the ingest loop
     of a continuously-deduplicating pipeline (new deltas then probe the
     stored tables, never re-cluster the corpus). Asserts the streamed
     index holds exactly the rows a one-shot build produces and answers
     the prebuilt probe identically, and that an availableNow restart
     from the same checkpoint appends nothing twice."""
+    from weather_database_system_spark.indexstore import append, build
     from weather_database_system_spark.operators.dedup import (
-        append_dedup_index,
-        build_dedup_index,
+        DEDUP,
         dedup_against_index_prebuilt,
     )
     from weather_database_system_spark.sources.star import load_table
@@ -974,7 +962,7 @@ def test_streaming_dedup_index_maintenance(spark, tmp_path):
     oneshot = str(tmp_path / "ddx_oneshot")
 
     def handle(batch_df, batch_id):
-        append_dedup_index(batch_df, streamed)
+        append(DEDUP, batch_df, streamed)
 
     def run():
         q = (
@@ -990,7 +978,7 @@ def test_streaming_dedup_index_maintenance(spark, tmp_path):
         assert not q.isActive
 
     run()
-    build_dedup_index(evens, oneshot)
+    build(DEDUP, evens, oneshot)
     counts = {}
     for sub in ("digests", "bands"):
         a = sorted(
@@ -1020,18 +1008,16 @@ def test_streaming_pq_index_maintenance(spark, tmp_path):
     """STREAMING maintenance of the stored PQ index: codebooks train once
     on the base corpus; new vectors arrive as micro-batches and each
     foreachBatch encodes them with the STORED books and blind-appends
-    their codes via append_pq_codes — the FAISS add() loop. Asserts the
+    their codes via append(PQ, …) — the FAISS add() loop. Asserts the
     streamed code store equals a bulk encode of the union row-for-row
     (encoding is a pure function of (emb, books)), the ADC probe answers
     identically, and an availableNow restart appends nothing twice."""
+    from weather_database_system_spark.indexstore import append, build
     from weather_database_system_spark.operators.dedup import _emb_double
     from weather_database_system_spark.operators.similarity import (
         N_QUERIES,
-        _write_pq_codebooks,
-        _write_pq_codes,
+        PQ,
         ann_pq_query_prebuilt,
-        append_pq_codes,
-        encode_pq_codes,
         train_pq_books,
     )
 
@@ -1044,15 +1030,14 @@ def test_streaming_pq_index_maintenance(spark, tmp_path):
     books = train_pq_books(base)
 
     streamed = str(tmp_path / "pq_streamed")
-    _write_pq_codebooks(spark, books, streamed)
-    _write_pq_codes(encode_pq_codes(base, books), streamed)
+    build(PQ, base, streamed, state={"codebooks": books})
 
     src = str(tmp_path / "vec_src")
     arriving.repartition(4).write.mode("overwrite").parquet(src)
     schema = spark.read.parquet(src).schema
 
     def handle(batch_df, batch_id):
-        append_pq_codes(batch_df.sparkSession, batch_df, streamed)
+        append(PQ, batch_df, streamed)
 
     def run():
         q = (
@@ -1070,8 +1055,7 @@ def test_streaming_pq_index_maintenance(spark, tmp_path):
     run()
 
     bulk = str(tmp_path / "pq_bulk")
-    _write_pq_codebooks(spark, books, bulk)
-    _write_pq_codes(encode_pq_codes(cand, books), bulk)
+    build(PQ, cand, bulk, state={"codebooks": books})
 
     a = sorted(
         tuple(r) for r in spark.read.parquet(f"{streamed}/codes").collect()
@@ -1094,7 +1078,7 @@ def test_streaming_contamination_index_maintenance(spark, tmp_path):
     """STREAMING maintenance of the stored contamination index (the
     sixth stored family): eval suites arrive as micro-batches — the
     benchmark-release ingest loop — and each foreachBatch blind-appends
-    their fingerprints via append_contamination_grams. The streamed
+    their fingerprints via append(CONTAMINATION, …). The streamed
     multi-generation index must screen a training batch EXACTLY like a
     one-shot build over the same eval set, and an availableNow restart
     from the same checkpoint appends nothing twice (row count stable;
@@ -1102,10 +1086,10 @@ def test_streaming_contamination_index_maintenance(spark, tmp_path):
     countDistinct/min — so the restart pin is about index BYTES)."""
     from pyspark.sql import functions as F
 
+    from weather_database_system_spark.indexstore import append, build
     from weather_database_system_spark.operators.trainprep import (
+        CONTAMINATION,
         EVAL_SET_MAX_DOC,
-        append_contamination_grams,
-        build_contamination_index,
         contamination_query_prebuilt,
     )
     from weather_database_system_spark.sources.star import load_table
@@ -1119,7 +1103,7 @@ def test_streaming_contamination_index_maintenance(spark, tmp_path):
     schema = spark.read.parquet(src).schema
 
     def handle(batch_df, batch_id):
-        append_contamination_grams(batch_df, idx_stream)
+        append(CONTAMINATION, batch_df, idx_stream)
 
     def run():
         q = (
@@ -1135,7 +1119,7 @@ def test_streaming_contamination_index_maintenance(spark, tmp_path):
         assert not q.isActive
 
     run()
-    build_contamination_index(ev, idx_oneshot)
+    build(CONTAMINATION, ev, idx_oneshot)
 
     got_stream = sorted(
         tuple(r)

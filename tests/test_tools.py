@@ -65,3 +65,64 @@ def test_verify_replay_reports_ok_and_fails_unknown_names():
     assert any(line.startswith("topk_global: OK (") for line in lines), res.stdout
     assert any(line.startswith("no_such_query: ERROR") for line in lines), res.stdout
     assert lines[-1] == "FAILURES: ['no_such_query']", res.stdout
+
+
+def test_scale_rehearsal_refuses_names_without_a_slice(tmp_path):
+    """--queries names in neither HEAVY nor FACT_QUERIES have no slice
+    table to run on: the tool names them and exits 2 before generating
+    any data (no m1 slice) or starting Spark."""
+    res = subprocess.run(
+        [
+            sys.executable,
+            os.path.join(REPO, "tools", "scale_rehearsal.py"),
+            "--queries",
+            "dedup_clusters_fast,topk_global",
+            "--scratch",
+            str(tmp_path),
+        ],
+        capture_output=True,
+        text=True,
+        timeout=120,
+        cwd=REPO,
+    )
+    assert res.returncode == 2, res.stdout + res.stderr
+    assert "topk_global" in res.stderr
+    assert "dedup_clusters_fast" not in res.stderr
+    assert not (tmp_path / "m1").exists()
+
+
+def test_package_imports_in_tools_and_tests_resolve():
+    """Every ``from weather_database_system_spark[.<mod>] import name`` in
+    tools/*.py and tests/*.py — including the imports inside function
+    bodies, which most tools only run from main() — names something that
+    exists on its module (an attribute or a submodule), so a moved or
+    deleted name fails here instead of when someone next runs the tool."""
+    import ast
+    import glob
+    import importlib
+
+    missing = []
+    paths = sorted(
+        glob.glob(os.path.join(REPO, "tools", "*.py"))
+        + glob.glob(os.path.join(REPO, "tests", "*.py"))
+    )
+    for path in paths:
+        with open(path, encoding="utf-8") as fh:
+            tree = ast.parse(fh.read(), path)
+        for node in ast.walk(tree):
+            if not (
+                isinstance(node, ast.ImportFrom)
+                and node.module
+                and node.module.split(".")[0] == "weather_database_system_spark"
+            ):
+                continue
+            mod = importlib.import_module(node.module)
+            for alias in node.names:
+                if hasattr(mod, alias.name):
+                    continue
+                try:
+                    importlib.import_module(f"{node.module}.{alias.name}")
+                except ModuleNotFoundError:
+                    rel = os.path.relpath(path, REPO)
+                    missing.append(f"{rel}:{node.lineno} {node.module}.{alias.name}")
+    assert not missing, missing

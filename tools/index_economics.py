@@ -53,6 +53,7 @@ def _timed(fn) -> float:
 
 
 def measure_family(spark, family: str, sf_dir: str) -> dict:
+    from weather_database_system_spark.indexstore import ensure
     from weather_database_system_spark.operators import (
         dedup,
         similarity,
@@ -63,7 +64,7 @@ def measure_family(spark, family: str, sf_dir: str) -> dict:
     forms = {
         "trigram": (
             lambda: textan.trigram_index_search(spark, sf_dir),
-            lambda: textan.ensure_trigram_postings(spark, sf_dir),
+            lambda: ensure(textan.TRIGRAM, spark, sf_dir),
             lambda p: textan.trigram_query_prebuilt(spark, sf_dir, p),
         ),
         "ivf": (
@@ -76,12 +77,12 @@ def measure_family(spark, family: str, sf_dir: str) -> dict:
         ),
         "dedup": (
             lambda: dedup.dedup_against_index(spark, sf_dir),
-            lambda: dedup.ensure_dedup_index(spark, sf_dir),
+            lambda: ensure(dedup.DEDUP, spark, sf_dir),
             lambda p: dedup.dedup_against_index_prebuilt(spark, sf_dir, p),
         ),
         "pq": (
             lambda: similarity.ann_product_quantization(spark, sf_dir),
-            lambda: similarity.ensure_pq_index(spark, sf_dir),
+            lambda: ensure(similarity.PQ, spark, sf_dir),
             lambda p: similarity.ann_pq_query_prebuilt(spark, sf_dir, p),
         ),
         # the IVF+PQ composition (r17): same in-query comparator as pq
@@ -93,12 +94,12 @@ def measure_family(spark, family: str, sf_dir: str) -> dict:
         # cells multiply)
         "ivfpq": (
             lambda: similarity.ann_product_quantization(spark, sf_dir),
-            lambda: similarity.ensure_ivfpq_index(spark, sf_dir),
+            lambda: ensure(similarity.IVFPQ, spark, sf_dir),
             lambda p: similarity.ann_ivfpq_query_prebuilt(spark, sf_dir, p),
         ),
         "bm25": (
             lambda: textan.bm25_search(spark, sf_dir),
-            lambda: textan.ensure_bm25_index(spark, sf_dir),
+            lambda: ensure(textan.BM25, spark, sf_dir),
             lambda p: textan.bm25_query_prebuilt(spark, sf_dir, p),
         ),
         # expectation: ≈1× at any SF — the saved term is the EVAL side,
@@ -107,7 +108,7 @@ def measure_family(spark, family: str, sf_dir: str) -> dict:
         # forever — not compute savings at test scale)
         "contamination": (
             lambda: trainprep.contamination_eval_overlap(spark, sf_dir),
-            lambda: trainprep.ensure_contamination_index(spark, sf_dir),
+            lambda: ensure(trainprep.CONTAMINATION, spark, sf_dir),
             lambda p: trainprep.contamination_query_prebuilt(spark, sf_dir, p),
         ),
     }

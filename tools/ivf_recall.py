@@ -70,12 +70,13 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1_000_000).selectExpr("sum(id)").collect()  # JVM warm-up
 
+    from weather_database_system_spark.indexstore import ensure
     from weather_database_system_spark.operators import similarity as S
 
     truth = _topk(S.ann_brute_force(spark, args.sf_dir).collect())
     release_persisted()
 
-    p_fixed = S.ensure_ivf_index(spark, args.sf_dir)  # pinned K_CELLS
+    p_fixed = ensure(S.IVF, spark, args.sf_dir)  # pinned K_CELLS
     p_sqrt = S.ensure_ivf_index(spark, args.sf_dir, k_cells=None)  # √N
     k_fixed = len(S.read_ivf_centroids(spark, p_fixed))
     k_sqrt = len(S.read_ivf_centroids(spark, p_sqrt))
@@ -103,7 +104,7 @@ def main() -> int:
     # re-rank runs on stored ADC codes instead of gathered raw floats —
     # recall stacks the quantization distortion on top of cell pruning,
     # probe cost drops to Σ|probed cells| code rows. Same warm protocol.
-    p_ivfpq = S.ensure_ivfpq_index(spark, args.sf_dir)
+    p_ivfpq = ensure(S.IVFPQ, spark, args.sf_dir)
     k_ivfpq = len(S.read_ivf_centroids(spark, p_ivfpq))
 
     def measure_ivfpq(nprobe):

@@ -11,8 +11,8 @@ transition once; the soak drives thousands of transitions in random
 interleavings under real process death.
 
 Pure filesystem — no Spark session. The "index" content is record files;
-the machinery under test (session.slot_writer_lease, claim/promote,
-fences, markers, manifest) is exactly what the six stored families run.
+the machinery under test (indexstore.slot_writer_lease, claim/promote,
+fences, markers, manifest) is exactly what the eight stored families run.
 
 Chaos comes in two flavors: SIGKILL (a crashed writer — its lease must
 be heartbeat-dead TTL-taken-over and its un-ACKed work discarded) and

@@ -286,6 +286,16 @@ def main() -> None:
     args = ap.parse_args()
     multiples = [int(m) for m in args.multiples.split(",")]
     names = args.queries.split(",")
+    # the slices hold documents, embeddings and the FACT_QUERIES tables
+    # only: refuse any other name before generating data or starting Spark
+    unknown = [n for n in names if n not in HEAVY and n not in FACT_QUERIES]
+    if unknown:
+        print(
+            f"no rehearsal slice for: {', '.join(unknown)} "
+            f"(choose from HEAVY and FACT_QUERIES)",
+            file=sys.stderr,
+        )
+        raise SystemExit(2)
 
     from pyspark.sql import SparkSession
 

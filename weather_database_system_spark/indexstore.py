@@ -6,15 +6,19 @@ with atomic promotes, the per-slot writer lease with heartbeat and
 fencing, snapshot reads of the retained generation, the slot catalog
 and footer checks behind ``index-ops``, and the two shared swaps
 (``ensure_index`` for marker-gated builds, ``compact_into_generation``
-for row-preserving compactions). Pure filesystem: nothing here starts
-or needs a SparkSession.
+for row-preserving compactions), and the one generic lifecycle every
+family runs: a family is an ``IndexSpec`` (data), and ``build`` /
+``append`` / ``compact`` / ``ensure`` run any spec. Everything up to
+the specs is pure filesystem: it never starts or needs a SparkSession.
 """
 
 from __future__ import annotations
 
 import os
+from dataclasses import dataclass
+from typing import Callable
 
-from weather_database_system_spark.session import scratch_root
+from weather_database_system_spark.session import scratch_path, scratch_root
 
 # --- build-once index lifecycle --------------------------------------------
 #
@@ -77,12 +81,12 @@ def write_index_marker(path: str, meta: dict) -> None:
 def append_index_marker(path: str, note: dict | None = None) -> None:
     """Re-stamp a generation after an append with a CHAINED marker
     ``{"base": <prior stamp>, "appends": [<event>, ...]}`` — the r16
-    replacement for the delete-the-marker convention every ``append_*``
+    replacement for the delete-the-marker convention every family's append
     used through r15 (and the unification of the IVF marker-delete vs
     unstamped-generation divergence). Two properties, both load-bearing:
 
     - The chained marker never equals any pure build meta, so
-      ``ensure_*``'s ``index_is_current`` reads the generation as stale
+      ``ensure``'s ``index_is_current`` reads the generation as stale
       exactly as the old marker-delete did — append staleness semantics
       are unchanged.
     - The generation stays STAMPED, so the manifest-loss recovery path
@@ -171,7 +175,7 @@ def swap_dir(live: str, tmp: str) -> None:
     semantics) — point WDSS_SCRATCH_DIR at one volume. The swap is not
     atomic for concurrent readers (a reader can observe the brief
     no-live-dir window between the two renames); manifest-managed slots
-    (the ensure_*/compact_* lifecycle below) close that window with an
+    (the ensure/compact lifecycle below) close that window with an
     atomic pointer promote — swap_dir remains the in-place path for
     explicit flat directories (tests, ad-hoc indexes)."""
     import shutil
@@ -205,7 +209,7 @@ def swap_dir(live: str, tmp: str) -> None:
 # Writer contract: maintenance (rebuild, compaction) and ingest (append)
 # are SINGLE-WRITER serialized per slot — the standard LSM/table-format
 # commit assumption, and since r16 a MECHANISM, not just a contract:
-# every append_* and compact_* runs under slot_writer_lease (mkdir-claimed
+# every append and compact runs under slot_writer_lease (mkdir-claimed
 # per-slot lease with bounded wait and stale-lease takeover), so an append
 # racing a compaction's read-then-promote either serializes behind it or
 # fails loudly with SlotBusyError — never lands between the compactor's
@@ -231,10 +235,7 @@ def resolve_generation(slot: str) -> str | None:
     unstamped generation is indistinguishable from a crashed half-build,
     and silently serving a possibly-incomplete index is worse than
     forcing a rebuild — a slot holding ONLY unstamped generations
-    resolves to None, and ``ensure_*`` rebuilds it. (3) A pre-manifest
-    flat layout (index files at the slot root) → the slot itself, so
-    existing stored indexes keep answering until their next rebuild
-    migrates them."""
+    resolves to None, and ``ensure`` rebuilds it."""
     import json
 
     try:
@@ -244,32 +245,10 @@ def resolve_generation(slot: str) -> str | None:
             return p
     except (OSError, ValueError, KeyError, TypeError):
         pass
-    gens = sorted(_generation_dirs(slot), reverse=True)
-    for g in gens:
+    for g in sorted(_generation_dirs(slot), reverse=True):
         if os.path.isfile(os.path.join(slot, g, INDEX_MARKER)):
             return os.path.join(slot, g)
-    if gens:
-        return None  # only unstamped (possibly half-built) generations
-    try:
-        # legacy flat layout = index content (files or a build marker)
-        # at the slot root; pure bookkeeping (the manifest, a crashed
-        # writer's lease, a takeover-aside remnant, a fence counter, a
-        # promote lock) doesn't count — else a managed slot whose
-        # generations were all deleted would resolve to its own empty
-        # root and be served as an "index" (r16 self-review;
-        # lease-remnant exclusion widened r17; fence/promote-lock
-        # exclusion r18 self-review #2)
-        entries = [
-            e
-            for e in os.listdir(slot)
-            if e != INDEX_MANIFEST
-            and INDEX_LEASE not in e
-            and INDEX_FENCE not in e
-            and PROMOTE_LOCK not in e
-        ]
-    except OSError:
-        return None
-    return slot if entries else None  # legacy flat layout
+    return None  # nothing built, or only unstamped (possibly half-built)
 
 
 def slot_live(path: str) -> str:
@@ -387,7 +366,7 @@ class FencedWriterError(RuntimeError):
 # Plumbing: the held fence is recorded per (thread, lease root) — a
 # writer is a thread of control, and promote/append run in the thread
 # that holds the lease — so no operator-facing signature changes.
-# Unfenced promotes (ensure_* builds, serialized by
+# Unfenced promotes (ensure builds, serialized by
 # claim_new_generation, which never take the lease) keep today's
 # last-promote-wins semantics and carry the manifest's fence forward
 # unchanged.
@@ -422,8 +401,8 @@ def _manifest_fence(slot: str) -> int:
 def _draw_fence(root: str) -> int:
     """Next fence number for a freshly acquired lease on ``root``:
     max(counter file, manifest's published fence) + 1 — the manifest
-    half makes counter-file loss (or the flat→manifest migration seam,
-    where the counter moves from the sibling path to the in-slot path)
+    half makes counter-file loss (or the seam where a directory becomes
+    a managed slot and the counter moves from the sibling path to the in-slot path)
     recover monotonicity from the last publish."""
     import json
 
@@ -505,7 +484,7 @@ def _verify_held_lease(path: str) -> None:
     r18 review #4), then fails CLOSED with an honest message: ownership
     that cannot be confirmed must not publish, but the error says
     "cannot confirm", not "taken over". No-op for unfenced callers
-    (ensure_* builds never take the lease)."""
+    (ensure builds never take the lease)."""
     import threading
     import time
 
@@ -784,7 +763,7 @@ def slot_writer_lease(path: str, purpose: str = "write",
     identity at the storage boundary (``_verify_held_lease``), which
     fences a resumed zombie's writes even BEFORE its successor first
     publishes. Used as a context manager by every
-    ``append_*`` and ``compact_*``; builds stay serialized by
+    ``append`` and ``compact``; builds stay serialized by
     claim_new_generation's mkdir instead (racing build-if-absent is
     benign end to end — both produce equivalent generations — and must
     not deadlock against the append an ensure-build performs inside its
@@ -812,8 +791,8 @@ def slot_writer_lease(path: str, purpose: str = "write",
         os.makedirs(root, exist_ok=True)  # also creates the lease's parent
         deadline = time.monotonic() + wait_s
         while True:
-            # recomputed EVERY iteration (ADVICE r17 #1): across a
-            # migrate_flat_slot transition the lease path moves from the
+            # recomputed EVERY iteration (ADVICE r17 #1): when a flat
+            # directory becomes a managed slot the lease path moves from the
             # sibling '<slot>._WDSS_LEASE' to the in-slot
             # '<slot>/_WDSS_LEASE' — a waiter that kept the pre-migration
             # sibling path could acquire it while a newer writer holds
@@ -983,7 +962,7 @@ def promote_generation(slot: str, gen_dir: str) -> str:
     (``_promote_lock``) so the gate is atomic, not check-then-write —
     without it a zombie that read the manifest just before the
     successor's publish landed would still clobber it (r18 self-review
-    #1). Unfenced promotes (ensure_* builds, serialized by
+    #1). Unfenced promotes (ensure builds, serialized by
     claim_new_generation) keep last-promote-wins and carry the
     published fence forward unchanged, so a zombie can never launder
     its late write through an unfenced path's stamp."""
@@ -1033,7 +1012,7 @@ def promote_generation(slot: str, gen_dir: str) -> str:
                 raise
         os.replace(tmp, manifest)
         keep = {os.path.basename(gen_dir)}
-        if prev is not None and prev != slot:
+        if prev is not None:
             keep.add(os.path.basename(prev))
         for n in _generation_dirs(slot):
             if n in keep or not os.path.isfile(
@@ -1140,49 +1119,6 @@ def list_generations(slot: str) -> list[dict]:
     return out
 
 
-def migrate_flat_slot(slot: str) -> str:
-    """Wrap a legacy FLAT index layout (pre-r15: index files at the slot
-    root, no manifest) into manifest-managed form IN PLACE: move the
-    slot's content into a claimed generation and atomically promote a
-    fresh manifest at it — bytes preserved, no rebuild, the marker moves
-    with the content so ``ensure_*`` still reads the index as current.
-    Returns the live generation path; a slot that is already
-    manifest-managed (or empty) is returned as-is via its resolved live
-    path. Needed by snapshot readers (r17): generation-level features
-    (grace-window time travel, atomic promotes) are meaningless on a
-    flat layout, and deriving the slot as dirname(live) walks to the
-    SCRATCH ROOT when live IS the flat slot. Runs under the writer
-    lease — the flat-dir lease lives at a sibling path, so it is not
-    part of the moved content."""
-    with slot_writer_lease(slot, "migrate_flat"):
-        if os.path.isfile(os.path.join(slot, INDEX_MANIFEST)):
-            live = resolve_generation(slot)
-            if live is not None and live != slot:
-                return live
-        live = resolve_generation(slot)
-        if live != slot:
-            return live if live is not None else slot
-        entries = [
-            e
-            for e in os.listdir(slot)
-            if e != INDEX_MANIFEST
-            and INDEX_LEASE not in e
-            and INDEX_FENCE not in e
-            and PROMOTE_LOCK not in e
-            and not (e.startswith("gen-") and e[4:].isdigit())
-        ]
-        # the MARKER moves LAST: a crash mid-migration must leave the
-        # claimed generation UNSTAMPED (resolve_generation → None →
-        # ensure rebuilds), never a stamped-but-partial generation that
-        # manifest-loss recovery would serve and index_is_current would
-        # endorse forever
-        entries.sort(key=lambda e: e == INDEX_MARKER)
-        gen = claim_new_generation(slot)
-        for e in entries:
-            os.rename(os.path.join(slot, e), os.path.join(gen, e))
-        return promote_generation(slot, gen)
-
-
 def snapshot_generation(slot: str) -> str | None:
     """Path of the retained NON-LIVE generation — the reader-grace
     window surfaced as a snapshot read (r16, VERDICT r15 task #7):
@@ -1212,11 +1148,10 @@ class SnapshotMissingError(RuntimeError):
 def ensure_snapshot_state(slot: str, compact, require: bool = False) -> str:
     """Two-generation snapshot state for an index slot, created ONCE
     through the REAL maintenance path (r17 — generalizing the
-    bm25/IVF snapshot entries to every family): migrate a legacy flat
-    layout into manifest form in place, run ONE row-preserving
+    bm25/IVF snapshot entries to every family): run ONE row-preserving
     compaction if no retained snapshot exists (gated, so repeat calls
     and sweeps reuse the state), and return the snapshot generation
-    path. ``compact`` is the family's compact_* taking the slot path.
+    path. ``compact`` takes the slot path (the family's ``compact``).
 
     A retained generation only counts as the snapshot if its marker's
     BUILD META matches the live generation's (ADVICE r17 #2): after a
@@ -1230,8 +1165,9 @@ def ensure_snapshot_state(slot: str, compact, require: bool = False) -> str:
     ``require=True`` is the SERVING-side contract (r18, VERDICT r17
     task #5): raise SnapshotMissingError instead of compacting, so a
     deployment read path never mutates the slot on a miss. Registry
-    entries keep the manufacturing default (require=False)."""
-    migrate_flat_slot(slot)
+    entries keep the manufacturing default (require=False). A hit reads
+    only the slot's markers: no lease, fence or heartbeat is touched,
+    so it never waits behind an in-flight append or compaction."""
     snap = snapshot_generation(slot)
     if snap is not None:
         live = resolve_generation(slot)
@@ -1274,13 +1210,13 @@ def snapshot_equals_live_claim(snap_df, live_df, on: list[str]):
 
 def index_catalog(scratch: str | None = None) -> list[dict]:
     """Inventory of every stored-index slot under the scratch root (the
-    ops surface for the five index families): slot name, index kind +
+    ops surface for the stored index families): slot name, index kind +
     algo version from the live marker's build meta (chained append
     markers surface their BASE build meta plus the append count), live
     generation, retained generation count, and total live bytes. Only
-    directories that are actually index slots are listed — a manifest,
-    gen-NNNN subdirectories, or a root index marker (legacy flat) is
-    required (ADVICE r15 #3: unrelated scratch dirs — warehouse tables,
+    directories that are actually index slots are listed — a manifest or
+    gen-NNNN subdirectories are required (ADVICE r15 #3: unrelated
+    scratch dirs — warehouse tables,
     rehearsal data — previously polluted the inventory as kind=None
     slots). Pure filesystem — no SparkSession needed, so a maintenance
     cron can run it without executors."""
@@ -1297,7 +1233,6 @@ def index_catalog(scratch: str | None = None) -> list[dict]:
         if not (
             os.path.isfile(os.path.join(slot, INDEX_MANIFEST))
             or _generation_dirs(slot)
-            or os.path.isfile(os.path.join(slot, INDEX_MARKER))
         ):
             continue  # not an index slot — warehouse/rehearsal scratch
         live = resolve_generation(slot)
@@ -1334,10 +1269,10 @@ def index_catalog(scratch: str | None = None) -> list[dict]:
                 "algo": (meta or {}).get("algo"),
                 "appends": n_appends,
                 "live_generation": os.path.basename(live),
-                "n_generations": len(gens) or 1,  # legacy flat = 1
+                "n_generations": len(gens),
                 "live_bytes": live_row["bytes"] if live_row else None,
                 # the newest PUBLISHED fence (r18): which lease instance
-                # last promoted — 0 for never-leased/legacy slots
+                # last promoted — 0 for never-leased slots
                 "fence": _manifest_fence(slot),
             }
         )
@@ -1382,15 +1317,10 @@ def ensure_index(slot: str, meta: dict, build) -> str:
     its marker equals ``meta`` exactly, reuse it untouched; else call
     ``build(gen_path)`` to write a COMPLETE new generation, stamp it,
     and atomically promote the pointer. Concurrent readers of the old
-    generation are never disturbed (it survives one promote); a stale
-    pre-manifest flat layout is cleared and rebuilt in manifest form."""
-    import shutil
-
+    generation are never disturbed (it survives one promote)."""
     live = resolve_generation(slot)
     if live is not None and index_is_current(live, meta):
         return live
-    if live == slot:  # stale legacy flat layout: migrate to manifest form
-        shutil.rmtree(slot, ignore_errors=True)
     gen = claim_new_generation(slot)
     build(gen)
     write_index_marker(gen, meta)
@@ -1398,7 +1328,7 @@ def ensure_index(slot: str, meta: dict, build) -> str:
 
 
 def compact_into_generation(path: str, rewrite) -> str:
-    """Shared compaction swap used by every ``compact_*``: if ``path`` is
+    """Shared compaction swap used by ``compact``: if ``path`` is
     a manifest-managed generation (``slot/gen-NNNN``), write the
     compacted layout as a NEW generation via ``rewrite(new_dir)``, carry
     the marker over (compaction is row-preserving — validity is
@@ -1421,7 +1351,7 @@ def compact_into_generation(path: str, rewrite) -> str:
         # its pre-promote content (every row appended since would vanish
         # from the live view) — a stale handle must fail loudly, not
         # publish old data. Callers hold the slot (slot_live) or the
-        # path ensure_* just returned.
+        # path ensure just returned.
         live = resolve_generation(slot)
         if live is None or os.path.realpath(path) != os.path.realpath(live):
             raise ValueError(
@@ -1441,3 +1371,174 @@ def compact_into_generation(path: str, rewrite) -> str:
         shutil.copy2(marker, os.path.join(tmp, INDEX_MARKER))
     swap_dir(path, tmp)
     return path
+
+
+# --- index families as data -------------------------------------------------
+#
+# The eight stored families (dedup, bm25, trigram postings, contamination,
+# IVF, PQ, IVF-PQ, IVF-PQ residual) share one lifecycle, so each is
+# declared as an IndexSpec next to its query code and the four operations
+# below run every one of them. Every append and compaction runs under
+# slot_writer_lease; builds are serialized by claim_new_generation instead
+# (see slot_writer_lease).
+
+
+@dataclass(frozen=True)
+class RowsTable:
+    """One rows table of a generation with its layout, declared once for
+    build, append and compaction. ``name`` is the subdirectory ('' is the
+    generation root). With ``range_keys`` the rows are range-partitioned
+    by them and sorted by ``sort`` within each file, so each file covers
+    a tight key range that min-max statistics prune; without, they are
+    written ``partitionBy("cell")``, so each learned cell is a directory
+    a probe reads by path."""
+
+    name: str
+    range_keys: tuple[str, ...] = ()
+    sort: tuple[str, ...] = ()
+
+
+@dataclass(frozen=True)
+class StateDir:
+    """A trained-state directory (centroids, codebooks), KB-scale:
+    ``write(spark, value, gen)`` stores it under ``gen/name`` and
+    ``read(spark, gen)`` loads it for appends. Compaction copies it
+    verbatim."""
+
+    name: str
+    write: Callable
+    read: Callable
+
+
+@dataclass(frozen=True)
+class IndexSpec:
+    """One stored-index family as data.
+
+    - ``kind``: the marker's kind, and the registry slot's scratch_path
+      kind unless ``slot`` names another (a second geometry of a family);
+    - ``meta``: the rest of the build marker; ``ensure`` adds ``kind``
+      and the signature of the ``source`` table;
+    - ``tables``: the rows tables, in write order;
+    - ``encode(rows, state)``: {table name: frame} for a batch of input
+      rows — a pure per-row function of (rows, stored state), which is
+      what makes append ≡ build of the union;
+    - ``state`` and ``train(rows)``: trained families only — the state
+      dirs and the step that fits them, as {dir name: value};
+    - ``rows(spark, sf_dir)``: the input rows of the registry slot; a
+      ``batch`` SQL predicate over them marks the part ``ensure``
+      ingests as one appended batch after building the rest."""
+
+    kind: str
+    meta: dict
+    source: str
+    tables: tuple[RowsTable, ...]
+    encode: Callable
+    rows: Callable
+    batch: str | None = None
+    state: tuple[StateDir, ...] = ()
+    train: Callable | None = None
+    slot: str | None = None
+
+
+def _write_rows(spec: IndexSpec, rows, state, gen: str, mode: str) -> None:
+    frames = spec.encode(rows, state)
+    for t in spec.tables:
+        dst = f"{gen}/{t.name}" if t.name else gen
+        _write_table(t, frames[t.name], dst, mode)
+
+
+def _write_table(t: RowsTable, frame, dst: str, mode: str) -> None:
+    if t.range_keys:
+        n_part = frame.sparkSession.sparkContext.defaultParallelism
+        (
+            frame.repartitionByRange(n_part, *t.range_keys)
+            .sortWithinPartitions(*t.sort)
+            .write.mode(mode)
+            .parquet(dst)
+        )
+    else:
+        frame.repartition("cell").write.mode(mode).partitionBy("cell").parquet(dst)
+
+
+def build(spec: IndexSpec, rows, path: str, state: dict | None = None) -> None:
+    """Write a complete index of ``rows`` into the directory ``path`` (a
+    claimed generation, or an explicit flat directory): train the state
+    unless ``state`` is given (train-then-add: state fitted on other
+    rows), store it, then write every rows table."""
+    if state is None and spec.train is not None:
+        state = spec.train(rows)
+    for d in spec.state:
+        d.write(rows.sparkSession, state[d.name], path)
+    _write_rows(spec, rows, state, path, "overwrite")
+
+
+def append(spec: IndexSpec, rows, path: str) -> None:
+    """Incremental ingest: encode a NEW batch against the stored state
+    (no retraining) and blind-append its rows as their own file
+    generation in every table — no merge or read-modify-write. A retried
+    at-least-once batch duplicates rows; each family's query path
+    dedups before any statistic, so duplicates cost bytes until
+    compaction, never results. Runs under the slot writer lease (an
+    append serializes behind, or fails loudly against, a concurrent
+    compaction) and chains an append event onto the generation's stamp
+    (``append_index_marker``). Ingest loops pass the SLOT path: every
+    call re-resolves the live generation inside the lease, so appends
+    keep landing in the current generation across promotes."""
+    with slot_writer_lease(path, f"append_{spec.kind}"):
+        live = slot_live(path)
+        spark = rows.sparkSession
+        state = {d.name: d.read(spark, live) for d in spec.state}
+        _write_rows(spec, rows, state, live, "append")
+        append_index_marker(live)
+
+
+def compact(spec: IndexSpec, spark, path: str) -> str:
+    """Row-preserving layout restore after appended file generations:
+    copy the state dirs verbatim and rewrite every rows table once in
+    its declared layout — duplicates from retried appends included, so
+    query results are unchanged by construction. Manifest-managed slots
+    promote an atomic pointer (in-flight readers keep their generation);
+    explicit flat directories swap in place (``compact_into_generation``).
+    Accepts a slot path. Returns the live index path."""
+    import shutil
+
+    with slot_writer_lease(path, f"compact_{spec.kind}"):
+        live = slot_live(path)
+
+        def rewrite(dst: str) -> None:
+            for d in spec.state:
+                shutil.copytree(f"{live}/{d.name}", f"{dst}/{d.name}")
+            for t in spec.tables:
+                src, out = (
+                    (f"{live}/{t.name}", f"{dst}/{t.name}") if t.name else (live, dst)
+                )
+                _write_table(t, spark.read.parquet(src), out, "overwrite")
+
+        return compact_into_generation(live, rewrite)
+
+
+def ensure(spec: IndexSpec, spark, sf_dir: str) -> str:
+    """Marker-gated build of the registry slot for ``sf_dir``: reuse the
+    live generation untouched when its marker equals the spec's meta
+    plus the source signature, else build a new generation through the
+    real lifecycle — all of ``rows``, or, with a ``batch``, a build of
+    the rest then one ``append`` of the batch (state trained on all
+    rows), stamped after the append so the marker asserts the recorded
+    two-step state — and promote it (``ensure_index``). Returns the live
+    generation path."""
+    meta = {
+        "kind": spec.kind,
+        **spec.meta,
+        "source": source_signature(sf_dir, spec.source),
+    }
+
+    def _build(gen: str) -> None:
+        rows = spec.rows(spark, sf_dir)
+        state = spec.train(rows) if spec.train is not None else None
+        if spec.batch is None:
+            build(spec, rows, gen, state)
+        else:
+            build(spec, rows.filter(f"NOT ({spec.batch})"), gen, state)
+            append(spec, rows.filter(spec.batch), gen)
+
+    return ensure_index(scratch_path(spec.slot or spec.kind, sf_dir), meta, _build)

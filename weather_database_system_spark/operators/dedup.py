@@ -30,8 +30,17 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from weather_database_system_spark.indexstore import (
+    IndexSpec,
+    RowsTable,
+    compact,
+    ensure,
+    ensure_snapshot_state,
+    slot_live,
+    snapshot_equals_live_claim,
+)
 from weather_database_system_spark.operators.relational import DEC, _fr, _sql_fr
-from weather_database_system_spark.session import track_persisted
+from weather_database_system_spark.session import scratch_path, track_persisted
 from weather_database_system_spark.sources.star import load_table
 
 N_HASHES = 8          # minhash signature length
@@ -783,145 +792,43 @@ def dedup_against_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 DEDUP_INDEX_ALGO = 1  # bump on any digest/band layout or semantics change
 
 
-def build_dedup_index(docs: DataFrame, path: str) -> None:
-    """Build the stored dedup index ONCE — the ingest-side state
-    ``dedup_against_index``'s docstring says the in-query signature
-    recompute 'stands in for': BOTH probe tables persisted as parquet,
-    ``digests/`` (doc_id, dg) range-partitioned and sorted by dg, and
-    ``bands/`` (doc_id, band, bsig) range-partitioned and sorted by
-    (band, bsig) — each file covers a tight key range so the probe
-    joins shuffle index rows that arrive pre-clustered by their join
-    key. Same lifecycle as the trigram/IVF indexes: write once, grow by
-    ``append_dedup_index``, restore layout by ``compact_dedup_index``."""
+def _dedup_index_rows(docs: DataFrame, _state) -> dict[str, DataFrame]:
+    """Both probe tables of ``dedup_against_index`` as stored rows —
+    the state its in-query signature recompute 'stands in for':
+    (doc_id, dg) digests and (doc_id, band, bsig) band signatures."""
     n_part = docs.sparkSession.sparkContext.defaultParallelism
-    (
-        docs.select("doc_id", F.md5("text").alias("dg"))
-        .repartitionByRange(n_part, "dg")
-        .sortWithinPartitions("dg", "doc_id")
-        .write.mode("overwrite")
-        .parquet(f"{path}/digests")
-    )
-    (
-        _md5_signatures(docs, n_part)
+    return {
+        "digests": docs.select("doc_id", F.md5("text").alias("dg")),
+        "bands": _md5_signatures(docs, n_part)
         .select("doc_id", _band_explode())
-        .select("doc_id", "bb.band", "bb.bsig")
-        .repartitionByRange(n_part, "band", "bsig")
-        .sortWithinPartitions("band", "bsig", "doc_id")
-        .write.mode("overwrite")
-        .parquet(f"{path}/bands")
-    )
+        .select("doc_id", "bb.band", "bb.bsig"),
+    }
 
 
-def append_dedup_index(docs: DataFrame, path: str) -> None:
-    """Incremental ingest for the dedup index: a NEW batch's digests and
-    band signatures BLIND-APPEND as their own sorted file generations —
-    both tables are pure per-doc functions, so no merge or
-    read-modify-write ever happens (the trigram-postings mergeability).
-    A retried at-least-once batch duplicates rows; the prebuilt query
-    path distincts stored band rows before the bucket cap and resolves
-    matches with min() aggregates, so duplicates never change results
-    (pytest-pinned) — only bytes, until compaction. Appending chains an
-    append event onto the generation's stamp (session.append_index_marker
-    — ensure_* still reads the index as stale, but manifest-loss
-    recovery resolves to the index WITH its appends) and runs under the
-    slot writer lease (append vs compaction serializes or fails loudly,
-    never silently drops rows). Ingest loops pass the SLOT path: every
-    call re-resolves the live generation (session.slot_live), so appends
-    keep landing in the current generation across compaction promotes."""
-    from weather_database_system_spark.indexstore import (
-        append_index_marker,
-        slot_live,
-        slot_writer_lease,
-    )
-
-    with slot_writer_lease(path, "append_dedup"):
-        live = slot_live(path)
-        n_part = docs.sparkSession.sparkContext.defaultParallelism
-        (
-            docs.select("doc_id", F.md5("text").alias("dg"))
-            .repartitionByRange(n_part, "dg")
-            .sortWithinPartitions("dg", "doc_id")
-            .write.mode("append")
-            .parquet(f"{live}/digests")
-        )
-        (
-            _md5_signatures(docs, n_part)
-            .select("doc_id", _band_explode())
-            .select("doc_id", "bb.band", "bb.bsig")
-            .repartitionByRange(n_part, "band", "bsig")
-            .sortWithinPartitions("band", "bsig", "doc_id")
-            .write.mode("append")
-            .parquet(f"{live}/bands")
-        )
-        append_index_marker(live)
-
-
-def compact_dedup_index(spark: SparkSession, path: str) -> str:
-    """Maintenance pass restoring the single-file-generation sorted
-    layout of both index tables after ``append_dedup_index`` batches.
-    Row-preserving — duplicates from retried appends included (the query
-    path owns duplicate-safety, compaction owns layout) — so search
-    results are unchanged by construction. Manifest-managed slots
-    promote an atomic pointer (in-flight readers keep their generation);
-    explicit flat directories swap in place
-    (session.compact_into_generation). Accepts a slot path (re-resolved
-    to the live generation). Returns the live index path."""
-    from weather_database_system_spark.indexstore import (
-        compact_into_generation,
-        slot_live,
-        slot_writer_lease,
-    )
-
-    with slot_writer_lease(path, "compact_dedup"):
-        live = slot_live(path)
-
-        def rewrite(dst: str) -> None:
-            n_part = spark.sparkContext.defaultParallelism
-            for sub, keys in (
-                ("digests", ["dg"]),
-                ("bands", ["band", "bsig"]),
-            ):
-                (
-                    spark.read.parquet(f"{live}/{sub}")
-                    .repartitionByRange(n_part, *keys)
-                    .sortWithinPartitions(*keys, "doc_id")
-                    .write.mode("overwrite")
-                    .parquet(f"{dst}/{sub}")
-                )
-
-        return compact_into_generation(live, rewrite)
-
-
-def ensure_dedup_index(spark: SparkSession, sf_dir: str) -> str:
-    """Marker-gated build of the registry's dedup index slot: the INDEX
-    side is the even-doc_id half of the corpus (matching
-    ``dedup_against_index``'s split), populated through the REAL
-    lifecycle — bulk build of doc_id % 4 == 0, then one
-    ``append_dedup_index`` ingest batch of doc_id % 4 == 2 — and
-    stamped AFTER the append so the marker asserts the full recorded
-    two-generation state. Repeated calls (sweeps, the nprobe-style
-    twins, cold sessions) reuse it untouched."""
-    from weather_database_system_spark.indexstore import (
-        ensure_index,
-        source_signature,
-    )
-    from weather_database_system_spark.session import scratch_path
-
-    meta = {
-        "kind": "dedup_index",
+# The stored dedup index: digests sorted by dg and bands by (band, bsig),
+# so both probe joins read index rows pre-clustered by their join key. The
+# registry slot indexes the even-doc_id half of the corpus (matching
+# dedup_against_index's split): a build of doc_id % 4 == 0, then one
+# appended batch of doc_id % 4 == 2.
+DEDUP = IndexSpec(
+    kind="dedup_index",
+    meta={
         "algo": DEDUP_INDEX_ALGO,
         "n_hashes": N_HASHES,
         "n_bands": N_BANDS,
         "split": "even; build %4==0, append %4==2",
-        "source": source_signature(sf_dir, "documents"),
-    }
-
-    def _build(gen: str) -> None:
-        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-        build_dedup_index(docs.filter(F.pmod("doc_id", F.lit(4)) == 0), gen)
-        append_dedup_index(docs.filter(F.pmod("doc_id", F.lit(4)) == 2), gen)
-
-    return ensure_index(scratch_path("dedup_index", sf_dir), meta, _build)
+    },
+    source="documents",
+    tables=(
+        RowsTable("digests", ("dg",), ("dg", "doc_id")),
+        RowsTable("bands", ("band", "bsig"), ("band", "bsig", "doc_id")),
+    ),
+    encode=_dedup_index_rows,
+    rows=lambda spark, sf_dir: load_table(spark, sf_dir, "documents")
+    .select("doc_id", "text")
+    .filter("pmod(doc_id, 2) = 0"),
+    batch="pmod(doc_id, 4) = 2",
+)
 
 
 def dedup_against_index_prebuilt(
@@ -933,8 +840,8 @@ def dedup_against_index_prebuilt(
     """The 100 TB deployment form of ``dedup_against_index`` (r15,
     completing the stored-index trio with trigram postings and IVF):
     the corpus index — content digests AND banded MinHash signatures —
-    is BUILT ONCE (here through the real build-then-append lifecycle,
-    see ensure_dedup_index) and the QUERY recomputes signatures for the
+    is BUILT ONCE (here through the real build-then-append lifecycle
+    of the ``DEDUP`` spec) and the QUERY recomputes signatures for the
     ARRIVING BATCH ONLY (odd doc_ids), probing the stored tables with
     the same two keyed equi-joins. The in-query form's corpus-wide md5
     signature pipeline is absent from this plan — index docs are never
@@ -960,7 +867,7 @@ def dedup_against_index_prebuilt(
 
     ``path`` (tests): probe an explicit index slot instead of the
     marker-gated registry one (a slot path re-resolves to its live
-    generation per call — session.slot_live).
+    generation per call — indexstore.slot_live).
 
     ``batch`` is the CALLER's arriving delta (r16, VERDICT r15 task
     #1): any (doc_id, text) frame — an ingest micro-batch, a crawler's
@@ -969,10 +876,8 @@ def dedup_against_index_prebuilt(
     even collide with index doc_ids without cross-contaminating the
     probe sides. Default: the registry's pinned odd-doc_id half,
     keeping the DuckDB oracle hermetic."""
-    from weather_database_system_spark.indexstore import slot_live
-
     if path is None:
-        path = ensure_dedup_index(spark, sf_dir)
+        path = ensure(DEDUP, spark, sf_dir)
     path = slot_live(path)
     n_part = spark.sparkContext.defaultParallelism
     if batch is None:
@@ -1045,7 +950,7 @@ def dedup_against_index_prebuilt(
 def dedup_prebuilt_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SNAPSHOT read of the stored dedup index (r17 — snapshot reads
     generalized to every stored family via
-    session.ensure_snapshot_state): the arriving batch probes the
+    indexstore.ensure_snapshot_state): the arriving batch probes the
     RETAINED pre-compaction generation, answering as of the previous
     promote, with the engine-decided ``snapshot_equals_live`` claim
     pinned TRUE by the row-preserving compaction. The nullable
@@ -1053,16 +958,9 @@ def dedup_prebuilt_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-joins (plain column equality treats NULL ≠ NULL, which would
     flag every 'unique' row as divergent). Same in-query oracle +
     claim."""
-    from weather_database_system_spark.indexstore import (
-        ensure_snapshot_state,
-        slot_live,
-        snapshot_equals_live_claim,
-    )
-    from weather_database_system_spark.session import scratch_path
-
-    ensure_dedup_index(spark, sf_dir)
-    slot = scratch_path("dedup_index", sf_dir)
-    snap = ensure_snapshot_state(slot, lambda s: compact_dedup_index(spark, s))
+    ensure(DEDUP, spark, sf_dir)
+    slot = scratch_path(DEDUP.kind, sf_dir)
+    snap = ensure_snapshot_state(slot, lambda s: compact(DEDUP, spark, s))
     out = ["doc_id", "status", "matched_doc_id"]
 
     def _nullsafe(df):

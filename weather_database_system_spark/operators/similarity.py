@@ -22,11 +22,23 @@ broken by vec_id so results are deterministic across engines.
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from weather_database_system_spark.indexstore import (
+    IndexSpec,
+    RowsTable,
+    StateDir,
+    compact,
+    ensure,
+    ensure_snapshot_state,
+    slot_live,
+    snapshot_equals_live_claim,
+)
 from weather_database_system_spark.operators.relational import DEC, _fr
-from weather_database_system_spark.session import track_persisted
+from weather_database_system_spark.session import scratch_path, track_persisted
 from weather_database_system_spark.operators.dedup import (
     _dot_dec,
     _emb_double,
@@ -728,7 +740,7 @@ def train_ivf_centroids(
     materialization — r6 verdict #3). Factored out of ``_train_ivf`` so
     the index lifecycle can train a quantizer on ANY sample (the FAISS
     train() contract) — e.g. the base corpus before incremental
-    ``append_ivf_vectors`` batches."""
+    appended batches."""
     init = sorted(cand.orderBy("vec_id").limit(k_cells).collect(),
                   key=lambda r: r["vec_id"])
     cents = [(cell, list(r["emb"])) for cell, r in enumerate(init)]
@@ -788,55 +800,24 @@ def ann_ivf_kmeans_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def build_ivf_index(
-    spark: SparkSession, sf_dir: str, path: str, k_cells: int | None = None
-) -> None:
-    """Build the IVF index ONCE (the ingest-side cost every production
-    vector store amortizes — FAISS train()+add()): run the shared
-    deterministic Lloyd trainer and persist BOTH halves of the index —
-    ``centroids/`` (K rows: cell, emb — the routing table, KB-scale) and
-    ``assignments/`` (vec_id → cell, written partitionBy(cell) so each
-    learned cell IS a directory and a probe reads only its own files —
-    the physical-partitioning promise in ann_ivf_kmeans's docstring made
-    literal). Doubles round-trip parquet exactly, so a query routed via
-    the stored centroids lands in the same cell as the in-query trainer.
-
-    Sizing at scale (r16, VERDICT r15 task #2): ``k_cells=None`` — the
-    deployment default — sizes K = max(IVF_K_MIN, round(coef·√N)) from
-    the candidate count (the FAISS nlist rule, ``ivf_cell_count``), so
-    cells stay √N-bounded instead of growing linearly with the corpus;
-    measured at 16× corpus growth the fixed-K win had eroded to 1.25×
-    and √N-sizing restores it (tools/index_economics.py --multiples,
-    NOTES r16). The registry slot pins ``k_cells=K_CELLS`` via
-    ``ensure_ivf_index`` so its DuckDB Lloyd replay is untouched."""
-    vecs = _emb_double(spark, sf_dir).select("vec_id", "emb")
-    cand = track_persisted(
-        vecs.filter(F.col("vec_id") >= N_QUERIES)
+def index_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The (vec_id, emb array<double>) rows every stored vector index
+    trains on and stores: the embeddings past the N_QUERIES query rows,
+    repartitioned by vec_id before the persist (the small-SF parquet is
+    one split, and the Lloyd / encode folds are the CPU-bound stages)."""
+    return track_persisted(
+        _emb_double(spark, sf_dir)
+        .filter(F.col("vec_id") >= N_QUERIES)
+        .select("vec_id", "emb")
         .repartition(spark.sparkContext.defaultParallelism, "vec_id")
         .persist()
     )
-    if k_cells is None:
-        k_cells = ivf_cell_count(cand.count())
-    cents = train_ivf_centroids(cand, k_cells)
-    assigned = _assign_cells(cand, cents).select("vec_id", "cell")
-    _write_ivf_centroids(spark, cents, path)
-    _write_ivf_assignments(assigned, path)
 
 
 def _write_ivf_centroids(spark, cents, path: str) -> None:
     spark.createDataFrame(
         [(c, v) for c, v in cents], "cell int, emb array<double>"
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
-
-
-def _write_ivf_assignments(assigned: DataFrame, path: str, mode="overwrite") -> None:
-    (
-        assigned.select("vec_id", "cell")
-        .repartition("cell")
-        .write.mode(mode)
-        .partitionBy("cell")
-        .parquet(f"{path}/assignments")
-    )
 
 
 def read_ivf_centroids(spark: SparkSession, path: str) -> list[tuple[int, list[float]]]:
@@ -848,136 +829,77 @@ def read_ivf_centroids(spark: SparkSession, path: str) -> list[tuple[int, list[f
     )
 
 
+def _ivf_state(vecs: DataFrame, k_cells: int | None = K_CELLS) -> dict:
+    """Train the coarse quantizer (FAISS train()) with the shared
+    deterministic Lloyd trainer: ``k_cells`` cells, or — ``None``, the
+    deployment geometry — K = max(IVF_K_MIN, round(coef·√N)) from the
+    row count (``ivf_cell_count``), so cells stay √N-bounded as the
+    corpus grows (measured in tools/index_economics.py --multiples)."""
+    if k_cells is None:
+        k_cells = ivf_cell_count(vecs.count())
+    return {"centroids": train_ivf_centroids(vecs, k_cells)}
+
+
 IVF_INDEX_ALGO = 1  # bump on any training/layout/semantics change
+CENTROIDS = StateDir("centroids", _write_ivf_centroids, read_ivf_centroids)
+
+# The stored IVF index (FAISS train()+add()): ``centroids/`` (K rows, the
+# routing table) and ``assignments/`` (vec_id → cell, partitionBy(cell),
+# so each learned cell IS a directory and a probe reads only its own
+# files). Assignment is a pure function of (emb, stored centroids), so an
+# append ≡ a bulk add of the union against the same quantizer; doubles
+# round-trip parquet exactly, so a query routed via the stored centroids
+# lands in the same cell as the in-query trainer. The registry slot pins
+# k_cells=K_CELLS so its DuckDB Lloyd replay is untouched.
+IVF = IndexSpec(
+    kind="ivf_index",
+    meta={
+        "algo": IVF_INDEX_ALGO,
+        "k_cells": K_CELLS,
+        "iters": KMEANS_ITERS,
+        "n_queries": N_QUERIES,
+    },
+    source="embeddings",
+    tables=(RowsTable("assignments"),),
+    encode=lambda vecs, st: {
+        "assignments": _assign_cells(
+            vecs.select("vec_id", "emb"), st["centroids"]
+        ).select("vec_id", "cell")
+    },
+    rows=index_candidates,
+    state=(CENTROIDS,),
+    train=_ivf_state,
+)
 
 
 def ensure_ivf_index(
     spark: SparkSession, sf_dir: str, k_cells: int | None = K_CELLS
 ) -> str:
-    """Build the IVF index for ``sf_dir``'s embeddings IF its stored
-    generation is absent or stale (marker mismatch: algo version, config
-    constants, or source file signature changed), else reuse it
-    untouched. Returns the live generation path. Shared by BOTH prebuilt
-    registry variants, so one sweep trains Lloyd once instead of twice
-    (r14 VERDICT task #6) — and the skip path removes the ADVICE r14 #2
-    hazard where the second build's overwrite deleted parquet files
-    under the first call's still-lazy plan. A rebuild writes a NEW
-    generation and atomically promotes the slot's manifest pointer
-    (session.ensure_index), never disturbing readers of the old one.
-
-    ``k_cells`` defaults to the PINNED registry constant so the DuckDB
-    Lloyd replay is untouched; ``k_cells=None`` selects √N sizing
-    (``ivf_cell_count`` — the deployment geometry, used by
-    tools/index_economics.py) and lives in its OWN slot: sharing the
-    registry slot would make the two configurations endlessly rebuild
-    over each other's marker."""
-    from weather_database_system_spark.indexstore import (
-        ensure_index,
-        source_signature,
-    )
-    from weather_database_system_spark.session import scratch_path
-
-    meta = {
-        "kind": "ivf_index",
-        "algo": IVF_INDEX_ALGO,
-        "k_cells": "sqrt" if k_cells is None else k_cells,
-        "coef": IVF_CELL_COEF if k_cells is None else None,
-        "iters": KMEANS_ITERS,
-        "n_queries": N_QUERIES,
-        "source": source_signature(sf_dir, "embeddings"),
-    }
+    """The IVF slot for ``sf_dir`` at a cell-count geometry (``ensure``
+    with the ``IVF`` spec). ``k_cells`` defaults to the PINNED registry
+    constant so the DuckDB Lloyd replay is untouched; ``k_cells=None``
+    selects √N sizing (the deployment geometry, used by
+    tools/index_economics.py) and any other K lives in its OWN slot:
+    sharing the registry slot would make two configurations endlessly
+    rebuild over each other's marker."""
     if k_cells == K_CELLS:
-        meta.pop("coef")  # keep the pinned registry meta EXACTLY as r15's
-    slot = "ivf_index" if k_cells == K_CELLS else (
-        f"ivf_index_k{k_cells}" if k_cells is not None else "ivf_index_sqrt"
+        return ensure(IVF, spark, sf_dir)
+    spec = replace(
+        IVF,
+        slot="ivf_index_sqrt" if k_cells is None else f"ivf_index_k{k_cells}",
+        meta=IVF.meta | {
+            "k_cells": "sqrt" if k_cells is None else k_cells,
+            "coef": IVF_CELL_COEF if k_cells is None else None,
+        },
+        train=lambda vecs: _ivf_state(vecs, k_cells),
     )
-    return ensure_index(
-        scratch_path(slot, sf_dir),
-        meta,
-        lambda gen: build_ivf_index(spark, sf_dir, gen, k_cells=k_cells),
-    )
-
-
-def append_ivf_vectors(spark: SparkSession, vecs: DataFrame, path: str) -> None:
-    """Incremental add to a STORED IVF index (the FAISS add() contract,
-    r14 VERDICT task #1 — giving the vector index the trigram index's
-    lifecycle): assign the NEW (vec_id, emb array<double>) batch to the
-    stored centroids via the SAME literal argmin fold the query path
-    routes with — no retraining, no read of existing assignments — and
-    blind-append the (vec_id, cell) rows into their cell directories.
-    Because assignment is a pure deterministic function of (emb, stored
-    centroids), append ≡ bulk-add of the union against the same
-    quantizer, exactly (pytest-pinned, incl. search results); a retried
-    at-least-once batch duplicates rows, which the query path's
-    candidate dedup makes harmless (results unchanged — bytes only,
-    until compaction). Appending chains an append event onto the
-    generation's stamp (session.append_index_marker — r16 unification
-    of the old IVF marker-delete with the other families: ensure_* still
-    reads the index as stale, so ``ensure_ivf_index`` would rebuild the
-    slot, but manifest-loss recovery resolves to the index WITH its
-    appends) and runs under the slot writer lease (append vs compaction
-    serializes or fails loudly, never silently drops rows). At 100 TB
-    this is the only ingest shape that works: one argmin projection over
-    the batch + K directory appends — index bytes, never a corpus
-    retrain. Ingest loops pass the SLOT path: every call re-resolves the
-    live generation (session.slot_live), so appends keep landing in the
-    current generation across compaction promotes."""
-    from weather_database_system_spark.indexstore import (
-        append_index_marker,
-        slot_live,
-        slot_writer_lease,
-    )
-
-    with slot_writer_lease(path, "append_ivf"):
-        live = slot_live(path)
-        cents = read_ivf_centroids(spark, live)
-        _write_ivf_assignments(
-            _assign_cells(vecs.select("vec_id", "emb"), cents),
-            live,
-            mode="append",
-        )
-        append_index_marker(live)
-
-
-def compact_ivf_assignments(spark: SparkSession, path: str) -> str:
-    """Maintenance pass restoring the one-file-generation-per-cell layout
-    after ``append_ivf_vectors`` batches: read every appended file
-    generation, rewrite once repartitioned by cell, and swap. Row-
-    preserving by construction — search results unchanged (pytest-pinned)
-    — only file counts shrink, and only assignment bytes shuffle (the
-    KB-scale centroids are carried over verbatim). Manifest-managed
-    slots get an atomic pointer promote (in-flight readers keep their
-    generation); explicit flat directories swap in place
-    (session.compact_into_generation). Accepts a slot path (re-resolved
-    to the live generation). Returns the live index path."""
-    import shutil
-
-    from weather_database_system_spark.indexstore import (
-        compact_into_generation,
-        slot_live,
-        slot_writer_lease,
-    )
-
-    with slot_writer_lease(path, "compact_ivf"):
-        live = slot_live(path)
-
-        def rewrite(dst: str) -> None:
-            shutil.copytree(f"{live}/centroids", f"{dst}/centroids")
-            (
-                spark.read.parquet(f"{live}/assignments")
-                .repartition("cell")
-                .write.mode("overwrite")
-                .partitionBy("cell")
-                .parquet(f"{dst}/assignments")
-            )
-
-        return compact_into_generation(live, rewrite)
+    return ensure(spec, spark, sf_dir)
 
 
 def ann_ivf_prebuilt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The deployment form of IVF search (r14, completing the prebuilt-
     index pair with trigram_search_prebuilt): the quantizer is TRAINED
-    AND STORED once by ``build_ivf_index``; the QUERY path reads the K
+    AND STORED once (the ``IVF`` spec); the QUERY path reads the K
     stored centroid rows (collected to the same literal argmin fold the
     trainer uses — KB-scale driver state), routes each query to its
     cell, and joins the probed cells against the cell-partitioned
@@ -992,12 +914,12 @@ def ann_ivf_prebuilt(spark: SparkSession, sf_dir: str) -> DataFrame:
     same single-cell probe, same exact re-rank — so the same DuckDB
     oracle (full Lloyd replay in SQL) proves the stored index round-trip
     loses nothing. The build runs at most once per (source, config):
-    ``ensure_ivf_index``'s marker lets this entry, the nprobe twin, any
+    the ``IVF`` slot's marker lets this entry, the nprobe twin, any
     repeated sweep, and a later cold session share ONE stored build
     (r14 VERDICT task #6; ADVICE r14 #2). Reference parity: extension
     surface; cf. FAISS IVF / Jégou et al. 2011 for the public
     algorithm."""
-    path = ensure_ivf_index(spark, sf_dir)
+    path = ensure(IVF, spark, sf_dir)
     return ann_ivf_query_prebuilt(spark, sf_dir, path, nprobe=1)
 
 
@@ -1077,11 +999,8 @@ def ann_ivf_query_prebuilt(
     norms come from the provided vectors, so an arbitrary embedding
     finds its nearest indexed neighbors. Default: the registry's pinned
     first-N_QUERIES corpus rows, keeping the DuckDB oracle hermetic."""
-    from weather_database_system_spark.indexstore import slot_live
-    from weather_database_system_spark.session import scratch_path
-
     path = slot_live(
-        path if path is not None else scratch_path("ivf_index", sf_dir)
+        path if path is not None else scratch_path(IVF.kind, sf_dir)
     )
     cents = read_ivf_centroids(spark, path)
     assigned = spark.read.parquet(f"{path}/assignments")
@@ -1148,10 +1067,10 @@ def ann_ivf_prebuilt_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     read back loss-free), so the same widened-probe-CTE oracle replays
     it; recall(nprobe=2) ≥ recall(nprobe=1) is pinned for the in-query
     twin and transfers verbatim (identical outputs). Shares the stored
-    build with ann_ivf_prebuilt via ``ensure_ivf_index`` — one Lloyd
+    build with ann_ivf_prebuilt (the ``IVF`` slot) — one Lloyd
     train per sweep instead of two, and no overwrite-under-lazy-plan
     hazard (r14 VERDICT task #6; ADVICE r14 #2)."""
-    path = ensure_ivf_index(spark, sf_dir)
+    path = ensure(IVF, spark, sf_dir)
     return ann_ivf_query_prebuilt(spark, sf_dir, path, nprobe=NPROBE)
 
 
@@ -1161,8 +1080,9 @@ IVF_APPEND_MOD = 5  # vec_id % 5 == 4 arrives as the incremental batch
 def ann_ivf_prebuilt_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-checked exercise of the IVF index LIFECYCLE (r15, VERDICT
     r14 task #1): the index is populated in two generations — a bulk
-    build of the base corpus (vec_id % 5 != 4) followed by an
-    ``append_ivf_vectors`` ingest batch of the rest — and the query
+    build of the base corpus (vec_id % 5 != 4) followed by an appended
+    ingest batch of the rest (``ensure`` with the ``IVF`` spec and a
+    ``batch``) — and the query
     runs over the appended index. The quantizer is trained once on the
     full candidate sample and STORED; the append assigns its batch to
     those stored centroids via the same argmin fold the bulk build uses,
@@ -1183,38 +1103,17 @@ def ann_ivf_prebuilt_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Same build-once economics as the other prebuilt entries: the
     two-generation state is stamped with its own marker AFTER the append
-    (``append_ivf_vectors`` itself drops any marker — an appended index
-    is not a pure build of its source — so the stamp here asserts the
-    FULL recorded lifecycle, not just the bulk build), and repeated
-    calls reuse it instead of retraining Lloyd per sweep."""
-    from weather_database_system_spark.indexstore import (
-        ensure_index,
-        source_signature,
+    (a chained append marker never equals a build meta, so the stamp
+    here asserts the FULL recorded lifecycle, not just the bulk build),
+    and repeated calls reuse it instead of retraining Lloyd per
+    sweep."""
+    spec = replace(
+        IVF,
+        kind="ivf_index_appended",
+        meta=IVF.meta | {"append_mod": IVF_APPEND_MOD},
+        batch=f"pmod(vec_id, {IVF_APPEND_MOD}) = {IVF_APPEND_MOD - 1}",
     )
-    from weather_database_system_spark.session import scratch_path
-
-    meta = {
-        "kind": "ivf_index_appended",
-        "algo": IVF_INDEX_ALGO,
-        "append_mod": IVF_APPEND_MOD,
-        "k_cells": K_CELLS,
-        "iters": KMEANS_ITERS,
-        "n_queries": N_QUERIES,
-        "source": source_signature(sf_dir, "embeddings"),
-    }
-
-    def _build(gen: str) -> None:
-        _, cand, assigned, cents = _train_ivf(spark, sf_dir)
-        _write_ivf_centroids(spark, cents, gen)
-        is_batch = (
-            F.pmod(F.col("vec_id"), F.lit(IVF_APPEND_MOD)) == IVF_APPEND_MOD - 1
-        )
-        _write_ivf_assignments(assigned.filter(~is_batch), gen)
-        append_ivf_vectors(
-            spark, cand.filter(is_batch).select("vec_id", "emb"), gen
-        )
-
-    path = ensure_index(scratch_path("ivf_index_appended", sf_dir), meta, _build)
+    path = ensure(spec, spark, sf_dir)
     return ann_ivf_query_prebuilt(spark, sf_dir, path, nprobe=1)
 
 
@@ -1278,13 +1177,13 @@ def ann_ivf_prebuilt_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SNAPSHOT read of the stored IVF index — the second family to
     surface the grace-generation time travel as a registry query (r17,
     VERDICT r16 task #5; bm25_prebuilt_snapshot is the template and the
-    proof ``session.snapshot_generation`` generalizes). IVF is where a
+    proof ``indexstore.snapshot_generation`` generalizes). IVF is where a
     snapshot diverging from live matters most: appends mutate cell
     directories, so an in-flight training job reading the retained
     pre-compaction generation must see the index AS OF its promote, not
     the compactor's rewrite. The two-generation state is created once
     through the REAL maintenance path (ensure-build, then one gated
-    row-preserving ``compact_ivf_assignments`` whose promote retains the
+    row-preserving ``compact`` whose promote retains the
     pre-compaction generation); because compaction preserves rows and
     centroids verbatim, the snapshot's search answers equal the live
     ones — pinned by the engine-decided ``snapshot_equals_live`` claim
@@ -1293,18 +1192,9 @@ def ann_ivf_prebuilt_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     retained generation is a faithful, readable snapshot. Snapshot
     immutability under a post-snapshot append that diverges live is
     pytest-pinned for the family lifecycle."""
-    from weather_database_system_spark.indexstore import (
-        ensure_snapshot_state,
-        slot_live,
-        snapshot_equals_live_claim,
-    )
-    from weather_database_system_spark.session import scratch_path
-
-    ensure_ivf_index(spark, sf_dir)
-    slot = scratch_path("ivf_index", sf_dir)
-    snap = ensure_snapshot_state(
-        slot, lambda s: compact_ivf_assignments(spark, s)
-    )
+    ensure(IVF, spark, sf_dir)
+    slot = scratch_path(IVF.kind, sf_dir)
+    snap = ensure_snapshot_state(slot, lambda s: compact(IVF, spark, s))
     snap_df = ann_ivf_query_prebuilt(spark, sf_dir, snap, nprobe=1)
     live_df = ann_ivf_query_prebuilt(spark, sf_dir, slot_live(slot), nprobe=1)
     # cosine is safe in the claim key: the dot products accumulate in
@@ -1638,114 +1528,18 @@ def read_pq_books(spark: SparkSession, path: str):
     return books
 
 
-def _write_pq_codes(codes_long: DataFrame, path: str, mode="overwrite") -> None:
-    n_part = codes_long.sparkSession.sparkContext.defaultParallelism
-    (
-        codes_long.repartitionByRange(n_part, "vec_id")
-        .sortWithinPartitions("vec_id", "m")
-        .write.mode(mode)
-        .parquet(f"{path}/codes")
-    )
+CODEBOOKS = StateDir("codebooks", _write_pq_codebooks, read_pq_books)
 
-
-def build_pq_index(spark: SparkSession, sf_dir: str, path: str) -> None:
-    """Build the PQ index ONCE (FAISS IndexPQ train()+add()): train the
-    M codebooks with the shared deterministic batched Lloyd and persist
-    both halves — ``codebooks/`` (M·K rows, the KB-scale routing state)
-    and ``codes/`` (vec_id, m, code — M small ints per vector, the 16×
-    compressed store that replaces raw floats at 100 TB), vec_id-sorted
-    so each file covers a tight id range."""
-    vecs = _emb_double(spark, sf_dir)
-    cand = track_persisted(
-        vecs.filter(F.col("vec_id") >= N_QUERIES)
-        .select("vec_id", "emb")
-        .repartition(spark.sparkContext.defaultParallelism, "vec_id")
-        .persist()
-    )
-    books = train_pq_books(cand)
-    _write_pq_codebooks(spark, books, path)
-    _write_pq_codes(encode_pq_codes(cand, books), path)
-
-
-def append_pq_codes(spark: SparkSession, vecs: DataFrame, path: str) -> None:
-    """Incremental add to a STORED PQ index: encode the NEW (vec_id, emb
-    array<double>) batch with the stored codebooks — encoding is a pure
-    deterministic function of (emb, books), so append ≡ bulk-encode of
-    the union EXACTLY, no retraining — and blind-append the (vec_id, m,
-    code) rows. A retried at-least-once batch duplicates code rows; the
-    prebuilt query path distincts (vec_id, m) before the ADC sum (a
-    duplicated row would otherwise DOUBLE its subspace's distance
-    contribution and corrupt the ranking — the sharpest duplicate
-    hazard of the four stored indexes, pytest-pinned). Appending chains
-    an append event onto the generation's stamp
-    (session.append_index_marker: ensure_* still reads it as stale, but
-    manifest-loss recovery keeps the appends) and runs under the slot
-    writer lease (append vs compaction serializes or fails loudly).
-    Ingest loops pass the SLOT path: every call re-resolves the live
-    generation (session.slot_live)."""
-    from weather_database_system_spark.indexstore import (
-        append_index_marker,
-        slot_live,
-        slot_writer_lease,
-    )
-
-    with slot_writer_lease(path, "append_pq"):
-        live = slot_live(path)
-        books = read_pq_books(spark, live)
-        _write_pq_codes(
-            encode_pq_codes(vecs.select("vec_id", "emb"), books),
-            live,
-            mode="append",
-        )
-        append_index_marker(live)
-
-
-def compact_pq_codes(spark: SparkSession, path: str) -> str:
-    """Row-preserving layout restore for the codes table after appended
-    file generations (codebooks — KB-scale — carried over verbatim).
-    Manifest-managed slots promote an atomic pointer; explicit flat
-    directories swap in place (session.compact_into_generation).
-    Accepts a slot path (re-resolved to the live generation). Returns
-    the live index path."""
-    import shutil
-
-    from weather_database_system_spark.indexstore import (
-        compact_into_generation,
-        slot_live,
-        slot_writer_lease,
-    )
-
-    with slot_writer_lease(path, "compact_pq"):
-        live = slot_live(path)
-
-        def rewrite(dst: str) -> None:
-            shutil.copytree(f"{live}/codebooks", f"{dst}/codebooks")
-            n_part = spark.sparkContext.defaultParallelism
-            (
-                spark.read.parquet(f"{live}/codes")
-                .repartitionByRange(n_part, "vec_id")
-                .sortWithinPartitions("vec_id", "m")
-                .write.mode("overwrite")
-                .parquet(f"{dst}/codes")
-            )
-
-        return compact_into_generation(live, rewrite)
-
-
-def ensure_pq_index(spark: SparkSession, sf_dir: str) -> str:
-    """Marker-gated build of the registry's PQ index slot, through the
-    REAL lifecycle: codebooks trained once on the full candidate sample,
-    bulk encode of the base half (candidate vec_id % 2 == 0), then one
-    ``append_pq_codes`` ingest batch of the rest — stamped AFTER the
-    append so the marker asserts the recorded two-generation state."""
-    from weather_database_system_spark.indexstore import (
-        ensure_index,
-        source_signature,
-    )
-    from weather_database_system_spark.session import scratch_path
-
-    meta = {
-        "kind": "pq_index",
+# The stored PQ index (FAISS IndexPQ train()+add()): ``codebooks/`` (M·K
+# rows) and ``codes/`` (vec_id, m, code — M small ints per vector, the 16×
+# compressed store that replaces raw floats at 100 TB), vec_id-sorted so
+# each file covers a tight id range. Encoding is a pure function of (emb,
+# stored books), so an append ≡ a bulk encode of the union EXACTLY. The
+# registry slot trains the books on the full candidate sample, builds
+# the base half (candidate vec_id % 2 == 0) and appends the rest.
+PQ = IndexSpec(
+    kind="pq_index",
+    meta={
         "algo": PQ_INDEX_ALGO,
         "append_mod": PQ_APPEND_MOD,
         "pq_m": PQ_M,
@@ -1753,24 +1547,17 @@ def ensure_pq_index(spark: SparkSession, sf_dir: str) -> str:
         "pq_k": PQ_K,
         "iters": KMEANS_ITERS,
         "n_queries": N_QUERIES,
-        "source": source_signature(sf_dir, "embeddings"),
-    }
-
-    def _build(gen: str) -> None:
-        vecs = _emb_double(spark, sf_dir)
-        cand = track_persisted(
-            vecs.filter(F.col("vec_id") >= N_QUERIES)
-            .select("vec_id", "emb")
-            .repartition(spark.sparkContext.defaultParallelism, "vec_id")
-            .persist()
-        )
-        books = train_pq_books(cand)
-        _write_pq_codebooks(spark, books, gen)
-        is_batch = F.pmod("vec_id", F.lit(PQ_APPEND_MOD)) == PQ_APPEND_MOD - 1
-        _write_pq_codes(encode_pq_codes(cand.filter(~is_batch), books), gen)
-        append_pq_codes(spark, cand.filter(is_batch), gen)
-
-    return ensure_index(scratch_path("pq_index", sf_dir), meta, _build)
+    },
+    source="embeddings",
+    tables=(RowsTable("codes", ("vec_id",), ("vec_id", "m")),),
+    encode=lambda vecs, st: {
+        "codes": encode_pq_codes(vecs.select("vec_id", "emb"), st["codebooks"])
+    },
+    rows=index_candidates,
+    batch=f"pmod(vec_id, {PQ_APPEND_MOD}) = {PQ_APPEND_MOD - 1}",
+    state=(CODEBOOKS,),
+    train=lambda vecs: {"codebooks": train_pq_books(vecs)},
+)
 
 
 def ann_pq_query_prebuilt(
@@ -1796,11 +1583,8 @@ def ann_pq_query_prebuilt(
     out-of-corpus queries PQ's normal case (Jégou et al. 2011 §III).
     Default: the registry's pinned first-N_QUERIES corpus rows, keeping
     the DuckDB oracle hermetic."""
-    from weather_database_system_spark.indexstore import slot_live
-    from weather_database_system_spark.session import scratch_path
-
     path = slot_live(
-        path if path is not None else scratch_path("pq_index", sf_dir)
+        path if path is not None else scratch_path(PQ.kind, sf_dir)
     )
     books = read_pq_books(spark, path)
     codes = spark.read.parquet(f"{path}/codes").dropDuplicates(["vec_id", "m"])
@@ -1817,7 +1601,7 @@ def ann_pq_prebuilt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The stored-index deployment form of PQ search (r15, completing
     the stored-index QUARTET: trigram postings, IVF, dedup, PQ): the
     codebooks and the compressed code store are built ONCE through the
-    real train-then-add lifecycle (ensure_pq_index: bulk encode + one
+    real train-then-add lifecycle (the ``PQ`` spec: bulk encode + one
     appended ingest batch) and the query reads ONLY index bytes — M
     small ints per candidate instead of 64 floats, the whole point of
     PQ at 100 TB. Codebooks are trained on the full candidate sample,
@@ -1828,7 +1612,7 @@ def ann_pq_prebuilt(spark: SparkSession, sf_dir: str) -> DataFrame:
     (_pq_checked), replaying the SAME oracle. The equality itself is
     pytest-pinned; the float-ADC interior remains covered by the numpy
     replay pytest."""
-    path = ensure_pq_index(spark, sf_dir)
+    path = ensure(PQ, spark, sf_dir)
     return _pq_checked(spark, sf_dir, ann_pq_query_prebuilt(spark, sf_dir, path))
 
 
@@ -1921,57 +1705,24 @@ def _with_residual(
     )
 
 
-def _write_ivfpq_codes(codes: DataFrame, path: str, mode: str = "overwrite") -> None:
-    (
-        codes.select("cell", "vec_id", "m", "code")
-        .repartition("cell")
-        .write.mode(mode)
-        .partitionBy("cell")
-        .parquet(f"{path}/codes")
-    )
+def _ivfpq_state(vecs: DataFrame, k_cells: int | None = None) -> dict:
+    """Train both halves of the composition on the same rows: the coarse
+    quantizer (√N cells unless ``k_cells`` pins test geometry) and the M
+    subspace codebooks over the RAW vectors."""
+    return _ivf_state(vecs, k_cells) | {"codebooks": train_pq_books(vecs)}
 
 
-def build_ivfpq_index(
-    spark: SparkSession, sf_dir: str, path: str, k_cells: int | None = None
-) -> None:
-    """Build the IVF+PQ index ONCE (FAISS IndexIVFPQ train()+add()):
-    train the √N-sized coarse quantizer (``k_cells=None`` → the
-    ivf_cell_count rule; an explicit K pins test geometry) and the M
-    subspace codebooks with the shared deterministic Lloyd trainers,
-    then persist all three halves — ``centroids/`` (K rows, the routing
-    table), ``codebooks/`` (M·K rows, the ADC tables' source), and
-    ``codes/`` PARTITIONED BY CELL (cell, vec_id, m, code): each learned
-    cell IS a directory of M-byte codes, so a probe reads nprobe/K of a
-    16×-compressed store by directory — the only layout in the ANN
-    family where BOTH prunings (cell partition + float→code compression)
-    compound."""
-    vecs = _emb_double(spark, sf_dir).select("vec_id", "emb")
-    cand = track_persisted(
-        vecs.filter(F.col("vec_id") >= N_QUERIES)
-        .repartition(spark.sparkContext.defaultParallelism, "vec_id")
-        .persist()
-    )
-    if k_cells is None:
-        k_cells = ivf_cell_count(cand.count())
-    cents = train_ivf_centroids(cand, k_cells)
-    books = train_pq_books(cand)
-    _write_ivf_centroids(spark, cents, path)
-    _write_pq_codebooks(spark, books, path)
-    _write_ivfpq_codes(_encode_ivfpq(cand, cents, books), path)
-
-
-def ensure_ivfpq_index(spark: SparkSession, sf_dir: str) -> str:
-    """Marker-gated build of the IVF+PQ slot at the DEPLOYMENT geometry
-    (√N cells — the configuration the sizing rule recommends is exactly
-    what this index stores and the registry entry oracle-checks)."""
-    from weather_database_system_spark.indexstore import (
-        ensure_index,
-        source_signature,
-    )
-    from weather_database_system_spark.session import scratch_path
-
-    meta = {
-        "kind": "ivfpq_index",
+# The stored IVF+PQ index (FAISS IndexIVFPQ train()+add()): ``centroids/``
+# (K rows, the routing table), ``codebooks/`` (M·K rows, the ADC tables'
+# source) and ``codes/`` PARTITIONED BY CELL (cell, vec_id, m, code): each
+# learned cell IS a directory of M-byte codes, so a probe reads nprobe/K
+# of a 16×-compressed store by directory — the only layout in the ANN
+# family where both prunings compound. Routing and encoding are pure
+# functions of (emb, stored state), so an append ≡ a bulk build of the
+# union exactly. The registry slot stores the deployment geometry (√N).
+IVFPQ = IndexSpec(
+    kind="ivfpq_index",
+    meta={
         "algo": IVFPQ_INDEX_ALGO,
         "k_cells": "sqrt",
         "coef": IVF_CELL_COEF,
@@ -1980,72 +1731,16 @@ def ensure_ivfpq_index(spark: SparkSession, sf_dir: str) -> str:
         "pq_subdim": PQ_SUBDIM,
         "pq_k": PQ_K,
         "n_queries": N_QUERIES,
-        "source": source_signature(sf_dir, "embeddings"),
-    }
-    return ensure_index(
-        scratch_path("ivfpq_index", sf_dir),
-        meta,
-        lambda gen: build_ivfpq_index(spark, sf_dir, gen),
-    )
-
-
-def append_ivfpq_vectors(spark: SparkSession, vecs: DataFrame, path: str) -> None:
-    """Incremental add to a STORED IVF+PQ index: route the new (vec_id,
-    emb array<double>) batch with the stored centroids AND encode it
-    with the stored codebooks in the one shared projection
-    (_encode_ivfpq — both pure functions, so append ≡ bulk build of the
-    union exactly, pytest-pinned), then blind-append into the cell
-    directories. A retried at-least-once batch duplicates code rows;
-    the query path distincts (query, vec, m) before the ADC sum (the
-    append_pq_codes hazard — a duplicate would double one subspace's
-    distance). Chains the append onto the generation's stamp and runs
-    under the slot writer lease, exactly as the other five families."""
-    from weather_database_system_spark.indexstore import (
-        append_index_marker,
-        slot_live,
-        slot_writer_lease,
-    )
-
-    with slot_writer_lease(path, "append_ivfpq"):
-        live = slot_live(path)
-        cents = read_ivf_centroids(spark, live)
-        books = read_pq_books(spark, live)
-        _write_ivfpq_codes(
-            _encode_ivfpq(vecs.select("vec_id", "emb"), cents, books),
-            live,
-            mode="append",
-        )
-        append_index_marker(live)
-
-
-def compact_ivfpq_codes(spark: SparkSession, path: str) -> str:
-    """Row-preserving layout restore for the cell-partitioned code store
-    after appended file generations (centroids + codebooks — KB-scale —
-    carried over verbatim). Manifest-managed slots promote an atomic
-    pointer; flat directories swap in place. Returns the live path."""
-    import shutil
-
-    from weather_database_system_spark.indexstore import (
-        compact_into_generation,
-        slot_live,
-        slot_writer_lease,
-    )
-
-    with slot_writer_lease(path, "compact_ivfpq"):
-        live = slot_live(path)
-
-        def rewrite(dst: str) -> None:
-            shutil.copytree(f"{live}/centroids", f"{dst}/centroids")
-            shutil.copytree(f"{live}/codebooks", f"{dst}/codebooks")
-            (
-                spark.read.parquet(f"{live}/codes")
-                .repartition("cell")
-                .write.mode("overwrite")
-                .partitionBy("cell")
-                .parquet(f"{dst}/codes")
-            )
-
-        return compact_into_generation(live, rewrite)
+    },
+    source="embeddings",
+    tables=(RowsTable("codes"),),
+    encode=lambda vecs, st: {
+        "codes": _encode_ivfpq(vecs, st["centroids"], st["codebooks"])
+    },
+    rows=index_candidates,
+    state=(CENTROIDS, CODEBOOKS),
+    train=_ivfpq_state,
+)
 
 
 def ann_ivfpq_query_prebuilt(
@@ -2069,11 +1764,8 @@ def ann_ivfpq_query_prebuilt(
     contribution). ``queries_df``: the caller's (query_id long, emb
     array<double>) rows, in-corpus or not — routing and the ADC table
     both derive from the raw caller vector."""
-    from weather_database_system_spark.indexstore import slot_live
-    from weather_database_system_spark.session import scratch_path
-
     path = slot_live(
-        path if path is not None else scratch_path("ivfpq_index", sf_dir)
+        path if path is not None else scratch_path(IVFPQ.kind, sf_dir)
     )
     cents = read_ivf_centroids(spark, path)
     books = read_pq_books(spark, path)
@@ -2136,7 +1828,7 @@ def ann_ivfpq_prebuilt(spark: SparkSession, sf_dir: str) -> DataFrame:
     the deployable plan (ann_ivfpq_query_prebuilt) is what a cluster
     runs and is plan-pinned to ONE cell-pruned codes scan with no raw
     candidate floats."""
-    path = ensure_ivfpq_index(spark, sf_dir)
+    path = ensure(IVFPQ, spark, sf_dir)
     return _ivfpq_checked(spark, sf_dir, path, nprobe=1)
 
 
@@ -2151,8 +1843,8 @@ def ann_ivfpq_prebuilt_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     widened routing CTE, and cells_ok verifies every returned
     neighbor's independently recomputed cell lies IN the query's probed
     set. Shares the stored build with ann_ivfpq_prebuilt
-    (ensure_ivfpq_index — one composed build per sweep)."""
-    path = ensure_ivfpq_index(spark, sf_dir)
+    (the ``IVFPQ`` slot — one composed build per sweep)."""
+    path = ensure(IVFPQ, spark, sf_dir)
     return _ivfpq_checked(spark, sf_dir, path, nprobe=NPROBE)
 
 
@@ -2285,44 +1977,25 @@ def _pq_qtable_cells(qr: DataFrame, books) -> DataFrame:
     )
 
 
-def build_ivfpq_residual_index(
-    spark: SparkSession, sf_dir: str, path: str, k_cells: int | None = None
-) -> None:
-    """Build the residual-encoded IVF+PQ index ONCE: train the √N coarse
-    quantizer, compute every candidate's residual against its assigned
-    centroid, train the M codebooks ON THE RESIDUALS (same deterministic
-    batched Lloyd — init is the PQ_K lowest-vec_id residuals), and
-    persist centroids + residual codebooks + cell-partitioned residual
-    codes. Same layout as the raw composition; only what the codes MEAN
-    differs (recorded in the marker's by_residual field)."""
-    vecs = _emb_double(spark, sf_dir).select("vec_id", "emb")
-    cand = track_persisted(
-        vecs.filter(F.col("vec_id") >= N_QUERIES)
-        .repartition(spark.sparkContext.defaultParallelism, "vec_id")
-        .persist()
-    )
-    if k_cells is None:
-        k_cells = ivf_cell_count(cand.count())
-    cents = train_ivf_centroids(cand, k_cells)
-    resid = track_persisted(_with_residual(cand, cents).persist())
-    books = train_pq_books(resid.select("vec_id", "emb"))
-    _write_ivf_centroids(spark, cents, path)
-    _write_pq_codebooks(spark, books, path)
-    _write_ivfpq_codes(_encode_cell_codes(resid, books), path)
+def _ivfpq_res_state(vecs: DataFrame, k_cells: int | None = None) -> dict:
+    """Train the residual composition: the √N coarse quantizer, then the
+    M codebooks ON THE RESIDUALS x − centroid[cell(x)] (same
+    deterministic batched Lloyd — init is the PQ_K lowest-vec_id
+    residuals). The residual frame is persisted for the Lloyd rounds;
+    the encoder's identical plan reads it back from the cache."""
+    st = _ivf_state(vecs, k_cells)
+    resid = track_persisted(_with_residual(vecs, st["centroids"]).persist())
+    return st | {"codebooks": train_pq_books(resid.select("vec_id", "emb"))}
 
 
-def ensure_ivfpq_residual_index(spark: SparkSession, sf_dir: str) -> str:
-    """Marker-gated build of the residual-composition slot (√N cells —
-    the same deployment geometry as the raw composition, its own slot
-    so the two encodings never rebuild over each other's marker)."""
-    from weather_database_system_spark.indexstore import (
-        ensure_index,
-        source_signature,
-    )
-    from weather_database_system_spark.session import scratch_path
-
-    meta = {
-        "kind": "ivfpq_res_index",
+# The residual-encoded IVF+PQ index: the raw composition's layout, but the
+# codes quantize residuals against the stored centroids (recorded in the
+# marker's by_residual field) — assign, residualize, encode, all pure
+# functions of (emb, stored state), so an append ≡ a rebuild exactly. Its
+# own slot, so the two encodings never rebuild over each other's marker.
+IVFPQ_RES = IndexSpec(
+    kind="ivfpq_res_index",
+    meta={
         "algo": IVFPQ_RES_ALGO,
         "by_residual": True,
         "k_cells": "sqrt",
@@ -2332,41 +2005,18 @@ def ensure_ivfpq_residual_index(spark: SparkSession, sf_dir: str) -> str:
         "pq_subdim": PQ_SUBDIM,
         "pq_k": PQ_K,
         "n_queries": N_QUERIES,
-        "source": source_signature(sf_dir, "embeddings"),
-    }
-    return ensure_index(
-        scratch_path("ivfpq_res_index", sf_dir),
-        meta,
-        lambda gen: build_ivfpq_residual_index(spark, sf_dir, gen),
-    )
-
-
-def append_ivfpq_residual_vectors(
-    spark: SparkSession, vecs: DataFrame, path: str
-) -> None:
-    """Incremental add to the residual composition: assign, residualize
-    against the STORED centroids, encode with the STORED residual books
-    — all pure functions, so append ≡ rebuild exactly (the same
-    property as every other family; pytest-pinned) — and blind-append
-    under the writer lease with a chained marker."""
-    from weather_database_system_spark.indexstore import (
-        append_index_marker,
-        slot_live,
-        slot_writer_lease,
-    )
-
-    with slot_writer_lease(path, "append_ivfpq_res"):
-        live = slot_live(path)
-        cents = read_ivf_centroids(spark, live)
-        books = read_pq_books(spark, live)
-        _write_ivfpq_codes(
-            _encode_cell_codes(
-                _with_residual(vecs.select("vec_id", "emb"), cents), books
-            ),
-            live,
-            mode="append",
+    },
+    source="embeddings",
+    tables=(RowsTable("codes"),),
+    encode=lambda vecs, st: {
+        "codes": _encode_cell_codes(
+            _with_residual(vecs, st["centroids"]), st["codebooks"]
         )
-        append_index_marker(live)
+    },
+    rows=index_candidates,
+    state=(CENTROIDS, CODEBOOKS),
+    train=_ivfpq_res_state,
+)
 
 
 def ann_ivfpq_residual_query_prebuilt(
@@ -2384,11 +2034,8 @@ def ann_ivfpq_residual_query_prebuilt(
     cell's residual frame. Same index-priced plan shape as the raw
     composition: one cell-pruned codes scan, KB-scale broadcasts, raw
     candidate floats nowhere."""
-    from weather_database_system_spark.indexstore import slot_live
-    from weather_database_system_spark.session import scratch_path
-
     path = slot_live(
-        path if path is not None else scratch_path("ivfpq_res_index", sf_dir)
+        path if path is not None else scratch_path(IVFPQ_RES.kind, sf_dir)
     )
     cents = read_ivf_centroids(spark, path)
     books = read_pq_books(spark, path)
@@ -2472,7 +2119,7 @@ def ann_ivfpq_residual_prebuilt(spark: SparkSession, sf_dir: str) -> DataFrame:
     books, the cell-keyed ADC join) under the full oracle gate rather
     than a distortion win the data cannot exhibit; the numpy replay
     pytest pins exact neighbor sets either way."""
-    path = ensure_ivfpq_residual_index(spark, sf_dir)
+    path = ensure(IVFPQ_RES, spark, sf_dir)
     return _ivfpq_checked(
         spark, sf_dir, path, nprobe=1, query_fn=ann_ivfpq_residual_query_prebuilt
     )
@@ -2485,16 +2132,9 @@ def ann_pq_prebuilt_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     spine + claims as ann_pq_prebuilt (_pq_checked), plus the
     engine-decided ``snapshot_equals_live`` claim over the raw ADC
     outputs — pinned TRUE by the row-preserving compaction."""
-    from weather_database_system_spark.indexstore import (
-        ensure_snapshot_state,
-        slot_live,
-        snapshot_equals_live_claim,
-    )
-    from weather_database_system_spark.session import scratch_path
-
-    ensure_pq_index(spark, sf_dir)
-    slot = scratch_path("pq_index", sf_dir)
-    snap = ensure_snapshot_state(slot, lambda s: compact_pq_codes(spark, s))
+    ensure(PQ, spark, sf_dir)
+    slot = scratch_path(PQ.kind, sf_dir)
+    snap = ensure_snapshot_state(slot, lambda s: compact(PQ, spark, s))
     # ONE snapshot query feeds both the claim and the checked spine
     # (persisted inside _pq_checked); the claim joins on the DISCRETE
     # columns only — adc_d2 is a float sum whose partial-aggregation
@@ -2528,16 +2168,9 @@ def ann_ivfpq_prebuilt_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     claims as ann_ivfpq_prebuilt (_ivfpq_checked over the snapshot path)
     plus the engine-decided ``snapshot_equals_live`` claim over the raw
     ADC outputs, pinned TRUE by the row-preserving compaction."""
-    from weather_database_system_spark.indexstore import (
-        ensure_snapshot_state,
-        slot_live,
-        snapshot_equals_live_claim,
-    )
-    from weather_database_system_spark.session import scratch_path
-
-    ensure_ivfpq_index(spark, sf_dir)
-    slot = scratch_path("ivfpq_index", sf_dir)
-    snap = ensure_snapshot_state(slot, lambda s: compact_ivfpq_codes(spark, s))
+    ensure(IVFPQ, spark, sf_dir)
+    slot = scratch_path(IVFPQ.kind, sf_dir)
+    snap = ensure_snapshot_state(slot, lambda s: compact(IVFPQ, spark, s))
     # one snapshot query shared by claim and spine; claim on DISCRETE
     # columns only (the adc_d2 float-sum/layout caveat — see
     # ann_pq_prebuilt_snapshot)

@@ -15,6 +15,22 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from weather_database_system_spark.indexstore import (
+    IndexSpec,
+    RowsTable,
+    append,
+    build,
+    compact,
+    ensure,
+    ensure_index,
+    ensure_snapshot_state,
+    read_index_marker,
+    resolve_generation,
+    slot_live,
+    snapshot_equals_live_claim,
+    snapshot_generation,
+    source_signature,
+)
 from weather_database_system_spark.operators.relational import DEC, _fr, _sql_fr
 from weather_database_system_spark.operators.dedup import (
     MAX_POSTING_LEN,
@@ -25,6 +41,7 @@ from weather_database_system_spark.operators.dedup import (
     _sql_grams,
     _tokens,
 )
+from weather_database_system_spark.session import scratch_path, track_persisted
 from weather_database_system_spark.sources.star import load_table
 
 # Tiny per-language stopword lists for the n-gram/stopword-hit heuristic.
@@ -317,157 +334,51 @@ def _bm25_rank(tf: DataFrame, stats: DataFrame) -> DataFrame:
     ).orderBy("rank")
 
 
-def _bm25_index_path(sf_dir: str) -> str:
-    from weather_database_system_spark.session import scratch_path
-
-    return scratch_path("bm25_index", sf_dir)
-
-
-def _bm25_base(docs: DataFrame) -> DataFrame:
-    """(doc_id, dl, toks) — the one tokenize pass both index tables and
-    the in-query form derive from (single-tokenizer contract)."""
-    return docs.select("doc_id", _tokens(F.col("text")).alias("toks")).select(
-        "doc_id", F.size("toks").alias("dl"), "toks"
-    )
-
-
-def _write_bm25_tables(base: DataFrame, path: str, mode: str) -> None:
-    """Write/append BOTH index tables from one tokenize pass:
-    ``postings/`` (term, doc_id, tf, dl — Lucene postings with the
-    doc-length norm denormalized onto the row, range-partitioned and
-    term-sorted so a query's ``term IN (...)`` prunes to the few files
-    holding those posting lists) and ``doclens/`` (doc_id, dl — one row
-    per doc INCLUDING zero-match docs, because N and avgdl are corpus
-    statistics, not match statistics)."""
-    n_part = base.sparkSession.sparkContext.defaultParallelism
-    b = base.persist()
-    try:
-        (
-            b.select("doc_id", "dl")
-            .repartitionByRange(n_part, "doc_id")
-            .sortWithinPartitions("doc_id")
-            .write.mode(mode)
-            .parquet(f"{path}/doclens")
-        )
-        (
-            b.select("doc_id", "dl", F.explode("toks").alias("term"))
-            .groupBy("doc_id", "term")
-            .agg(F.count("*").alias("tf"), F.first("dl").alias("dl"))
-            .repartitionByRange(n_part, "term")
-            .sortWithinPartitions("term", "doc_id")
-            .write.mode(mode)
-            .parquet(f"{path}/postings")
-        )
-    finally:
-        b.unpersist()
-
-
-def build_bm25_index(docs: DataFrame, path: str) -> None:
-    """Build the Lucene-style BM25 index ONCE — full-vocabulary postings
-    (the index cannot know future queries) plus the doc-length table.
-    Everything score-relevant that is GLOBAL (N, avgdl, df) is computed
-    at query time FROM INDEX BYTES, which is what makes the append story
-    exact (see append_bm25_docs)."""
-    _write_bm25_tables(_bm25_base(docs), path, mode="overwrite")
-
-
-def append_bm25_docs(docs: DataFrame, path: str) -> None:
-    """Incremental ingest for the BM25 index: a NEW batch's postings and
-    doc lengths BLIND-APPEND as their own sorted file generations — both
-    tables are pure per-doc functions, so no merge or read-modify-write
-    ever happens. The subtlety vs the other four index families: BM25
-    scores depend on CORPUS-GLOBAL statistics (N, avgdl, df) that change
-    with every append — a stored-score or stored-df design would go
-    stale on ingest. Here df is aggregated at query time from the PRUNED
-    posting lists (|query|-term-sized) and N/avgdl from the doclens
-    table (doc-count-sized) — all index bytes — so append ≡ rebuild
-    EXACTLY, by construction (pytest-pinned). A retried at-least-once
-    batch duplicates rows; the query path dedups (doc_id, term) postings
-    and doc_id doclens before any statistic, so duplicates never change
-    results (pytest-pinned) — only bytes, until compaction. Appending
-    chains an append event onto the generation's stamp
-    (session.append_index_marker): ensure_* still reads it as stale,
-    but manifest-loss recovery resolves to the index WITH its appends.
-    Runs under the slot writer lease — an append serializes behind (or
-    fails loudly against) a concurrent compaction, never silently lands
-    in a generation the compactor is about to supersede. Ingest loops
-    pass the SLOT path: every call re-resolves the live generation
-    (session.slot_live) inside the lease."""
-    from weather_database_system_spark.indexstore import (
-        append_index_marker,
-        slot_live,
-        slot_writer_lease,
-    )
-
-    with slot_writer_lease(path, "append_bm25"):
-        live = slot_live(path)
-        _write_bm25_tables(_bm25_base(docs), live, mode="append")
-        append_index_marker(live)
-
-
-def compact_bm25_index(spark: SparkSession, path: str) -> str:
-    """Row-preserving layout restore for both BM25 index tables after
-    appended file generations. Manifest-managed slots promote an atomic
-    pointer; explicit flat directories swap in place
-    (session.compact_into_generation). Returns the live index path."""
-    from weather_database_system_spark.indexstore import (
-        compact_into_generation,
-        slot_live,
-        slot_writer_lease,
-    )
-
-    with slot_writer_lease(path, "compact_bm25"):
-        live = slot_live(path)
-
-        def rewrite(dst: str) -> None:
-            n_part = spark.sparkContext.defaultParallelism
-            for sub, keys in (
-                ("doclens", ["doc_id"]),
-                ("postings", ["term", "doc_id"]),
-            ):
-                (
-                    spark.read.parquet(f"{live}/{sub}")
-                    .repartitionByRange(n_part, keys[0])
-                    .sortWithinPartitions(*keys)
-                    .write.mode("overwrite")
-                    .parquet(f"{dst}/{sub}")
-                )
-
-        return compact_into_generation(live, rewrite)
-
-
 BM25_INDEX_ALGO = 1  # bump on any posting-layout/semantics change
 BM25_APPEND_MOD = 4  # doc_id % MOD == MOD-1 arrives as the ingest batch
 
 
-def ensure_bm25_index(spark: SparkSession, sf_dir: str) -> str:
-    """Marker-gated build of the registry's BM25 index slot, through the
-    REAL lifecycle: bulk build of doc_id % 4 != 3, then one
-    ``append_bm25_docs`` ingest batch of the rest — stamped AFTER the
-    append so the marker asserts the recorded two-generation state.
-    Because every global statistic is query-time-derived from index
-    bytes, the two-generation index answers bit-identically to a
-    one-shot build of the full corpus (the property the oracle then
-    proves end-to-end)."""
-    from weather_database_system_spark.indexstore import (
-        ensure_index,
-        source_signature,
+def _bm25_index_rows(docs: DataFrame, _state) -> dict[str, DataFrame]:
+    """Both BM25 index tables from ONE tokenize pass (single-tokenizer
+    contract, persisted because both tables read it): ``doclens`` (doc_id,
+    dl — one row per doc INCLUDING zero-match docs, because N and avgdl
+    are corpus statistics, not match statistics) and ``postings`` (term,
+    doc_id, tf, dl — Lucene postings with the doc-length norm
+    denormalized onto the row)."""
+    base = track_persisted(
+        docs.select("doc_id", _tokens(F.col("text")).alias("toks"))
+        .select("doc_id", F.size("toks").alias("dl"), "toks")
+        .persist()
     )
-
-    meta = {
-        "kind": "bm25_index",
-        "algo": BM25_INDEX_ALGO,
-        "append_mod": BM25_APPEND_MOD,
-        "source": source_signature(sf_dir, "documents"),
+    return {
+        "doclens": base.select("doc_id", "dl"),
+        "postings": base.select("doc_id", "dl", F.explode("toks").alias("term"))
+        .groupBy("doc_id", "term")
+        .agg(F.count("*").alias("tf"), F.first("dl").alias("dl")),
     }
 
-    def _build(gen: str) -> None:
-        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-        is_batch = F.pmod("doc_id", F.lit(BM25_APPEND_MOD)) == BM25_APPEND_MOD - 1
-        build_bm25_index(docs.filter(~is_batch), gen)
-        append_bm25_docs(docs.filter(is_batch), gen)
 
-    return ensure_index(_bm25_index_path(sf_dir), meta, _build)
+# The Lucene-style BM25 index: full-vocabulary postings (the index cannot
+# know future queries) term-sorted so a query's ``term IN (...)`` prunes to
+# the few files holding those lists, plus the doc-length table. Every
+# GLOBAL score input (N, avgdl, df) is aggregated at query time from
+# index bytes, never stored, so an append ≡ a rebuild EXACTLY
+# (pytest-pinned). The registry slot: a build of doc_id % 4 != 3, then
+# one appended batch of the rest.
+BM25 = IndexSpec(
+    kind="bm25_index",
+    meta={"algo": BM25_INDEX_ALGO, "append_mod": BM25_APPEND_MOD},
+    source="documents",
+    tables=(
+        RowsTable("doclens", ("doc_id",), ("doc_id",)),
+        RowsTable("postings", ("term",), ("term", "doc_id")),
+    ),
+    encode=_bm25_index_rows,
+    rows=lambda spark, sf_dir: load_table(spark, sf_dir, "documents").select(
+        "doc_id", "text"
+    ),
+    batch=f"pmod(doc_id, {BM25_APPEND_MOD}) = {BM25_APPEND_MOD - 1}",
+)
 
 
 def bm25_query_prebuilt(
@@ -495,10 +406,8 @@ def bm25_query_prebuilt(
     its DuckDB oracle stays hermetic. Any term set rides the same
     pushed ``In`` filter — query cost scales with the chosen terms'
     posting lists, never the index."""
-    from weather_database_system_spark.indexstore import slot_live
-
     terms = tuple(terms) if terms is not None else BM25_QUERY
-    path = slot_live(path if path is not None else _bm25_index_path(sf_dir))
+    path = slot_live(path if path is not None else scratch_path(BM25.kind, sf_dir))
     tf = (
         spark.read.parquet(f"{path}/postings")
         .filter(F.col("term").isin(*terms))
@@ -519,7 +428,7 @@ def bm25_prebuilt(spark: SparkSession, sf_dir: str) -> DataFrame:
     and PQ — and the proof the lifecycle machinery is a reusable
     abstraction, not four hand-builds): the inverted index is built once
     through the real bulk-build + appended-ingest-batch lifecycle
-    (ensure_bm25_index) and the query reads ONLY index bytes. Output is
+    (the ``BM25`` spec) and the query reads ONLY index bytes. Output is
     bit-identical to ``bm25_search`` — same tokenizer, same tf/df/stats
     values, same shared scoring tail (_bm25_rank) — so the same DuckDB
     oracle (full-corpus tokenize + score replay) proves the stored
@@ -527,13 +436,13 @@ def bm25_prebuilt(spark: SparkSession, sf_dir: str) -> DataFrame:
     lose nothing, end to end. Reference parity: extension surface (the
     reference has no ranked retrieval); cf. Robertson & Zaragoza 2009 /
     Apache Lucene for the public algorithm and index shape."""
-    path = ensure_bm25_index(spark, sf_dir)
+    path = ensure(BM25, spark, sf_dir)
     return bm25_query_prebuilt(spark, sf_dir, path)
 
 
 def bm25_prebuilt_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SNAPSHOT read of the stored BM25 index (r16, VERDICT r15 task #7
-    — the grace-generation time travel ``session.snapshot_generation``
+    — the grace-generation time travel ``indexstore.snapshot_generation``
     supports, surfaced as a registry query): generations are immutable
     once superseded, so querying the retained NON-LIVE generation
     answers the index state as of the previous promote — Iceberg-style
@@ -550,32 +459,13 @@ def bm25_prebuilt_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     faithful, readable snapshot. A post-snapshot APPEND diverges live
     from snapshot without touching the snapshot's bytes
     (pytest-pinned)."""
-    import os
-
-    from weather_database_system_spark.indexstore import (
-        slot_live,
-        snapshot_generation,
-    )
-
-    live = ensure_bm25_index(spark, sf_dir)
-    slot = os.path.dirname(live.rstrip("/"))
-    if snapshot_generation(slot) is None:
-        compact_bm25_index(spark, slot)
-    snap = snapshot_generation(slot)
+    ensure(BM25, spark, sf_dir)
+    slot = scratch_path(BM25.kind, sf_dir)
+    snap = ensure_snapshot_state(slot, lambda s: compact(BM25, spark, s))
     snap_df = bm25_query_prebuilt(spark, sf_dir, snap)
     live_df = bm25_query_prebuilt(spark, sf_dir, slot_live(slot))
     on = ["rank", "doc_id", "bm25"]
-    a_sl = snap_df.join(live_df, on, "left_anti").agg(
-        F.count("*").alias("n_only_snap")
-    )
-    a_ls = live_df.join(snap_df, on, "left_anti").agg(
-        F.count("*").alias("n_only_live")
-    )
-    claims = a_sl.crossJoin(F.broadcast(a_ls)).select(
-        ((F.col("n_only_snap") == 0) & (F.col("n_only_live") == 0))
-        .cast("int")
-        .alias("snapshot_equals_live")
-    )
+    claims = snapshot_equals_live_claim(snap_df, live_df, on)
     return (
         snap_df.crossJoin(F.broadcast(claims))
         .select("rank", "doc_id", "bm25", "snapshot_equals_live")
@@ -601,7 +491,7 @@ def _ensure_bm25_diverged_state(
        build meta, so only a source/algo change rebuilds);
     2. ONE row-preserving compaction retains the pre-compaction
        generation as the snapshot (``ensure_snapshot_state``, meta-gated);
-    3. ONE ``append_bm25_docs`` ingest of the held-out batch diverges
+    3. ONE ``append`` ingest of the held-out batch diverges
        LIVE — gated on the live marker's append count (0 → append;
        a crash mid-append re-appends, which the query path's
        doc_id/term dedup makes harmless — the documented at-least-once
@@ -611,17 +501,6 @@ def _ensure_bm25_diverged_state(
     meta, 1 append) catches externally-mutated slots and rebuilds from
     scratch once rather than serving an undiverged state."""
     import shutil
-
-    from weather_database_system_spark.indexstore import (
-        ensure_index,
-        ensure_snapshot_state,
-        read_index_marker,
-        resolve_generation,
-        slot_live,
-        snapshot_generation,
-        source_signature,
-    )
-    from weather_database_system_spark.session import scratch_path
 
     slot = scratch_path("bm25_diverged", sf_dir)
     meta = {
@@ -638,12 +517,12 @@ def _ensure_bm25_diverged_state(
     if base != meta or n_app > 1:
         ensure_index(
             slot, meta,
-            lambda gen: build_bm25_index(docs.filter(~is_batch), gen),
+            lambda gen: build(BM25, docs.filter(~is_batch), gen),
         )
-    ensure_snapshot_state(slot, lambda s: compact_bm25_index(spark, s))
+    ensure_snapshot_state(slot, lambda s: compact(BM25, spark, s))
     live = slot_live(slot)
     if read_index_marker(live)[1] == 0:
-        append_bm25_docs(docs.filter(is_batch), slot)
+        append(BM25, docs.filter(is_batch), slot)
 
     snap, live = snapshot_generation(slot), slot_live(slot)
     sb, sn = read_index_marker(snap) if snap is not None else (None, -1)
@@ -836,8 +715,6 @@ def tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: idf floor-rounds to 6 decimals first; every pairwise
     product and squared norm accumulates in DECIMAL (order-independent);
     the threshold compares the unrounded engine-identical cosine."""
-    from weather_database_system_spark.session import track_persisted
-
     docs = load_table(spark, sf_dir, "documents")
     # One task per split otherwise (small corpus = one parquet split): the
     # token and shingle explodes are the CPU-bound stages, spread them — the
@@ -1117,8 +994,6 @@ def heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned engine-decided claims the oracle asserts held: cm_overest_ok
     (CM never undercounts — the no-false-negative guarantee) and
     cm_bound_ok ((est−n)·W ≤ MULT·N, decided in exact integer space)."""
-    from weather_database_system_spark.session import track_persisted
-
     docs = load_table(spark, sf_dir, "documents")
     grams = docs.select(F.explode(_grams(_tokens(F.col("text")), 2)).alias("g"))
     # vocab-factored: occurrences collapse to (g, weight) BEFORE the d-way
@@ -1186,8 +1061,6 @@ def heavy_hitters_cms_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     Vocab-factored like the batch twin since r13 (grams collapse to
     (batch, g, weight) before hashing/exploding) — Zipf-regime 32× point
     56.4 → 50.1 s, 8×→32× exponent 0.94 → 0.80, output bit-identical."""
-    from weather_database_system_spark.session import track_persisted
-
     docs = load_table(spark, sf_dir, "documents")
     grams = docs.select(
         F.pmod(F.col("doc_id"), F.lit(HH_STREAM_BATCHES)).alias("batch"),
@@ -1349,103 +1222,27 @@ def _trigram_search(docs: DataFrame, needle: str) -> DataFrame:
     return _verify_contains(docs, cand, needle)
 
 
-def _trigram_index_path(sf_dir: str) -> str:
-    """Deterministic scratch path for the prebuilt posting index, keyed
-    by the source dir so repeated runs overwrite instead of accumulate
-    (shared scratch contract: session.scratch_path)."""
-    from weather_database_system_spark.session import scratch_path
+TRIGRAM_INDEX_ALGO = 1  # bump on any posting-layout/semantics change
 
-    return scratch_path("trigram_postings", sf_dir)
-
-
-def _posting_frame(docs: DataFrame) -> DataFrame:
-    """Distinct (doc_id, tri) postings for EVERY trigram of every doc
-    (the index cannot know future needles), range-partitioned and sorted
-    by ``tri`` so each parquet file covers a tight trigram range —
-    file/row-group min-max statistics then prune an ``IN (needle
-    trigrams)`` probe to the few files actually holding those lists."""
-    return _posting_frame_from(
-        docs.select("doc_id", F.explode(F.array_distinct(_tri_arr())).alias("tri"))
-    )
-
-
-def build_trigram_postings(docs: DataFrame, path: str) -> None:
-    """Build the pg_trgm-style posting index ONCE — the write-once
-    ingest-side cost that trigram_search_prebuilt amortizes away from
-    the query path."""
-    _posting_frame(docs).write.mode("overwrite").parquet(path)
-
-
-def append_trigram_postings(docs: DataFrame, path: str) -> None:
-    """Incremental ingest for the posting index: a NEW batch's postings
-    BLIND-APPEND as their own tri-sorted file generation. Because the
-    index rows are (doc_id, tri), no merge or read-modify-write is ever
-    needed — the same blind-append mergeability the fingerprint partials
-    rely on (pytest-pinned: build(batch₁) + append(batch₂) answers every
-    search identically to build(batch₁ ∪ batch₂)). A retried at-least-once
-    batch (foreachBatch replay) duplicates its (doc_id, tri) rows; the
-    query gate counts DISTINCT trigrams per doc (ADVICE r14 #1), so
-    duplicated postings never change results — only bytes. Pruning
-    degrades gracefully, one tri-range file generation per appended
-    batch; ``compact_trigram_postings`` restores the single-generation
-    layout without touching correctness. Appending chains an append
-    event onto the generation's stamp (session.append_index_marker —
-    ensure_* still reads the index as stale, but manifest-loss recovery
-    keeps the appends) and runs under the slot writer lease (append vs
-    compaction serializes or fails loudly, never silently drops rows).
-    Ingest loops pass the SLOT path: every call re-resolves the live
-    generation (session.slot_live) inside the lease, so appends keep
-    landing in the current generation across compaction promotes."""
-    from weather_database_system_spark.indexstore import (
-        append_index_marker,
-        slot_live,
-        slot_writer_lease,
-    )
-
-    with slot_writer_lease(path, "append_trigram"):
-        live = slot_live(path)
-        _posting_frame(docs).write.mode("append").parquet(live)
-        append_index_marker(live)
-
-
-def compact_trigram_postings(spark: SparkSession, path: str) -> str:
-    """Maintenance pass restoring the single-file-generation layout after
-    ``append_trigram_postings`` batches: read every appended file
-    generation, rewrite once range-partitioned + tri-sorted (each file
-    again covers one tight trigram range, so min-max pruning is back to
-    build-time quality), and swap. Search results are unchanged by
-    construction — compaction is a row-preserving rewrite (pytest-pinned)
-    — only pruning improves, and only index bytes shuffle, never corpus
-    bytes. The swap goes through session.compact_into_generation: a
-    manifest-managed slot gets an atomic pointer promote (in-flight
-    readers keep their generation — the 100 TB shape, r15); an explicit
-    flat directory gets the recoverable in-place rename-aside (ADVICE
-    r14 #3). Accepts a slot path (re-resolved to the live generation).
-    Returns the live path after compaction."""
-    from weather_database_system_spark.indexstore import (
-        compact_into_generation,
-        slot_live,
-        slot_writer_lease,
-    )
-
-    with slot_writer_lease(path, "compact_trigram"):
-        live = slot_live(path)
-
-        def rewrite(dst: str) -> None:
-            _posting_frame_from(spark.read.parquet(live)).write.mode(
-                "overwrite"
-            ).parquet(dst)
-
-        return compact_into_generation(live, rewrite)
-
-
-def _posting_frame_from(postings: DataFrame) -> DataFrame:
-    """Range-partition + sort an existing (doc_id, tri) posting frame —
-    the layout half of ``_posting_frame`` without the trigram extract."""
-    n_part = postings.sparkSession.sparkContext.defaultParallelism
-    return postings.repartitionByRange(n_part, "tri").sortWithinPartitions(
-        "tri", "doc_id"
-    )
+# The pg_trgm-style posting index: distinct (doc_id, tri) postings for
+# EVERY trigram of every doc (the index cannot know future needles),
+# stored at the generation root, range-partitioned and sorted by ``tri``
+# so each file covers a tight trigram range and an ``IN (needle
+# trigrams)`` probe prunes to the few files holding those lists.
+TRIGRAM = IndexSpec(
+    kind="trigram_postings",
+    meta={"algo": TRIGRAM_INDEX_ALGO},
+    source="documents",
+    tables=(RowsTable("", ("tri",), ("tri", "doc_id")),),
+    encode=lambda docs, _state: {
+        "": docs.select(
+            "doc_id", F.explode(F.array_distinct(_tri_arr())).alias("tri")
+        )
+    },
+    rows=lambda spark, sf_dir: load_table(spark, sf_dir, "documents").select(
+        "doc_id", "text"
+    ),
+)
 
 
 def trigram_search_prebuilt(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1466,44 +1263,14 @@ def trigram_search_prebuilt(spark: SparkSession, sf_dir: str) -> DataFrame:
     match and the contains-verify makes the result exact (the DuckDB
     oracle replays the unindexed full-scan LIKE; the hash match proves
     exactness end-to-end). The build runs at most once per (source,
-    config) — ``ensure_trigram_postings``'s marker makes repeated calls
+    config) — the ``TRIGRAM`` slot's marker makes repeated calls
     (and the cold fresh-session read, pytest-pinned) reuse the stored
     files instead of rewriting them under a still-lazy sibling plan
     (ADVICE r14 #2). Reference parity: extension surface (the reference
     has no text search); cf. pg_trgm (PostgreSQL contrib) for the
     public algorithm."""
-    path = ensure_trigram_postings(spark, sf_dir)
+    path = ensure(TRIGRAM, spark, sf_dir)
     return trigram_query_prebuilt(spark, sf_dir, path)
-
-
-TRIGRAM_INDEX_ALGO = 1  # bump on any posting-layout/semantics change
-
-
-def ensure_trigram_postings(spark: SparkSession, sf_dir: str) -> str:
-    """Build the posting index for ``sf_dir``'s documents table IF its
-    live generation is absent or stale (marker mismatch: algo version
-    or source file signature changed), else reuse it untouched. Returns
-    the live generation path. The skip path is what lets every prebuilt
-    consumer in one sweep — and a later cold session — share ONE build;
-    a rebuild writes a NEW generation and atomically promotes the slot's
-    manifest pointer (session.ensure_index), so readers of the previous
-    generation are never disturbed."""
-    from weather_database_system_spark.indexstore import (
-        ensure_index,
-        source_signature,
-    )
-
-    meta = {
-        "kind": "trigram_postings",
-        "algo": TRIGRAM_INDEX_ALGO,
-        "source": source_signature(sf_dir, "documents"),
-    }
-
-    def _build(gen: str) -> None:
-        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-        build_trigram_postings(docs, gen)
-
-    return ensure_index(_trigram_index_path(sf_dir), meta, _build)
 
 
 def trigram_query_prebuilt(
@@ -1531,10 +1298,10 @@ def trigram_query_prebuilt(
     contract) rides the same pushed ``In(tri, ...)`` probe + contains
     verify."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    from weather_database_system_spark.indexstore import slot_live
-
     needle = needle if needle is not None else TRIGRAM_NEEDLE
-    path = slot_live(path if path is not None else _trigram_index_path(sf_dir))
+    path = slot_live(
+        path if path is not None else scratch_path(TRIGRAM.kind, sf_dir)
+    )
     postings = spark.read.parquet(path)
     tris = _needle_tris(needle)
     cand = (
@@ -1550,21 +1317,13 @@ def trigram_query_prebuilt(
 def trigram_prebuilt_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SNAPSHOT read of the stored trigram posting index (r17 —
     snapshot reads generalized from the bm25/IVF pair to EVERY stored
-    family via session.ensure_snapshot_state): the grace generation
+    family via indexstore.ensure_snapshot_state): the grace generation
     answers the pinned search as of the previous promote, with the
     engine-decided ``snapshot_equals_live`` claim pinned TRUE by the
     row-preserving compaction; same unindexed-LIKE oracle + claim."""
-    from weather_database_system_spark.indexstore import (
-        ensure_snapshot_state,
-        slot_live,
-        snapshot_equals_live_claim,
-    )
-
-    ensure_trigram_postings(spark, sf_dir)
-    slot = _trigram_index_path(sf_dir)
-    snap = ensure_snapshot_state(
-        slot, lambda s: compact_trigram_postings(spark, s)
-    )
+    ensure(TRIGRAM, spark, sf_dir)
+    slot = scratch_path(TRIGRAM.kind, sf_dir)
+    snap = ensure_snapshot_state(slot, lambda s: compact(TRIGRAM, spark, s))
     snap_df = trigram_query_prebuilt(spark, sf_dir, snap)
     live_df = trigram_query_prebuilt(spark, sf_dir, slot_live(slot))
     on = ["doc_id", "lang", "first_pos", "n_occurrences"]

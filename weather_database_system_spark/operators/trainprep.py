@@ -32,6 +32,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from weather_database_system_spark.indexstore import (
+    IndexSpec,
+    RowsTable,
+    compact,
+    ensure,
+    ensure_snapshot_state,
+    slot_live,
+    snapshot_equals_live_claim,
+)
 from weather_database_system_spark.operators.dedup import (
     _SQL_SHINGLES,
     _grams,
@@ -51,6 +60,7 @@ from weather_database_system_spark.operators.textan import (
     _quality_score,
     _sql_hits,
 )
+from weather_database_system_spark.session import scratch_path, track_persisted
 from weather_database_system_spark.sources.star import load_table
 
 
@@ -440,116 +450,37 @@ def tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
 CONTAM_INDEX_ALGO = 1  # bump on any gram/layout/semantics change
 
 
-def _eval_gram_frame(eval_docs: DataFrame) -> DataFrame:
-    """Stored-index rows for an eval suite: per-doc DISTINCT
-    CONTAM_NGRAM-grams as (eval_doc_id, gram), range-partitioned and
-    sorted by gram so probe joins shuffle index rows that arrive
-    pre-clustered by their join key (the trigram-postings layout)."""
-    n_part = eval_docs.sparkSession.sparkContext.defaultParallelism
-    return (
-        eval_docs.select(
+# The stored eval-set fingerprint index: per-doc DISTINCT
+# CONTAM_NGRAM-grams as (eval_doc_id, gram) at the generation root,
+# gram-sorted so probe joins read index rows pre-clustered by their join
+# key. A benchmark suite is fingerprinted once at suite ingest and new
+# suites append; every arriving training batch probes the stored grams
+# (the GPT-3 §C / PaLM collision check run as index bytes, never
+# re-tokenizing the eval corpus). The registry slot: a build of the first
+# half of the stand-in eval set, then one appended batch of the rest.
+CONTAMINATION = IndexSpec(
+    kind="contamination_index",
+    meta={
+        "algo": CONTAM_INDEX_ALGO,
+        "ngram": CONTAM_NGRAM,
+        "eval_max": EVAL_SET_MAX_DOC,
+        "split": "build < MAX/2, append rest",
+    },
+    source="documents",
+    tables=(RowsTable("", ("gram",), ("gram", "eval_doc_id")),),
+    encode=lambda eval_docs, _state: {
+        "": eval_docs.select(
             F.col("doc_id").alias("eval_doc_id"),
             F.explode(
                 F.array_distinct(_grams(_tokens(F.col("text")), CONTAM_NGRAM))
             ).alias("gram"),
         )
-        .repartitionByRange(n_part, "gram")
-        .sortWithinPartitions("gram", "eval_doc_id")
-    )
-
-
-def build_contamination_index(eval_docs: DataFrame, path: str) -> None:
-    """Build the stored eval-set fingerprint index ONCE — the SIXTH
-    stored family, and the decontamination pass's reusable state: a
-    benchmark suite's n-grams are fingerprinted once at suite ingest,
-    then EVERY arriving training batch probes them (the GPT-3 §C /
-    PaLM collision check run as index bytes, never re-tokenizing the
-    eval corpus). Same lifecycle as the other five families: write
-    once, grow by ``append_contamination_grams`` when new benchmarks
-    land, restore layout by ``compact_contamination_index``."""
-    _eval_gram_frame(eval_docs).write.mode("overwrite").parquet(path)
-
-
-def append_contamination_grams(eval_docs: DataFrame, path: str) -> None:
-    """Incremental ingest for the contamination index: a NEW eval
-    suite's grams BLIND-APPEND as their own gram-sorted file generation
-    (pure per-doc function — no merge, the trigram mergeability). A
-    retried at-least-once batch duplicates (eval_doc_id, gram) rows;
-    the query's aggregates are countDistinct/min by construction, so
-    duplicates can never change results (pytest-pinned) — only bytes,
-    until compaction. Appending chains an append event onto the
-    generation's stamp (session.append_index_marker) and runs under
-    the slot writer lease. Ingest loops pass the SLOT path
-    (session.slot_live re-resolves the live generation per call)."""
-    from weather_database_system_spark.indexstore import (
-        append_index_marker,
-        slot_live,
-        slot_writer_lease,
-    )
-
-    with slot_writer_lease(path, "append_contamination"):
-        live = slot_live(path)
-        _eval_gram_frame(eval_docs).write.mode("append").parquet(live)
-        append_index_marker(live)
-
-
-def compact_contamination_index(spark: SparkSession, path: str) -> str:
-    """Row-preserving layout restore after appended file generations:
-    one gram-sorted generation again, results unchanged by construction.
-    Manifest-managed slots promote an atomic pointer; explicit flat
-    directories swap in place (session.compact_into_generation)."""
-    from weather_database_system_spark.indexstore import (
-        compact_into_generation,
-        slot_live,
-        slot_writer_lease,
-    )
-
-    with slot_writer_lease(path, "compact_contamination"):
-        live = slot_live(path)
-
-        def rewrite(dst: str) -> None:
-            n_part = spark.sparkContext.defaultParallelism
-            (
-                spark.read.parquet(live)
-                .repartitionByRange(n_part, "gram")
-                .sortWithinPartitions("gram", "eval_doc_id")
-                .write.mode("overwrite")
-                .parquet(dst)
-            )
-
-        return compact_into_generation(live, rewrite)
-
-
-def ensure_contamination_index(spark: SparkSession, sf_dir: str) -> str:
-    """Marker-gated build of the registry's contamination slot through
-    the REAL lifecycle: bulk build of the first half of the stand-in
-    eval set (doc_id < EVAL_SET_MAX_DOC/2), then one
-    ``append_contamination_grams`` batch of the rest — stamped AFTER
-    the append so the marker asserts the recorded two-generation
-    state. Repeated calls (sweeps, cold sessions) reuse it untouched."""
-    from weather_database_system_spark.indexstore import (
-        ensure_index,
-        source_signature,
-    )
-    from weather_database_system_spark.session import scratch_path
-
-    meta = {
-        "kind": "contamination_index",
-        "algo": CONTAM_INDEX_ALGO,
-        "ngram": CONTAM_NGRAM,
-        "eval_max": EVAL_SET_MAX_DOC,
-        "split": "build < MAX/2, append rest",
-        "source": source_signature(sf_dir, "documents"),
-    }
-
-    def _build(gen: str) -> None:
-        docs = load_table(spark, sf_dir, "documents")
-        half = EVAL_SET_MAX_DOC // 2
-        ev = docs.filter(F.col("doc_id") < EVAL_SET_MAX_DOC)
-        build_contamination_index(ev.filter(F.col("doc_id") < half), gen)
-        append_contamination_grams(ev.filter(F.col("doc_id") >= half), gen)
-
-    return ensure_index(scratch_path("contamination_index", sf_dir), meta, _build)
+    },
+    rows=lambda spark, sf_dir: load_table(spark, sf_dir, "documents").filter(
+        F.col("doc_id") < EVAL_SET_MAX_DOC
+    ),
+    batch=f"doc_id >= {EVAL_SET_MAX_DOC // 2}",
+)
 
 
 def contamination_query_prebuilt(
@@ -568,10 +499,8 @@ def contamination_query_prebuilt(
     safety is free by construction: every aggregate is countDistinct
     or min, so at-least-once appended index rows cannot change any
     count (pytest-pinned with a retry storm)."""
-    from weather_database_system_spark.indexstore import slot_live
-
     if path is None:
-        path = ensure_contamination_index(spark, sf_dir)
+        path = ensure(CONTAMINATION, spark, sf_dir)
     path = slot_live(path)
     idx = spark.read.parquet(path)
     if batch is None:
@@ -603,7 +532,7 @@ def contamination_against_index_prebuilt(
     the SIXTH stored family — trigram, IVF, dedup, PQ, BM25, and now
     eval fingerprints share one lifecycle): the benchmark suite is
     fingerprinted ONCE through the real bulk-build + appended-suite
-    lifecycle (ensure_contamination_index) and the query screens the
+    lifecycle (the ``CONTAMINATION`` spec) and the query screens the
     training split against index bytes. Output identical to
     ``contamination_eval_overlap`` — same grams, same distinct/min
     aggregates — so the same DuckDB full-replay oracle proves the
@@ -611,7 +540,7 @@ def contamination_against_index_prebuilt(
     Reference parity: extension surface; cf. Brown et al. 2020 §C /
     Chowdhery et al. 2022 (PaLM) for the public n-gram collision
     method."""
-    path = ensure_contamination_index(spark, sf_dir)
+    path = ensure(CONTAMINATION, spark, sf_dir)
     return contamination_query_prebuilt(spark, sf_dir, path)
 
 
@@ -624,17 +553,10 @@ def contamination_prebuilt_snapshot(spark: SparkSession, sf_dir: str) -> DataFra
     after later suites were appended and compacted. Engine-decided
     ``snapshot_equals_live`` claim pinned TRUE by the row-preserving
     compaction; same full-replay oracle + claim."""
-    from weather_database_system_spark.indexstore import (
-        ensure_snapshot_state,
-        slot_live,
-        snapshot_equals_live_claim,
-    )
-    from weather_database_system_spark.session import scratch_path
-
-    ensure_contamination_index(spark, sf_dir)
-    slot = scratch_path("contamination_index", sf_dir)
+    ensure(CONTAMINATION, spark, sf_dir)
+    slot = scratch_path(CONTAMINATION.kind, sf_dir)
     snap = ensure_snapshot_state(
-        slot, lambda s: compact_contamination_index(spark, s)
+        slot, lambda s: compact(CONTAMINATION, spark, s)
     )
     snap_df = contamination_query_prebuilt(spark, sf_dir, snap)
     live_df = contamination_query_prebuilt(spark, sf_dir, slot_live(slot))
@@ -700,8 +622,6 @@ def vocab_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: every emitted value is an exact integer (counts and
     integer-division bucket ids) — no floats anywhere, so the DuckDB
     replay is definitionally hash-exact."""
-    from weather_database_system_spark.session import track_persisted
-
     docs = load_table(spark, sf_dir, "documents")
     bounds = docs.agg(F.min("doc_id").alias("mn"), F.max("doc_id").alias("mx"))
     d = track_persisted(
@@ -917,8 +837,6 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-bucket log-ratios floor-round to 6 decimals, per-doc sums
     accumulate n·lr6 in DECIMAL (order-independent), the weight rounds
     to 4, and the keep flag compares the ROUNDED value."""
-    from weather_database_system_spark.session import track_persisted
-
     docs = load_table(spark, sf_dir, "documents")
     toks = _tokens(F.col("text"))
     # persisted: feats feeds the distribution aggregate (twice, via tot)
@@ -1302,8 +1220,6 @@ def curriculum_pack_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     SUM OVER (ORDER BY) — global-window semantics at shuffle-parallel cost.
     The local stage is persisted so the offsets branch and the join branch
     read one materialization (also freezing partition ids)."""
-    from weather_database_system_spark.session import track_persisted
-
     docs = load_table(spark, sf_dir, "documents")
     n_part = spark.sparkContext.defaultParallelism
     scored = docs.select(
