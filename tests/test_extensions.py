@@ -4412,7 +4412,7 @@ def test_manifest_generation_contracts(tmp_path):
     append_index_marker(g4, {"batch": "b-001", "rows": 7})
     append_index_marker(g4, {"batch": "b-002"})
     assert resolve_generation(slot) == g4  # recovery keeps the appends
-    # ... but ensure_*'s currency check still reads it as stale (append
+    # ... but ensure's currency check still reads it as stale (append
     # staleness semantics unchanged vs the old marker-delete)
     assert not index_is_current(g4, {"v": 4})
     base, n_appends = read_index_marker(g4)
@@ -5479,7 +5479,7 @@ def test_ensure_snapshot_state_meta_gate_and_require(tmp_path):
 
     def compact(s: str) -> None:
         # row-preserving stand-in: new generation, marker carried from
-        # the live one (what every family's compact_* does)
+        # the live one (what the generic compact does)
         calls["n"] += 1
         from weather_database_system_spark.indexstore import resolve_generation
 

@@ -402,8 +402,8 @@ def _draw_fence(root: str) -> int:
     """Next fence number for a freshly acquired lease on ``root``:
     max(counter file, manifest's published fence) + 1 — the manifest
     half makes counter-file loss (or the seam where a directory becomes
-    a managed slot and the counter moves from the sibling path to the in-slot path)
-    recover monotonicity from the last publish."""
+    a managed slot and the counter moves from the sibling path to the
+    in-slot path) recover monotonicity from the last publish."""
     import json
 
     ff = _fence_file(root)
